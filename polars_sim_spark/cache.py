@@ -171,11 +171,13 @@ def materialize_count(df: DataFrame) -> int:
     partition, persisting the checkpoint blocks as it goes, and the
     end-of-job ``doCheckpoint`` finds none missing — one job where
     eager-checkpoint-then-probe costs two. Falls back to
-    ``Dataset.count()`` if the internal handle is unavailable."""
+    ``Dataset.count()`` only when the frame has no JVM handle; a failing
+    job raises once instead of re-running the scan."""
     try:
-        return int(df._jdf.queryExecution().toRdd().count())
-    except Exception:
+        qe = df._jdf.queryExecution()
+    except AttributeError:
         return int(df.count())
+    return int(qe.toRdd().count())
 
 
 def num_partitions(df: DataFrame) -> int:
@@ -183,11 +185,13 @@ def num_partitions(df: DataFrame) -> int:
     PySpark's pickled ``df.rdd`` wrapper (which plans a row-conversion
     per call — pure driver overhead on deep plans). ``toRdd`` is cached
     on the query execution, so after :func:`materialize_count` this is
-    free."""
+    free. Falls back to ``df.rdd`` only when the frame has no JVM
+    handle."""
     try:
-        return int(df._jdf.queryExecution().toRdd().getNumPartitions())
-    except Exception:
+        qe = df._jdf.queryExecution()
+    except AttributeError:
         return int(df.rdd.getNumPartitions())
+    return int(qe.toRdd().getNumPartitions())
 
 
 def checkpoint_handle(df: DataFrame) -> object | None:

@@ -19,15 +19,15 @@ parquet scan.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DECODE_META_SCHEMA = (
-    "doc_id long, n_bytes long, content_md5 string, width int, height int, decoder string"
-)
+#: Output columns of :func:`decode_image_meta` after the id.
+DECODE_META_SCHEMA = "n_bytes long, content_md5 string, width int, height int, decoder string"
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -65,6 +65,121 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     if cache_registry.num_partitions(df) >= target:
         return df
     return df.repartition(target, F.col(id_col))
+
+
+def _map_payloads(
+    df: DataFrame,
+    row_fn,
+    schema: str,
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """The one Arrow batch loop behind every payload reader.
+
+    ``row_fn(bytes)`` returns zero or more output tuples holding the
+    columns ``schema`` declares, in order; each is emitted after the
+    row's id as ``doc_id``, typed like the input id column. Zero tuples
+    drop the payload, several fan it out (the frame samplers), and a
+    ``NotImplementedError`` drops it too — the payload is not a
+    container this reader decodes. A batch with no output rows yields
+    nothing, so an empty or all-foreign input is an empty frame of the
+    declared schema. Columns travel as object series assigned by
+    position, so nullable ints (None) and arrays need no per-reader
+    dtype handling."""
+    id_type = dict(df.dtypes)[id_col]
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for i, b in zip(pdf[id_col], pdf[payload_col]):
+                try:
+                    out = list(row_fn(bytes(b)))
+                except NotImplementedError:
+                    continue
+                rows.extend((i, *t) for t in out)
+            if rows:
+                yield pd.DataFrame(
+                    {k: pd.Series(col, dtype=object) for k, col in enumerate(zip(*rows))}
+                )
+
+    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
+        op, f"doc_id {id_type}, {schema}"
+    )
+
+
+def _sum_peak(values):
+    """Exact per-channel sum and peak of ``|values|`` over an
+    ``(n, channels)`` integer array with n ≥ 1, as Python ints — the one
+    reduction behind every pixel and PCM statistic (int64 sums stay far
+    under 2^63 for uint8/uint16 pixels and int16/int24 samples)."""
+    import numpy as np
+
+    a = np.abs(values.astype(np.int64))
+    return [int(x) for x in a.sum(axis=0)], [int(x) for x in a.max(axis=0)]
+
+
+def attach_payload(
+    df: DataFrame, codec: str, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Synthesize the ``codec`` fixture corpus from a text column (see
+    :data:`CODECS`): each row's utf-8 text bytes go through the codec's
+    ``synth(id, data)`` rule, and rows it declines (``None`` — an id
+    outside the codec's residues or a text too short for one unit) keep
+    the raw utf-8 bytes. The input columns are kept, minus any previous
+    ``payload``. Deterministic, so the contract rows' SQL oracles
+    predict every payload byte from the text column.
+
+    Twin codecs instead emit ``(doc_id long, payload binary)`` only:
+    two payload rows with identical logical content per document (the
+    first at ``doc_id``, its other-container twin at ``doc_id +
+    AUDIO_TWIN_OFFSET``) and none for texts too short to wrap.
+
+    Both paths fan the rows out with :func:`_spread` first, because the
+    synth step is Python-heavy."""
+    spec = CODECS[codec]
+    if spec.twin:
+        texts = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+            F.col(id_col).cast("long").alias(id_col),
+            F.encode(F.coalesce(F.col(text_col), F.lit("")), "UTF-8").alias("data"),
+        )
+        pairs = _map_payloads(texts, spec.synth, "side int, payload binary", id_col, "data")
+        return pairs.select(
+            (F.col("doc_id") + F.col("side") * F.lit(AUDIO_TWIN_OFFSET)).alias("doc_id"),
+            "payload",
+        )
+    from pyspark.sql import types as T
+
+    synth = spec.synth
+    fields = [f for f in df.schema.fields if f.name != "payload"]
+    schema = T.StructType(fields + [T.StructField("payload", T.BinaryType())])
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for i, t in zip(pdf[id_col], pdf[text_col]):
+                data = ("" if t is None else str(t)).encode("utf-8")
+                p = synth(int(i), data)
+                payloads.append(data if p is None else p)
+            out = pdf[[f.name for f in fields]].copy()
+            out["payload"] = payloads
+            yield out
+
+    return _spread(df, id_col).mapInPandas(op, schema)
+
+
+def media_stats(
+    df: DataFrame, codec: str, id_col: str = "doc_id", payload_col: str = "payload"
+) -> DataFrame:
+    """Decoded statistics of the ``codec`` payloads in ``payload_col``
+    (see :data:`CODECS` for each codec's decode and output schema):
+    one ``(doc_id, …)`` row per payload the codec decodes; foreign,
+    truncated and checksum-failing payloads are dropped. Every value is
+    an exact integer, so each contract row's DuckDB oracle recomputes it
+    from the fixture text bytes."""
+    spec = CODECS[codec]
+    if spec.stats is None:
+        raise ValueError(f"codec {codec!r} has no stats reader")
+    return _map_payloads(df, spec.stats, spec.schema, id_col, payload_col)
 
 
 def _try_real_decode(data: bytes):
@@ -743,7 +858,7 @@ def synth_flac_stereo(data: bytes, sample_rate: int = 16000) -> bytes | None:
 def _flac_pcm_samples(data: bytes):
     """(sample_rate, 1-D int32 samples) of a MONO decodable FLAC stream
     — thin wrapper over :func:`_flac_decode` kept for the mono
-    consumers (``flac_pcm_stats``, the ``wav_phash`` routing); stereo
+    consumers (the ``flac_pcm`` stats reader, the ``wav_phash`` routing); stereo
     streams raise here and are served by the stereo stats path."""
     sr, ch, arr = _flac_decode(data)
     if ch != 1:
@@ -1558,73 +1673,6 @@ def _mp3_decode_frames(data: bytes):
     return sr, pcm.astype(np.int16)
 
 
-def attach_mp3_pcm_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """MP3-PCM corpus attacher (round 14): EVERY document whose text
-    holds at least one 36-byte granule becomes a profile MPEG-1
-    Layer III stream (:func:`synth_mp3_pcm` — spectral lines and gains
-    derived from the text bytes in closed form); shorter rows stay raw
-    utf-8."""
-    return _attach_payload(
-        df, {0: lambda d, w: synth_mp3_pcm(d)}, text_col, id_col, modulus=1
-    )
-
-
-def mp3_pcm_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """PCM sample statistics for profile MPEG-1 Layer III payloads
-    (round 14, VERDICT r13 "what's missing" #2 — audio's LOSSY-CODEC
-    tier, the analog of the JPEG rows): the full fixed-point decode
-    (side-info walk → table-1 Huffman → exact power-of-two requantize →
-    alias butterflies → IMDCT + sine window → overlap-add → frequency
-    inversion → matrixing → 512-tap windowed polyphase synthesis)
-    reduced to exact integer sum-of-absolute-amplitude and peak. The
-    chain is linear over exact int64, so the contract oracle replays
-    it integer-for-integer from the text bytes — a wrong Huffman walk,
-    butterfly sign, window coefficient, FIFO offset or inversion
-    parity is a hash mismatch. Non-MP3 / out-of-profile payloads are
-    dropped. Output: (id, n_samples long, sample_rate int, sum_abs
-    long, peak_abs int)."""
-    import numpy as np
-
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, srs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    sr, pcm = _mp3_decode(bytes(b))
-                except NotImplementedError:
-                    continue
-                amp = np.abs(pcm.astype(np.int64))
-                ids.append(i)
-                ns.append(len(pcm))
-                srs.append(sr)
-                sums.append(int(amp.sum()))
-                peaks.append(int(amp.max()) if len(amp) else 0)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": ns,
-                    "sample_rate": srs,
-                    "sum_abs": sums,
-                    "peak_abs": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, n_samples long, sample_rate int, "
-        "sum_abs long, peak_abs int",
-    )
-
-
 def _walk_mp4_boxes(data: bytes, start: int, end: int):
     """Yield (box_type, payload_start, payload_end) for the ISO-BMFF
     boxes in data[start:end], handling 64-bit largesize and
@@ -2099,35 +2147,14 @@ def mp4_frame_sample(
     pass — no shuffle, no driver participation; output size is input
     bytes / every_n."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, pts, frames = [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(b)
-                try:
-                    samples = _parse_mp4_samples(data)
-                except NotImplementedError:
-                    continue
-                for fi in range(0, len(samples), every_n):
-                    off, size, t = samples[fi]
-                    ids.append(i)
-                    idxs.append(fi)
-                    pts.append(t)
-                    frames.append(data[off : off + size])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "frame_idx": pd.array(idxs, dtype="int64"),
-                    "pts_ms": pd.array(pts, dtype="int64"),
-                    "frame": frames,
-                }
-            )
+    def row(data: bytes):
+        samples = _parse_mp4_samples(data)
+        for fi in range(0, len(samples), every_n):
+            off, size, t = samples[fi]
+            yield fi, t, data[off : off + size]
 
-    # propagate the input id type (same pattern as wav_pcm_stats) so a
-    # string/decimal id column round-trips instead of crashing on int()
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, frame_idx long, pts_ms long, frame binary"
+    return _map_payloads(
+        df, row, "frame_idx long, pts_ms long, frame binary", id_col, payload_col
     )
 
 
@@ -2144,107 +2171,23 @@ def decode_image_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = 
     codec installed, width/height come from the deterministic fake and
     ``decoder`` is 'stub'.
     """
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            n_bytes = payloads.map(len)
-            md5s = payloads.map(lambda b: hashlib.md5(bytes(b)).hexdigest())
-            dims_w, dims_h, decoders = [], [], []
-            for b in payloads:
-                try:
-                    w, h, dec = _try_real_decode(bytes(b))
-                except NotImplementedError:
-                    w, h = _fake_dims(len(b))
-                    dec = "stub"
-                dims_w.append(w)
-                dims_h.append(h)
-                decoders.append(dec)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_name],
-                    "n_bytes": n_bytes,
-                    "content_md5": md5s,
-                    "width": pd.array(dims_w, dtype="int32"),
-                    "height": pd.array(dims_h, dtype="int32"),
-                    "decoder": decoders,
-                }
-            )
+    def row(data: bytes):
+        try:
+            w, h, dec = _try_real_decode(data)
+        except NotImplementedError:
+            w, h = _fake_dims(len(data))
+            dec = "stub"
+        return [(len(data), hashlib.md5(data).hexdigest(), w, h, dec)]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(op, DECODE_META_SCHEMA)
+    return _map_payloads(df, row, DECODE_META_SCHEMA, id_col, payload_col)
 
 
+#: Output columns of :func:`decode_media_meta` after the id.
 MEDIA_META_SCHEMA = (
-    "doc_id long, n_bytes long, decoder string, width int, height int, "
+    "n_bytes long, decoder string, width int, height int, "
     "sample_rate int, channels int, duration_ms long"
 )
-
-
-def attach_media_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Synthesize a deterministic MIXED-media binary payload column:
-    ids ≡ 0 (mod 5) wrap the text bytes in a real WAV container
-    (synth_wav; sample rate / channels derived from the id), ids ≡ 1
-    (mod 5) in a real MP4 container (synth_mp4; dims / duration derived
-    from id and byte length), ids ≡ 2 (mod 5) in MPEG-1 Layer III
-    frames (synth_mp3; bitrate/rate/channels from the id — round 12,
-    VERDICT r11 #7), ids ≡ 3 (mod 5) in a FLAC container (synth_flac),
-    everything else (and empty-text MP3/FLAC slots) stays raw utf-8 —
-    the fixture corpus for the container-header decode path, built so a
-    closed-form SQL oracle can predict every parsed field."""
-    from pyspark.sql import types as T
-
-    id_name, text_name = id_col, text_col
-    fields = [f for f in df.schema.fields if f.name != "payload"]
-    schema = T.StructType(fields + [T.StructField("payload", T.BinaryType())])
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, t in zip(pdf[id_name], pdf[text_name]):
-                data = (t or "").encode("utf-8")
-                m = int(i) % 5
-                if m == 0:
-                    payloads.append(
-                        synth_wav(
-                            data,
-                            sample_rate=8000 + (int(i) % 4) * 4000,
-                            channels=1 + int(i) % 2,
-                        )
-                    )
-                elif m == 1:
-                    payloads.append(
-                        synth_mp4(
-                            data,
-                            width=160 + (int(i) % 8) * 16,
-                            height=120 + (int(i) % 6) * 24,
-                            duration_ms=len(data) * 40,
-                        )
-                    )
-                elif m == 2:
-                    p = synth_mp3(
-                        data,
-                        bitrate_kbps=(96, 128, 160, 192)[int(i) % 4],
-                        sample_rate=_MP3_RATES[int(i) % 3],
-                        channels=1 + int(i) % 2,
-                    )
-                    payloads.append(p if p is not None else data)
-                elif m == 3:
-                    p = synth_flac(
-                        data,
-                        sample_rate=16000 + (int(i) % 3) * 16000,
-                        channels=1 + int(i) % 2,
-                    )
-                    payloads.append(p if p is not None else data)
-                else:
-                    payloads.append(data)
-            out = pdf[[f.name for f in fields]].copy()
-            out["payload"] = payloads
-            yield out
-
-    return _spread(df, id_col).mapInPandas(op, schema)
 
 
 def decode_media_meta(
@@ -2258,57 +2201,34 @@ def decode_media_meta(
     applicable to a format are null (audio has no dims, images no
     duration); unrecognized payloads fall back to the labeled stub dims
     like :func:`decode_image_meta`."""
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": pdf[id_name],
-                "n_bytes": pdf[payload_col].map(len),
-            }
-            dec, ws, hs, srs, chs, durs = [], [], [], [], [], []
-            for b in pdf[payload_col]:
-                data = bytes(b)
-                w = h = sr = ch = dur = None
-                d = None
+    def row(data: bytes):
+        w = h = sr = ch = dur = None
+        d = None
+        try:
+            w, h, d = _try_real_decode(data)
+        except NotImplementedError:
+            for parser, name in (
+                (_try_wav_header, "wav"),
+                (_try_mp3_header, "mp3"),
+                (_try_flac_header, "flac"),
+            ):
                 try:
-                    w, h, d = _try_real_decode(data)
+                    sr, ch, dur = parser(data)
+                    d = name
+                    break
                 except NotImplementedError:
-                    for parser, name in (
-                        (_try_wav_header, "wav"),
-                        (_try_mp3_header, "mp3"),
-                        (_try_flac_header, "flac"),
-                    ):
-                        try:
-                            sr, ch, dur = parser(data)
-                            d = name
-                            break
-                        except NotImplementedError:
-                            continue
-                    if d is None:
-                        try:
-                            w, h, dur = _try_mp4_header(data)
-                            d = "mp4"
-                        except NotImplementedError:
-                            w, h = _fake_dims(len(data))
-                            d = "stub"
-                dec.append(d)
-                ws.append(w)
-                hs.append(h)
-                srs.append(sr)
-                chs.append(ch)
-                durs.append(dur)
-            rows["decoder"] = dec
-            rows["width"] = pd.array(ws, dtype="Int32")
-            rows["height"] = pd.array(hs, dtype="Int32")
-            rows["sample_rate"] = pd.array(srs, dtype="Int32")
-            rows["channels"] = pd.array(chs, dtype="Int32")
-            rows["duration_ms"] = pd.array(durs, dtype="Int64")
-            yield pd.DataFrame(rows)
+                    continue
+            if d is None:
+                try:
+                    w, h, dur = _try_mp4_header(data)
+                    d = "mp4"
+                except NotImplementedError:
+                    w, h = _fake_dims(len(data))
+                    d = "stub"
+        return [(len(data), d, w, h, sr, ch, dur)]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, MEDIA_META_SCHEMA
-    )
+    return _map_payloads(df, row, MEDIA_META_SCHEMA, id_col, payload_col)
 
 
 def resize_image(
@@ -2323,31 +2243,21 @@ def resize_image(
     binary out through mapInPandas (the real thing once a codec ships;
     the stub truncates / cycles payload bytes to exactly
     target_w*target_h bytes so output sizes are shape-correct and
-    deterministic). For uncompressed PPM payloads the REAL resize is
-    :func:`ppm_resize` (exact block-mean pooling, oracle-checked)."""
+    deterministic). Payloads with a real image header are dropped: for
+    those the REAL resize is :func:`ppm_resize` (exact block-mean
+    pooling, oracle-checked)."""
     n_out = target_w * target_h
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for b in pdf[payload_col]:
-                data = bytes(b)
-                try:
-                    _try_real_decode(data)
-                except NotImplementedError:
-                    reps = (n_out // max(len(data), 1)) + 1 if data else 0
-                    out.append((data * reps)[:n_out] if data else b"")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": pd.array([target_w] * len(out), dtype="int32"),
-                    "height": pd.array([target_h] * len(out), dtype="int32"),
-                    "resized": out,
-                }
-            )
+    def row(data: bytes):
+        try:
+            _try_real_decode(data)
+            return []
+        except NotImplementedError:
+            reps = (n_out // max(len(data), 1)) + 1
+            return [(target_w, target_h, (data * reps)[:n_out])]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, "doc_id long, width int, height int, resized binary"
+    return _map_payloads(
+        df, row, "width int, height int, resized binary", id_col, payload_col
     )
 
 
@@ -2364,21 +2274,14 @@ def extract_features(
     operators (operators/similarity.py) for media near-dup search."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[payload_col]:
-                data = np.frombuffer(bytes(b), dtype=np.uint8)
-                if data.size == 0:
-                    feats.append([0.0] * bins)
-                    continue
-                hist = np.bincount(data >> (8 - bins.bit_length() + 1), minlength=bins)[:bins]
-                feats.append((hist / data.size).astype(float).tolist())
-            yield pd.DataFrame({"doc_id": pdf[id_col], "features": feats})
+    def row(data: bytes):
+        arr = np.frombuffer(data, dtype=np.uint8)
+        if arr.size == 0:
+            return [([0.0] * bins,)]
+        hist = np.bincount(arr >> (8 - bins.bit_length() + 1), minlength=bins)[:bins]
+        return [((hist / arr.size).astype(float).tolist(),)]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, "doc_id long, features array<double>"
-    )
+    return _map_payloads(df, row, "features array<double>", id_col, payload_col)
 
 
 def frame_sample(
@@ -2395,410 +2298,11 @@ def frame_sample(
     resolves true per-frame byte ranges and timestamps from the
     container's sample tables (oracle-checked)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for _, row in pdf.iterrows():
-                data = bytes(row[payload_col])
-                for i, off in enumerate(range(0, len(data), every_n_bytes)):
-                    ids.append(row[id_col])
-                    idxs.append(i)
-                    frames.append(data[off : off + every_n_bytes])
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": pd.array(idxs, dtype="int32"), "frame": frames})
+    def row(data: bytes):
+        for i, off in enumerate(range(0, len(data), every_n_bytes)):
+            yield i, data[off : off + every_n_bytes]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, "doc_id long, frame_idx int, frame binary"
-    )
-
-
-def wav_pcm_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel PCM sample statistics for WAV payloads: frame count,
-    exact sum of absolute amplitudes and peak amplitude per channel —
-    the actionable slice of "real decode" that needs NO codec: 16-bit
-    little-endian PCM in the ``data`` chunk :func:`_wav_chunks` locates
-    is just bytes, read with one zero-copy ``np.frombuffer`` view per
-    payload inside the Arrow batch. Non-WAV payloads are dropped (the
-    stats are audio-only by construction). All outputs are exact
-    integers — sums as int64 (max |int16| · frames stays far under
-    2^63) — so the contract row's closed-form DuckDB oracle reproduces
-    every value from the fixture bytes with no float in the chain.
-    Output: (id, n_frames, sum_abs array<long>, peak_abs array<int>),
-    arrays indexed by channel; empty data chunks yield empty arrays."""
-    import numpy as np
-
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, sums, peaks = [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                data = bytes(b)
-                try:
-                    _sr, ch, _br, off, dlen, fmt_tag, bits = _wav_chunks(data)
-                except NotImplementedError:
-                    continue
-                # integer PCM at 16 or 8 bit only (round 14 widened the
-                # 16-bit gate): a zero channel count would divide by
-                # zero below, and float (fmt 3) payloads would be
-                # silently mis-read — drop, per the documented
-                # "non-WAV payloads are dropped" contract (r12 ADVICE).
-                # 8-bit WAV PCM is UNSIGNED with the zero line at 128
-                # (the spec's legacy depth), so amplitude = |v - 128|.
-                if ch < 1 or fmt_tag != 1 or bits not in (8, 16):
-                    continue
-                dlen = min(dlen, len(data) - off)  # tolerate truncated files
-                n = dlen // ((bits // 8) * ch)
-                if n:
-                    if bits == 16:
-                        pcm = np.frombuffer(
-                            data, dtype="<i2", offset=off, count=n * ch
-                        ).astype(np.int64)
-                    else:
-                        pcm = (
-                            np.frombuffer(
-                                data, dtype=np.uint8, offset=off, count=n * ch
-                            ).astype(np.int64)
-                            - 128
-                        )
-                    amp = np.abs(pcm).reshape(n, ch)
-                    sums.append([int(x) for x in amp.sum(axis=0)])
-                    peaks.append([int(x) for x in amp.max(axis=0)])
-                else:
-                    sums.append([])
-                    peaks.append([])
-                ids.append(i)
-                nfs.append(n)
-            if not ids:
-                continue  # empty pandas frames infer float64 — Arrow rejects
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_frames": nfs, "sum_abs": sums, "peak_abs": peaks}
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, n_frames long, sum_abs array<long>, peak_abs array<int>"
-    )
-
-
-def attach_flac_pcm_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """FLAC-PCM corpus attacher (round 13, VERDICT r12 #6): EVERY
-    document whose text holds at least one 16-bit sample becomes a
-    real-frame FLAC stream (:func:`synth_flac_pcm` — the text bytes ARE
-    the mono int16 LE samples, losslessly Rice-coded); shorter rows
-    stay raw utf-8."""
-    return _attach_payload(
-        df, {0: lambda d, w: synth_flac_pcm(d)}, text_col, id_col, modulus=1
-    )
-
-
-def attach_flac24_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """24-bit FLAC corpus attacher (round 14, VERDICT r13 #8 — the
-    archival/mastering depth): EVERY document whose text holds at
-    least one 3-byte sample becomes a real-frame FLAC stream
-    (:func:`synth_flac_pcm` at ``bits=24`` — the text bytes ARE the
-    mono 24-bit LE two's-complement samples); shorter rows stay raw
-    utf-8."""
-    return _attach_payload(
-        df,
-        {0: lambda d, w: synth_flac_pcm(d, bits=24)},
-        text_col,
-        id_col,
-        modulus=1,
-    )
-
-
-def attach_wav8_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """8-bit WAV corpus attacher (round 14, VERDICT r13 #8 — the
-    legacy unsigned-PCM depth): EVERY document with ≥1 byte of text
-    becomes an 8-bit PCM WAV whose data bytes ARE the text bytes
-    (unsigned, zero line at 128), channels = 1 + doc_id % 2. The
-    shared attacher passes width = 4 + id % 8, so channels derives as
-    ``1 + width % 2`` ≡ 1 + id % 2 — the rule the oracle replays."""
-    return _attach_payload(
-        df,
-        {0: lambda d, w: synth_wav(d, 16000, 1 + w % 2, bits=8)},
-        text_col,
-        id_col,
-        modulus=1,
-    )
-
-
-def attach_flac_stereo_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Stereo-FLAC corpus attacher (round 13): EVERY document whose
-    text holds at least one stereo frame (4 bytes) becomes a real
-    stereo FLAC stream (:func:`synth_flac_stereo` — the text bytes are
-    interleaved L/R int16 samples, frames cycling all four channel
-    assignments); shorter rows stay raw utf-8."""
-    return _attach_payload(
-        df, {0: lambda d, w: synth_flac_stereo(d)}, text_col, id_col, modulus=1
-    )
-
-
-def flac_stereo_pcm_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel PCM statistics for STEREO FLAC payloads — the
-    decorrelated-stereo twin of :func:`wav_pcm_stats` (round 13): the
-    full decode chain including the left/side, right/side and mid/side
-    inverse transforms reduced to exact per-channel
-    sum-of-absolute-amplitude and peak. Lossless, so the contract
-    oracle reads L/R straight off the even/odd int16 samples of the
-    fixture text — a wrong side-channel bit depth, parity restore, or
-    swapped decorrelation is a hash mismatch. Non-stereo-FLAC payloads
-    are dropped. Output: (id, n_frames long, sum_abs_ch1 long,
-    sum_abs_ch2 long, peak_abs_ch1 int, peak_abs_ch2 int)."""
-    import numpy as np
-
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, s1, s2, p1, p2 = [], [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    _sr, ch, pcm = _flac_decode(bytes(b))
-                except NotImplementedError:
-                    continue
-                if ch != 2 or len(pcm) < 1:
-                    continue
-                amp = np.abs(pcm.astype(np.int64))
-                ids.append(i)
-                nfs.append(len(pcm))
-                s1.append(int(amp[:, 0].sum()))
-                s2.append(int(amp[:, 1].sum()))
-                p1.append(int(amp[:, 0].max()))
-                p2.append(int(amp[:, 1].max()))
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_frames": nfs,
-                    "sum_abs_ch1": s1,
-                    "sum_abs_ch2": s2,
-                    "peak_abs_ch1": p1,
-                    "peak_abs_ch2": p2,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, n_frames long, sum_abs_ch1 long, "
-        "sum_abs_ch2 long, peak_abs_ch1 int, peak_abs_ch2 int",
-    )
-
-
-#: id offset separating the WAV and FLAC copies in the twin corpus —
-#: far above any testdata doc_id, so the pair (i, i + offset) is
-#: unambiguous.
-AUDIO_TWIN_OFFSET = 1_000_000
-
-
-def attach_audio_twin_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """TWIN cross-container audio corpus (round 14, re-grounding the
-    `dedup_audio_multiformat` row after the ×100 geometry probe):
-    every document with ≥1 int16 sample of text emits TWO payload rows
-    with IDENTICAL logical samples — a mono 16-bit WAV at ``doc_id``
-    and a real-frame FLAC at ``doc_id + AUDIO_TWIN_OFFSET``. The
-    container-invariant envelope hash must therefore pair each doc
-    with its own cross-container twin at Hamming 0; any container bias
-    in either decode path breaks the twin pair and the row's hash.
-    Texts shorter than one sample emit nothing."""
-    id_name, text_name = id_col, text_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, t in zip(pdf[id_name], pdf[text_name]):
-                data = ("" if t is None else str(t)).encode("utf-8")
-                if len(data) < 2:
-                    continue
-                flac = synth_flac_pcm(data)
-                if flac is None:
-                    continue
-                ids.append(int(i))
-                payloads.append(synth_wav(data, 16000, 1))
-                ids.append(int(i) + AUDIO_TWIN_OFFSET)
-                payloads.append(flac)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {"doc_id": pd.array(ids, dtype="int64"), "payload": payloads}
-            )
-
-    return _spread(df.select(F.col(id_name), F.col(text_name)), id_name).mapInPandas(
-        op, "doc_id long, payload binary"
-    )
-
-
-def attach_audio_mp3_twin_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """MP3 twin corpus (round 14 — the third container joins the
-    cross-container dedup family): every document with ≥1 full granule
-    of text emits TWO payload rows with IDENTICAL logical samples — the
-    profile MP3 stream at ``doc_id``, and a mono 16-bit WAV carrying
-    that stream's DECODED PCM at ``doc_id + AUDIO_TWIN_OFFSET``. MP3 is
-    lossy, so unlike the WAV/FLAC twins the shared samples are the
-    decode's OUTPUT — which is exactly what makes the pairing a proof:
-    the WAV side hashes raw samples, the MP3 side must reproduce the
-    identical samples through the whole fixed-point synthesis chain to
-    land in the same envelope buckets. Texts below one granule emit
-    nothing."""
-    id_name, text_name = id_col, text_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, t in zip(pdf[id_name], pdf[text_name]):
-                data = ("" if t is None else str(t)).encode("utf-8")
-                mp3 = synth_mp3_pcm(data)
-                if mp3 is None:
-                    continue
-                _sr, pcm = _mp3_decode(mp3)
-                ids.append(int(i))
-                payloads.append(mp3)
-                ids.append(int(i) + AUDIO_TWIN_OFFSET)
-                payloads.append(
-                    synth_wav(pcm.astype("<i2").tobytes(), 32000, 1)
-                )
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {"doc_id": pd.array(ids, dtype="int64"), "payload": payloads}
-            )
-
-    return _spread(df.select(F.col(id_name), F.col(text_name)), id_name).mapInPandas(
-        op, "doc_id long, payload binary"
-    )
-
-
-def attach_video_pixel_twin_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Video twin corpus (round 14 — the decoded-pixel video tier's
-    proof fixture, the video analogue of
-    :func:`attach_audio_mp3_twin_payload`): every document with ≥1
-    full 8×8 frame of text emits TWO payload rows whose sampled frames
-    decode to IDENTICAL pixels —
-
-    * at ``doc_id``: an MJPEG **AVI** (:func:`synth_avi_mjpeg`) whose
-      ``00dc`` chunks are standalone baseline JPEGs, one per 64-byte
-      text block (:func:`synth_jpeg`);
-    * at ``doc_id + AUDIO_TWIN_OFFSET``: an **MP4** whose samples are
-      the raw 8-bit grayscale OUTPUT of decoding those JPEGs
-      (``codec=b"raw "``, explicit 64-byte sample sizes).
-
-    JPEG is lossy, so the shared pixels are the decode's output — the
-    MJPEG side only lands in the raw side's hash buckets if the AVI
-    walk, the per-frame JPEG decode AND the BMFF sample walk are all
-    exact. Texts below one frame emit nothing."""
-    id_name, text_name = id_col, text_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for i, t in zip(pdf[id_name], pdf[text_name]):
-                data = ("" if t is None else str(t)).encode("utf-8")
-                nb = len(data) // 64
-                if nb < 1:
-                    continue
-                jpegs = [
-                    synth_jpeg(data[k * 64 : (k + 1) * 64]) for k in range(nb)
-                ]
-                decoded = b"".join(
-                    _jpeg_gray_pixels(j).tobytes() for j in jpegs
-                )
-                ids.append(int(i))
-                payloads.append(synth_avi_mjpeg(jpegs, 8, 8))
-                ids.append(int(i) + AUDIO_TWIN_OFFSET)
-                payloads.append(
-                    synth_mp4(
-                        decoded,
-                        8,
-                        8,
-                        nb * FRAME_DUR_MS,
-                        frame_sizes=[64] * nb,
-                        codec=b"raw ",
-                    )
-                )
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {"doc_id": pd.array(ids, dtype="int64"), "payload": payloads}
-            )
-
-    return _spread(df.select(F.col(id_name), F.col(text_name)), id_name).mapInPandas(
-        op, "doc_id long, payload binary"
-    )
-
-
-def flac_pcm_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """PCM sample statistics for mono 16-bit FLAC payloads — the
-    COMPRESSED twin of :func:`wav_pcm_stats` (round 13, VERDICT r12
-    #6): the full codec-free decode chain (metadata walk → frame
-    header + CRC-8 → constant/verbatim/fixed-Rice subframe decode →
-    fixed-predictor reconstruction → CRC-16) reduced to exact integer
-    sum-of-absolute-amplitude and peak. Because FLAC is lossless the
-    contract oracle reads every sample straight off the fixture text
-    bytes, so a wrong Rice parameter, predictor coefficient, zigzag
-    sign or partition count is a hash mismatch. LPC subframes (orders
-    1–32) decode exactly via the stream's quantized coefficients —
-    the mono fixture itself emits an LPC subframe every fifth frame.
-    Non-FLAC, truncated, and checksum-failing payloads are dropped.
-    Output: (id, n_samples long, sample_rate int, sum_abs long,
-    peak_abs int)."""
-    import numpy as np
-
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, srs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    sr, pcm = _flac_pcm_samples(bytes(b))
-                except NotImplementedError:
-                    continue
-                amp = np.abs(pcm.astype(np.int64))
-                ids.append(i)
-                ns.append(len(pcm))
-                srs.append(sr)
-                sums.append(int(amp.sum()) if len(pcm) else 0)
-                peaks.append(int(amp.max()) if len(pcm) else 0)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": ns,
-                    "sample_rate": srs,
-                    "sum_abs": sums,
-                    "peak_abs": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, n_samples long, sample_rate int, "
-        "sum_abs long, peak_abs int",
-    )
+    return _map_payloads(df, row, "frame_idx int, frame binary", id_col, payload_col)
 
 
 def synth_ppm(data: bytes, width: int) -> bytes | None:
@@ -2882,47 +2386,25 @@ def ppm_resize(
     f = int(factor)
     if f < 1:
         raise ValueError("ppm_resize: factor must be >= 1")
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sws, shs, ows, ohs, outs = [], [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                data = bytes(b)
-                try:
-                    px = _any_logical_pixels(data)
-                except NotImplementedError:
-                    continue
-                h, w, _ = px.shape
-                ow, oh = w // f, h // f
-                if ow < 1 or oh < 1:
-                    continue
-                img = px[: oh * f, : ow * f]
-                pooled = (
-                    img.reshape(oh, f, ow, f, 3).astype(np.int64).sum(axis=(1, 3))
-                    // (f * f)
-                ).astype(np.uint8)
-                ids.append(i)
-                sws.append(w)
-                shs.append(h)
-                ows.append(ow)
-                ohs.append(oh)
-                outs.append(pooled.tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype=object),
-                    "src_w": pd.array(sws, dtype="int32"),
-                    "src_h": pd.array(shs, dtype="int32"),
-                    "out_w": pd.array(ows, dtype="int32"),
-                    "out_h": pd.array(ohs, dtype="int32"),
-                    "resized": outs,
-                }
-            )
+    def row(data: bytes):
+        px = _any_logical_pixels(data)
+        h, w, _ = px.shape
+        ow, oh = w // f, h // f
+        if ow < 1 or oh < 1:
+            return []
+        img = px[: oh * f, : ow * f]
+        pooled = (
+            img.reshape(oh, f, ow, f, 3).astype(np.int64).sum(axis=(1, 3)) // (f * f)
+        ).astype(np.uint8)
+        return [(w, h, ow, oh, pooled.tobytes())]
 
-    # propagate the input id type (same pattern as wav_pcm_stats)
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, src_w int, src_h int, out_w int, out_h int, resized binary"
+    return _map_payloads(
+        df,
+        row,
+        "src_w int, src_h int, out_w int, out_h int, resized binary",
+        id_col,
+        payload_col,
     )
 
 
@@ -2938,17 +2420,23 @@ def _require_bands(n_bands: int) -> int:
     return 64 // n_bands
 
 
-def _pack_bands(bits, n_bands: int, bpb: int):
+def _pack_bands(bits, n_bands: int, bpb: int) -> tuple:
     """Split a 64-element 0/1 array into ``n_bands`` little-endian band
-    ints plus the assembled 16-hex digest — the one band-packing
-    arithmetic every perceptual hasher (image/audio/video) shares."""
+    ints followed by the assembled 16-hex digest — the one
+    band-packing arithmetic every perceptual hasher (image/audio/video)
+    shares, in the column order of :func:`_band_schema`."""
     import numpy as np
 
     vals = [
         int((bits[bpb * j : bpb * (j + 1)] << np.arange(bpb)).sum())
         for j in range(n_bands)
     ]
-    return vals, format(sum(v << (bpb * j) for j, v in enumerate(vals)), "016X")
+    return (*vals, format(sum(v << (bpb * j) for j, v in enumerate(vals)), "016X"))
+
+
+def _band_schema(n_bands: int) -> str:
+    """Output columns of the perceptual hashers after the id."""
+    return "".join(f"band{j} int, " for j in range(n_bands)) + "phash_hex string"
 
 
 def ppm_phash(
@@ -2994,83 +2482,22 @@ def ppm_phash(
 
     bpb = _require_bands(n_bands)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bands, hexes = [], [[] for _ in range(n_bands)], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(b)
-                # cross-format: the hash is defined on LOGICAL pixels,
-                # so a BMP, GIF or PNG with the same image hashes
-                # identically to its PPM twin (tests/test_phash.py pins
-                # this) — one shared decode chain for all containers.
-                try:
-                    px = _any_logical_pixels(data)
-                except NotImplementedError:
-                    continue
-                h, w, _ = px.shape
-                if w < 1 or h < 1:
-                    continue
-                ys = (np.arange(8) * h) // 8
-                xs = (np.arange(9) * w) // 9
-                gray = px[ys][:, xs].astype(np.int64).sum(axis=2) // 3  # 8 rows × 9 cols
-                bits = (gray[:, :8] < gray[:, 1:]).astype(np.int64).ravel()
-                vals, hx = _pack_bands(bits, n_bands, bpb)
-                ids.append(i)
-                for j in range(n_bands):
-                    bands[j].append(vals[j])
-                hexes.append(hx)
-            cols = {"doc_id": pd.Series(ids, dtype=object)}
-            for j in range(n_bands):
-                cols[f"band{j}"] = pd.array(bands[j], dtype="int32")
-            cols["phash_hex"] = pd.Series(hexes, dtype=object)
-            yield pd.DataFrame(cols)
+    def row(data: bytes):
+        # cross-format: the hash is defined on LOGICAL pixels, so a BMP,
+        # GIF or PNG with the same image hashes identically to its PPM
+        # twin (tests/test_phash.py pins this) — one shared decode chain
+        # for all containers.
+        px = _any_logical_pixels(data)
+        h, w, _ = px.shape
+        if w < 1 or h < 1:
+            return []
+        ys = (np.arange(8) * h) // 8
+        xs = (np.arange(9) * w) // 9
+        gray = px[ys][:, xs].astype(np.int64).sum(axis=2) // 3  # 8 rows × 9 cols
+        bits = (gray[:, :8] < gray[:, 1:]).astype(np.int64).ravel()
+        return [_pack_bands(bits, n_bands, bpb)]
 
-    id_type = dict(df.dtypes)[id_col]
-    band_schema = ", ".join(f"band{j} int" for j in range(n_bands))
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, {band_schema}, phash_hex string"
-    )
-
-
-def _attach_payload(
-    df: DataFrame, synths: dict, text_col: str, id_col: str, modulus: int = 3
-) -> DataFrame:
-    """Shared image-fixture attacher: for ids whose ``id % modulus``
-    has an entry in ``synths``, wrap the utf-8 text bytes in that
-    container (width = 4 + id % 8); rows whose text is too short for
-    one pixel row (synth returns None) and non-matching ids stay raw
-    utf-8. Deterministic, so closed-form SQL oracles predict every
-    pixel byte from the text column."""
-    id_name, text_name = id_col, text_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, t in zip(pdf[id_name], pdf[text_name]):
-                data = ("" if t is None else str(t)).encode("utf-8")
-                synth = synths.get(int(i) % modulus)
-                p = synth(data, 4 + int(i) % 8) if synth else None
-                payloads.append(p if p is not None else data)
-            out = pdf.copy()
-            out["payload"] = payloads
-            yield out
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        df.schema.fields + [T.StructField("payload", T.BinaryType())]
-    )
-    return _spread(df, id_col).mapInPandas(op, schema)
-
-
-def attach_image_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Synthesize the image-fixture corpus: ids ≡ 0 (mod 3) whose text
-    holds at least one full pixel row become real binary PPMs
-    (:func:`synth_ppm`, width = 4 + id % 8); everything else stays raw
-    utf-8."""
-    return _attach_payload(df, {0: synth_ppm}, text_col, id_col)
+    return _map_payloads(df, row, _band_schema(n_bands), id_col, payload_col)
 
 
 def synth_bmp(data: bytes, width: int) -> bytes | None:
@@ -3211,49 +2638,6 @@ def synth_bmp8(data: bytes, width: int) -> bytes | None:
     return header + bytes(table) + body
 
 
-def attach_bmp8_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Paletted-BMP corpus attacher: EVERY document whose text holds at
-    least one full index row becomes a real 8-bit paletted BMP
-    (:func:`synth_bmp8`, width = 4 + id % 8 over 1-byte pixels);
-    shorter rows stay raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: synth_bmp8, 1: synth_bmp8, 2: synth_bmp8},
-        text_col,
-        id_col,
-    )
-
-
-def bmp8_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for 8-bit PALETTED BMP payloads
-    (round 14): color-table lookup + bottom-up/stride inversion through
-    the shared :func:`_bmp_logical_pixels` chain. 24-bit and non-BMP
-    payloads are dropped. Output: the pixel-stats family schema."""
-    import numpy as np
-
-    def decode(data: bytes):
-        if _parse_bmp(data)[5] != 8:
-            raise NotImplementedError("not a paletted BMP")
-        return _bmp_logical_pixels(data)
-
-    return _pixel_stats(df, decode, id_col, payload_col)
-
-
-def attach_bmp_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """BMP twin of :func:`attach_image_payload`: ids ≡ 1 (mod 3) whose
-    text holds at least one full pixel row become real 24-bit BMPs
-    (:func:`synth_bmp`, width = 4 + id % 8, same logical pixels as the
-    PPM fixture rule); everything else stays raw utf-8 — disjoint from
-    the PPM fixture ids (≡ 0 mod 3), so both image corpora coexist."""
-    return _attach_payload(df, {1: synth_bmp}, text_col, id_col)
-
-
 def _ppm_logical_pixels(data: bytes):
     """(h, w, 3) RGB uint8 array of a binary PPM (P6) — or, round 14,
     PGM (P5) — payload's pixels; grayscale replicates to RGB like every
@@ -3292,63 +2676,6 @@ def _any_logical_pixels(data: bytes):
         except NotImplementedError:
             continue
     raise NotImplementedError("no codec-free container recognized")
-
-
-def _pixel_stats(df: DataFrame, decode, id_col: str, payload_col: str) -> DataFrame:
-    """Shared per-channel pixel-statistics body for the codec-free
-    formats: ``decode(bytes) -> (h, w, 3) RGB uint8`` (raising
-    NotImplementedError to drop non-decodable payloads). Exact integers
-    only — channel sums as int64, peaks as uint8-range ints — so every
-    format's contract oracle recomputes each value from the fixture
-    text bytes. Output: (id, width, height, sum_rgb array<long>,
-    peak_rgb array<int>)."""
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    rgb = decode(bytes(b))
-                except NotImplementedError:
-                    continue
-                h, w, _ = rgb.shape
-                flat = rgb.reshape(h * w, 3).astype("int64")
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                sums.append([int(x) for x in flat.sum(axis=0)])
-                peaks.append([int(x) for x in flat.max(axis=0)])
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "sum_rgb": sums,
-                    "peak_rgb": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, width int, height int, sum_rgb array<long>, peak_rgb array<int>",
-    )
-
-
-def bmp_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for 24-bit BMP payloads — the BMP
-    twin of :func:`ppm_pixel_stats` (same output schema: id, width,
-    height, sum_rgb array<long>, peak_rgb array<int>), decoding the
-    real DIB layout: pixel-offset pointer, bottom-up row order, BGR
-    interleave, 4-byte row stride. Exact integers only, so the contract
-    oracle recomputes every value from the fixture text bytes — a wrong
-    flip, swap or stride is a hash mismatch, not a fuzzy diff."""
-    return _pixel_stats(df, _bmp_logical_pixels, id_col, payload_col)
 
 
 def _packbits_encode(row: bytes) -> bytes:
@@ -3601,74 +2928,6 @@ def _tiff_logical_pixels(data: bytes):
     if spp == 1:
         px = np.repeat(px, 3, axis=2)
     return px
-
-
-def attach_tiff_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Synthesize the TIFF fixture corpus: every document whose text
-    holds at least one full pixel row becomes a real baseline TIFF
-    (width = 4 + id % 8) exercising the container's whole variation
-    surface by id — byte order ``MM`` on odd ids, PackBits compression
-    on ids ≡ 0 (mod 3), a two-strip cut on ids ≡ 0 (mod 5) — while the
-    LOGICAL pixels stay the closed-form PPM rule, so one oracle covers
-    every variant. Too-short texts stay raw utf-8 (dropped by the
-    decoder)."""
-    id_name, text_name = id_col, text_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, t in zip(pdf[id_name], pdf[text_name]):
-                data = ("" if t is None else str(t)).encode("utf-8")
-                i = int(i)
-                w = 4 + i % 8
-                h = (len(data) // 3) // w
-                p = synth_tiff(
-                    data,
-                    w,
-                    big_endian=bool(i % 2),
-                    packbits=i % 3 == 0,
-                    rows_per_strip=(h + 1) // 2 if (i % 5 == 0 and h > 1) else None,
-                )
-                payloads.append(p if p is not None else data)
-            out = pdf.copy()
-            out["payload"] = payloads
-            yield out
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        df.schema.fields + [T.StructField("payload", T.BinaryType())]
-    )
-    return _spread(df, id_col).mapInPandas(op, schema)
-
-
-def tiff_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for baseline TIFF payloads — the
-    TIFF member of the :func:`ppm_pixel_stats` family (same output
-    schema), decoding the real structure: endian-aware IFD walk, strip
-    assembly, optional PackBits. Exact integers only, so the contract
-    oracle recomputes every value from the fixture text bytes — a
-    wrong byte order, strip boundary or run length is a hash
-    mismatch."""
-    return _pixel_stats(df, _tiff_logical_pixels, id_col, payload_col)
-
-
-def ppm_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for binary-PPM payloads — REAL image
-    decode with no codec library, because P6 pixels are raw interleaved
-    RGB uint8: one zero-copy ``np.frombuffer`` view + a (h·w, 3)
-    reshape per payload inside the Arrow batch. Non-PPM payloads are
-    dropped. Exact integers only (channel sums as int64, peaks as
-    uint8-range ints), so the contract row's DuckDB oracle recomputes
-    every value from the fixture text bytes. Output:
-    (id, width, height, sum_rgb array<long>, peak_rgb array<int>)."""
-    return _pixel_stats(df, _ppm_logical_pixels, id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3998,73 +3257,6 @@ def _gif_logical_pixels(data: bytes):
     if not covered.all():
         raise NotImplementedError("GIF sub-images do not cover the canvas")
     return canvas
-
-
-def attach_gif_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """GIF twin of :func:`attach_image_payload`: ids ≡ 2 (mod 3) whose
-    text holds at least one full pixel row become real GIF89a files
-    (:func:`synth_gif`, width = 4 + id % 8, same logical pixels as the
-    PPM/BMP fixture rule); everything else stays raw utf-8 — disjoint
-    from the PPM (≡ 0) and BMP (≡ 1) fixture ids, so all three image
-    corpora coexist on one documents table."""
-    return _attach_payload(df, {2: synth_gif}, text_col, id_col)
-
-
-def gif_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for GIF payloads — the COMPRESSED
-    twin of :func:`ppm_pixel_stats`/:func:`bmp_pixel_stats` (same output
-    schema), running the full inflate: sub-block reassembly → GIF-LZW
-    decode → palette lookup → strip composition. Exact integers only,
-    so the contract oracle recomputes every value from the fixture text
-    bytes — a wrong code-width bump, palette index or strip offset is a
-    hash mismatch, not a fuzzy diff. Non-GIF payloads are dropped."""
-    return _pixel_stats(df, _gif_logical_pixels, id_col, payload_col)
-
-
-def attach_multiformat_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The mixed-format image corpus (round 11; PNG added round 12):
-    EVERY document whose text holds at least one full pixel row becomes
-    a real image file — ids ≡ 0 (mod 4) as binary PPM, ≡ 1 as 24-bit
-    BMP, ≡ 2 as GIF89a, ≡ 3 as 8-bit truecolor PNG (width = 4 + id % 8,
-    identical logical-pixel rule across all four formats). This is the
-    corpus shape a real multimodal pipeline dedups: the same picture
-    arrives through different ingestion paths in different containers,
-    and near-dup detection must see through the container — including
-    through two different compression schemes (GIF-LZW and
-    zlib/DEFLATE), both inflated by this module's own decoders. Round
-    14 folds the INTERLACED storage layouts in on the upper id
-    residues: ids ≡ 6 (mod 8) store their GIF interlaced (4-pass row
-    order) and ids ≡ 7 (mod 8) their PNG as Adam7 — same logical
-    pixels, permuted storage, so the contract oracle (hashes are
-    functions of LOGICAL pixels = text bytes + the width rule) is
-    provably unchanged while the decode surface widens. Round 14 also
-    replaces the residue-4/5 PPM/BMP repeats with the two TIFF
-    variants (≡ 4: little-endian uncompressed, ≡ 5: big-endian
-    PackBits) — six containers, three compression schemes, one
-    invariant hash, pair set again provably unchanged. Rows whose
-    text is too short stay raw utf-8."""
-    return _attach_payload(
-        df,
-        {
-            0: synth_ppm,
-            1: synth_bmp,
-            2: synth_gif,
-            3: synth_png,
-            4: synth_tiff,
-            5: lambda d, w: synth_tiff(d, w, big_endian=True, packbits=True),
-            6: lambda d, w: synth_gif(d, w, interlace=True),
-            7: synth_png_adam7,
-        },
-        text_col,
-        id_col,
-        modulus=8,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -4525,21 +3717,6 @@ def synth_png_adam7(data: bytes, width: int) -> bytes | None:
     )
 
 
-def attach_png_adam7_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Adam7-PNG corpus attacher: EVERY document whose text holds at
-    least one full pixel row becomes a real interlaced truecolor PNG
-    (:func:`synth_png_adam7`, width = 4 + id % 8 — the shared
-    logical-pixel rule); shorter rows stay raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: synth_png_adam7, 1: synth_png_adam7, 2: synth_png_adam7},
-        text_col,
-        id_col,
-    )
-
-
 def _png_logical_pixels(data: bytes):
     """(h, w, 3) RGB uint8 array of an 8-bit truecolor OR
     palette-indexed PNG's LOGICAL image — the contract the PPM-twin
@@ -4552,14 +3729,14 @@ def _png_logical_pixels(data: bytes):
     color type reaches the container-invariant dHash/resize chain
     (web PNGs are commonly RGBA; dropping them was a container-
     dependent hole). 16-bit stays out (no 8-bit logical contract;
-    served by :func:`png16_stats`)."""
+    served by the ``png16`` codec's stats)."""
     import numpy as np
 
     h, w, color, arr = _png_decode(data)
     if arr.dtype != np.uint8:
         raise NotImplementedError(
             "16-bit PNG has no 8-bit logical-pixel contract; "
-            "served by png16_stats"
+            "served by the png16 codec's stats"
         )
     if color == 2:
         return arr
@@ -5130,68 +4307,6 @@ def _jpeg_cmyk_pixels(data: bytes):
     return np.stack(planes, axis=2)
 
 
-def attach_jpeg_cmyk_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """CMYK-JPEG corpus attacher: EVERY document whose text holds at
-    least one full 8×8 four-channel block (256 bytes) becomes a real
-    4-component baseline JPEG (:func:`synth_jpeg_cmyk`); shorter rows
-    stay raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: lambda d, w: synth_jpeg_cmyk(d)},
-        text_col,
-        id_col,
-        modulus=1,
-    )
-
-
-def jpeg_cmyk_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-payload decoded statistics for baseline CMYK JPEGs: width,
-    height, exact per-ink sums and peaks of the reconstructed values
-    after interleaved-MCU entropy decode ×4, dequantize, fixed-point
-    IDCT (no color transform — the transform-0 profile). Non-CMYK
-    payloads are dropped. Output: (id, width, height, sum_cmyk
-    array<long>, peak_cmyk array<int>)."""
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    px = _jpeg_cmyk_pixels(bytes(b))
-                except NotImplementedError:
-                    continue
-                h, w, _ = px.shape
-                flat = px.reshape(h * w, 4).astype("int64")
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                sums.append([int(x) for x in flat.sum(axis=0)])
-                peaks.append([int(x) for x in flat.max(axis=0)])
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "sum_cmyk": sums,
-                    "peak_cmyk": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, width int, height int, "
-        "sum_cmyk array<long>, peak_cmyk array<int>",
-    )
-
-
 def synth_jpeg_restart(data: bytes, interval: int = 4) -> bytes | None:
     """Deterministic baseline grayscale JPEG WITH RESTART INTERVALS
     (round 13 — the resilience structure every camera JPEG ships): same
@@ -5227,23 +4342,6 @@ def synth_jpeg_restart(data: bytes, interval: int = 4) -> bytes | None:
     head, sos = _jpeg_segments(nb * 8, 8, 1)
     dri = bytes([0xFF, 0xDD]) + struct.pack(">HH", 4, interval)
     return b"\xff\xd8" + head + dri + sos + bytes(scan) + b"\xff\xd9"
-
-
-def attach_jpeg_restart_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Restart-interval JPEG corpus attacher: EVERY document whose text
-    holds ≥ 64 bytes becomes a baseline grayscale JPEG with DRI =
-    2 + id % 8 MCUs (:func:`synth_jpeg_restart`) — the interval varies
-    per document so marker-cycle wraparound (> 8 restarts) is exercised
-    by any text over ~2 KB; shorter rows stay raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: lambda d, w: synth_jpeg_restart(d, 2 + (w - 4))},
-        text_col,
-        id_col,
-        modulus=1,
-    )
 
 
 #: Progressive AC Huffman spec for the fixture: the Annex-K baseline
@@ -5426,21 +4524,6 @@ def synth_jpeg_422(data: bytes) -> bytes | None:
     return b"\xff\xd8" + head + sos + w.close() + b"\xff\xd9"
 
 
-def attach_jpeg422_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """4:2:2 JPEG corpus attacher: same cycling rule as the 4:2:0 one
-    (pixel byte j = text[j % dlen]) over whole 16×8 MCUs (384 bytes)."""
-
-    def synth(d: bytes, w: int):
-        if not d:
-            return None
-        need = max(1, len(d) // 384) * 384
-        return synth_jpeg_422((d * ((need + len(d) - 1) // len(d)))[:need])
-
-    return _attach_payload(df, {0: synth}, text_col, id_col, modulus=1)
-
-
 def synth_jpeg_420_progressive(data: bytes) -> bytes | None:
     """PROGRESSIVE 4:2:0 color JPEG (round 13): the quantized
     coefficients of :func:`synth_jpeg_420` delivered progressively —
@@ -5603,21 +4686,6 @@ def _jpeg_prog_ac_refine(aw: _ProgAcWriter, zz, ss: int, se: int, al: int) -> No
         aw.pending.extend(corr)
         if aw.eobrun == 0x7FFF:
             aw.flush_eobrun()
-
-
-def attach_jpeg_progressive_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Progressive-JPEG corpus attacher: EVERY document whose text
-    holds ≥ 64 bytes becomes a five-scan SOF2 stream
-    (:func:`synth_jpeg_progressive`); shorter rows stay raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: lambda d, w: synth_jpeg_progressive(d)},
-        text_col,
-        id_col,
-        modulus=1,
-    )
 
 
 def synth_jpeg_420(data: bytes) -> bytes | None:
@@ -6424,176 +5492,6 @@ def _jpeg_rgb_pixels(data: bytes):
     return np.stack([r, g, b], axis=2)
 
 
-def attach_jpeg_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """JPEG corpus attacher: EVERY document whose text holds ≥ 64 bytes
-    (one full 8×8 block) becomes a real baseline grayscale JPEG
-    (:func:`synth_jpeg` — pixels are the text bytes, 8 wide); shorter
-    rows stay raw utf-8. Unlike the lossless containers the LOGICAL
-    pixels here are the text bytes pushed through the documented lossy
-    fixed-point pipeline, which the contract oracle replays."""
-    return _attach_payload(
-        df, {0: lambda d, w: synth_jpeg(d)}, text_col, id_col, modulus=1
-    )
-
-
-def jpeg_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-payload DECODED-pixel statistics for baseline grayscale
-    JPEGs: width, height, exact integer sum and peak of the
-    reconstructed (post-quantization) pixels — the lossy twin of the
-    ppm/bmp/gif/png stats family, proving the full entropy-decode →
-    dequantize → IDCT chain. Non-JPEG payloads are dropped. Output:
-    (id, width, height, sum_gray long, peak_gray int)."""
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    px = _jpeg_gray_pixels(bytes(b))
-                except NotImplementedError:
-                    continue
-                h, w = px.shape
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(px.astype("int64").sum()))
-                peaks.append(int(px.max()))
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "sum_gray": sums,
-                    "peak_gray": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, width int, height int, sum_gray long, peak_gray int"
-    )
-
-
-def attach_jpeg_color_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """COLOR-JPEG corpus attacher: EVERY document whose text holds ≥ 192
-    bytes (one full 8×8 RGB block) becomes a real baseline YCbCr 4:4:4
-    JPEG (:func:`synth_jpeg_color` — the text bytes are interleaved RGB
-    pixels, 8 wide); shorter rows stay raw utf-8."""
-    return _attach_payload(
-        df, {0: lambda d, w: synth_jpeg_color(d)}, text_col, id_col, modulus=1
-    )
-
-
-def attach_jpeg420_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """4:2:0 JPEG corpus attacher: EVERY non-empty document becomes a
-    real baseline chroma-subsampled JPEG (:func:`synth_jpeg_420`, 16
-    wide). A 16×16 MCU needs 768 RGB bytes and the documents corpus
-    tops out around 550, so the pixel source is the text bytes CYCLED
-    to whole MCUs — ``max(1, dlen // 768)`` MCUs, pixel byte
-    ``j = text[j % dlen]`` — a closed form the SQL oracle replays
-    (docs long enough for a full MCU are verbatim-prefixed, everything
-    else wraps). Empty rows stay raw utf-8."""
-
-    def synth(d: bytes, w: int):
-        if not d:
-            return None
-        need = max(1, len(d) // 768) * 768
-        return synth_jpeg_420((d * ((need + len(d) - 1) // len(d)))[:need])
-
-    return _attach_payload(df, {0: synth}, text_col, id_col, modulus=1)
-
-
-def attach_jpeg420_progressive_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Progressive 4:2:0 corpus attacher: same cycling rule as
-    :func:`attach_jpeg420_payload` (pixel byte j = text[j % dlen],
-    whole 16×16 MCUs), delivered as SOF2 multi-scan streams."""
-
-    def synth(d: bytes, w: int):
-        if not d:
-            return None
-        need = max(1, len(d) // 768) * 768
-        return synth_jpeg_420_progressive(
-            (d * ((need + len(d) - 1) // len(d)))[:need]
-        )
-
-    return _attach_payload(df, {0: synth}, text_col, id_col, modulus=1)
-
-
-def jpeg_color_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-payload DECODED-RGB statistics for baseline COLOR JPEGs:
-    width, height, exact per-channel sums and peaks of the reconstructed
-    pixels after the full chain — interleaved-MCU entropy decode ×3,
-    dequantize, fixed-point IDCT, exact-integer YCbCr→RGB. Non-color
-    payloads (incl. grayscale JPEGs) are dropped. Output: (id, width,
-    height, sum_rgb array<long>, peak_rgb array<int>) — the pixel-stats
-    family schema, so the oracle wrapper matches the other formats."""
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    px = _jpeg_rgb_pixels(bytes(b))
-                except NotImplementedError:
-                    continue
-                h, w, _ = px.shape
-                flat = px.reshape(h * w, 3).astype("int64")
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                sums.append([int(x) for x in flat.sum(axis=0)])
-                peaks.append([int(x) for x in flat.max(axis=0)])
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "sum_rgb": sums,
-                    "peak_rgb": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, width int, height int, sum_rgb array<long>, peak_rgb array<int>",
-    )
-
-
-def attach_png_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """PNG corpus attacher: EVERY document whose text holds at least one
-    full pixel row becomes a real 8-bit truecolor PNG (:func:`synth_png`,
-    width = 4 + id % 8, the shared logical-pixel fixture rule — so each
-    doc's PNG holds exactly the pixels its PPM/BMP/GIF twin would).
-    Unlike the mod-3 single-format attachers this one converts all ids:
-    the PNG contract row covers the whole hashable corpus, and the
-    cross-format phash pin compares it doc-for-doc against the PPM
-    twin."""
-    return _attach_payload(
-        df, {0: synth_png, 1: synth_png, 2: synth_png}, text_col, id_col
-    )
-
-
 def synth_png_rgba(data: bytes, width: int) -> bytes | None:
     """Deterministic 8-bit RGBA PNG (color type 6, round 13 — the
     color type real web PNGs overwhelmingly carry): pixel (y, x,
@@ -6694,74 +5592,6 @@ def synth_png_palette(data: bytes, width: int) -> bytes | None:
     return out + chunk(b"IDAT", _zlib.compress(bytes(scan))) + chunk(b"IEND", b"")
 
 
-def attach_png_palette_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Palette-PNG corpus attacher: EVERY document whose text holds at
-    least one full index row becomes a real color-type-3 PNG
-    (:func:`synth_png_palette`, width = 4 + id % 8 over 1-byte
-    pixels); shorter rows stay raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: synth_png_palette, 1: synth_png_palette, 2: synth_png_palette},
-        text_col,
-        id_col,
-    )
-
-
-def png_palette_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for 8-bit palette-indexed PNG
-    payloads (round 14, VERDICT r13 #1): the full decode — chunk walk
-    + CRC verify → own DEFLATE inflate → five-filter row
-    reconstruction at bpp 1 → PLTE (+ optional tRNS) lookup — with
-    alpha a first-class output (opaque 255 where no tRNS applies).
-    Non-palette payloads (incl. truecolor/RGBA PNGs) are dropped.
-    Output: (id, width, height, sum_rgba array<long>, peak_rgba
-    array<int>), arrays indexed R,G,B,A — the :func:`png_rgba_stats`
-    schema, so a wrong palette row, index byte or alpha default is a
-    hash mismatch on the exact-integer sums."""
-    import numpy as np
-
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    h, w, color, px = _png_decode(bytes(b))
-                except NotImplementedError:
-                    continue
-                if color != 3:
-                    continue
-                flat = px.reshape(h * w, 4).astype("int64")
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                sums.append([int(x) for x in flat.sum(axis=0)])
-                peaks.append([int(x) for x in flat.max(axis=0)])
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "sum_rgba": sums,
-                    "peak_rgba": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, width int, height int, "
-        "sum_rgba array<long>, peak_rgba array<int>",
-    )
-
-
 def synth_png16(data: bytes, width: int) -> bytes | None:
     """Deterministic 16-BIT truecolor PNG (round 14, closing the last
     depth gap of "what's missing" #1): sample (y, x, ch) is the
@@ -6804,151 +5634,6 @@ def synth_png16(data: bytes, width: int) -> bytes | None:
     )
 
 
-def attach_png16_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """16-bit-PNG corpus attacher: EVERY document whose text holds at
-    least one full 6-byte-pixel row becomes a real 16-bit truecolor
-    PNG (:func:`synth_png16`, width = 4 + id % 8); shorter rows stay
-    raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: synth_png16, 1: synth_png16, 2: synth_png16},
-        text_col,
-        id_col,
-    )
-
-
-def png16_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for 16-BIT truecolor PNG payloads
-    (round 14): the full decode — chunk walk + CRC verify → own
-    DEFLATE inflate → five-filter reconstruction at the spec's bpp 6
-    byte distance → big-endian pair assembly — with exact 16-bit
-    integer sums. 8-bit and non-PNG payloads are dropped. Output:
-    (id, width, height, sum_rgb array<long>, peak_rgb array<int>),
-    peaks up to 65535."""
-    import numpy as np
-
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    h, w, color, px = _png_decode(bytes(b))
-                except NotImplementedError:
-                    continue
-                if color != 2 or px.dtype != np.uint16:
-                    continue
-                flat = px.reshape(h * w, 3).astype("int64")
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                sums.append([int(x) for x in flat.sum(axis=0)])
-                peaks.append([int(x) for x in flat.max(axis=0)])
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "sum_rgb": sums,
-                    "peak_rgb": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, width int, height int, "
-        "sum_rgb array<long>, peak_rgb array<int>",
-    )
-
-
-def attach_png_rgba_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """RGBA-PNG corpus attacher: EVERY document whose text holds at
-    least one full RGBA pixel row becomes a real color-type-6 PNG
-    (:func:`synth_png_rgba`, width = 4 + id % 8 — the shared
-    logical-pixel width rule over 4-byte pixels); shorter rows stay
-    raw utf-8."""
-    return _attach_payload(
-        df,
-        {0: synth_png_rgba, 1: synth_png_rgba, 2: synth_png_rgba},
-        text_col,
-        id_col,
-    )
-
-
-def png_rgba_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for 8-bit RGBA PNG payloads
-    (round 13): the full decode — chunk walk + CRC verify → own
-    DEFLATE inflate → five-filter row reconstruction at bpp 4 — with
-    the ALPHA channel a first-class output. Non-RGBA payloads (incl.
-    plain truecolor PNGs) are dropped. Output: (id, width, height,
-    sum_rgba array<long>, peak_rgba array<int>), arrays indexed
-    R,G,B,A."""
-    import numpy as np
-
-    id_name = id_col
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums, peaks = [], [], [], [], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                try:
-                    h, w, color, px = _png_decode(bytes(b))
-                except NotImplementedError:
-                    continue
-                if color != 6:
-                    continue
-                flat = px.reshape(h * w, 4).astype("int64")
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                sums.append([int(x) for x in flat.sum(axis=0)])
-                peaks.append([int(x) for x in flat.max(axis=0)])
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "sum_rgba": sums,
-                    "peak_rgba": peaks,
-                }
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op,
-        f"doc_id {id_type}, width int, height int, "
-        "sum_rgba array<long>, peak_rgba array<int>",
-    )
-
-
-def png_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-channel pixel statistics for 8-bit truecolor PNG payloads —
-    the DEFLATE-compressed twin of :func:`ppm_pixel_stats` (same output
-    schema), running the full decode: chunk walk + CRC verify → own
-    zlib/DEFLATE inflate → five-filter row reconstruction. Exact
-    integers only, so the contract oracle recomputes every value from
-    the fixture text bytes — a wrong Huffman table, filter predictor or
-    stride is a hash mismatch, not a fuzzy diff. Non-PNG payloads are
-    dropped."""
-    return _pixel_stats(df, _png_logical_pixels, id_col, payload_col)
-
-
 def wav_phash(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -6981,70 +5666,41 @@ def wav_phash(
     import numpy as np
 
     bpb = _require_bands(n_bands)
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bands, hexes = [], [[] for _ in range(n_bands)], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                data = bytes(b)
-                amp = None
-                try:
-                    _sr, ch, _br, off, dlen, fmt_tag, bits = _wav_chunks(data)
-                    # same int16-PCM gate as wav_pcm_stats (r12 ADVICE):
-                    # channels=0 would ZeroDivisionError the task;
-                    # float/8-bit PCM would hash garbage. Drop instead.
-                    if ch < 1 or fmt_tag != 1 or bits != 16:
-                        continue
-                    dlen = min(dlen, len(data) - off)
-                    n = dlen // (2 * ch)
-                    if n >= 1:
-                        pcm = np.frombuffer(
-                            data, dtype="<i2", offset=off, count=n * ch
-                        )
-                        amp = np.abs(pcm.astype(np.int64).reshape(n, ch)[:, 0])
-                except NotImplementedError:
-                    # CONTAINER-INVARIANT routing (round 13, VERDICT r12
-                    # #6; MP3 + stereo FLAC added round 14): FLAC — mono
-                    # OR stereo, taking channel 0 exactly like the WAV
-                    # path above — and profile MP3 decode to logical
-                    # channel-0 PCM, so identical audio hashes the same
-                    # regardless of container — the audio twin of the
-                    # image matrix's cross-format dHash. (A stereo WAV
-                    # hashes channel 0; dropping the same audio's stereo
-                    # FLAC would be container-dependent behavior.)
-                    try:
-                        _sr, _nch, pcm2 = _flac_decode(data)
-                        pcm = pcm2[:, 0]
-                    except NotImplementedError:
-                        try:
-                            _sr, pcm = _mp3_decode(data)
-                        except NotImplementedError:
-                            continue
-                    n = len(pcm)
-                    if n >= 1:
-                        amp = np.abs(pcm.astype(np.int64))
-                if amp is None:
-                    continue
-                ks = (np.arange(65) * n) // 65
-                a = amp[ks]
-                bits = (a[:64] < a[1:]).astype(np.int64)
-                vals, hx = _pack_bands(bits, n_bands, bpb)
-                ids.append(i)
-                for j in range(n_bands):
-                    bands[j].append(vals[j])
-                hexes.append(hx)
-            cols = {"doc_id": pd.Series(ids, dtype=object)}
-            for j in range(n_bands):
-                cols[f"band{j}"] = pd.array(bands[j], dtype="int32")
-            cols["phash_hex"] = pd.Series(hexes, dtype=object)
-            yield pd.DataFrame(cols)
+    def row(data: bytes):
+        try:
+            _sr, ch, _br, off, dlen, fmt_tag, bits = _wav_chunks(data)
+        except NotImplementedError:
+            # CONTAINER-INVARIANT routing (round 13, VERDICT r12 #6; MP3
+            # + stereo FLAC added round 14): FLAC — mono OR stereo,
+            # taking channel 0 exactly like the WAV path below — and
+            # profile MP3 decode to logical channel-0 PCM, so identical
+            # audio hashes the same regardless of container — the audio
+            # twin of the image matrix's cross-format dHash. (A stereo
+            # WAV hashes channel 0; dropping the same audio's stereo
+            # FLAC would be container-dependent behavior.)
+            try:
+                pcm = _flac_decode(data)[2][:, 0]
+            except NotImplementedError:
+                pcm = _mp3_decode(data)[1]
+        else:
+            # same int16-PCM gate as the WAV stats (r12 ADVICE):
+            # channels=0 would ZeroDivisionError the task; float/8-bit
+            # PCM would hash garbage. Drop instead.
+            if ch < 1 or fmt_tag != 1 or bits != 16:
+                return []
+            n = min(dlen, len(data) - off) // (2 * ch)
+            if n < 1:
+                return []
+            pcm = np.frombuffer(data, dtype="<i2", offset=off, count=n * ch)
+            pcm = pcm.reshape(n, ch)[:, 0]
+        n = len(pcm)
+        if n < 1:
+            return []
+        a = np.abs(pcm.astype(np.int64))[(np.arange(65) * n) // 65]
+        return [_pack_bands((a[:64] < a[1:]).astype(np.int64), n_bands, bpb)]
 
-    id_type = dict(df.dtypes)[id_col]
-    band_schema = ", ".join(f"band{j} int" for j in range(n_bands))
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, {band_schema}, phash_hex string"
-    )
+    return _map_payloads(df, row, _band_schema(n_bands), id_col, payload_col)
 
 
 def mp4_vhash(
@@ -7086,56 +5742,41 @@ def mp4_vhash(
     bpb = _require_bands(n_bands)
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bands, hexes = [], [[] for _ in range(n_bands)], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                data = bytes(b)
-                try:
-                    samples = _parse_mp4_samples(data)
-                except NotImplementedError:
-                    continue
-                votes = np.zeros(64, dtype=np.int64)
-                used = 0
-                for fi in range(0, len(samples), every_n):
-                    off, size, _t = samples[fi]
-                    if off >= len(data):
-                        # truncated mdat: a sample table can point past
-                        # the bytes that actually arrived — skip the
-                        # frame, don't crash the task (frombuffer raises
-                        # on offset > buffer length)
-                        continue
-                    frame = np.frombuffer(
-                        data, np.uint8, min(size, len(data) - off), off
-                    )
-                    m = len(frame)
-                    if m < 1:
-                        continue
-                    ks = (np.arange(65) * m) // 65
-                    fb = frame[ks].astype(np.int64)
-                    votes += fb[:64] < fb[1:]
-                    used += 1
-                if used == 0:
-                    continue
-                bits = (2 * votes > used).astype(np.int64)  # strict majority
-                vals, hx = _pack_bands(bits, n_bands, bpb)
-                ids.append(i)
-                for j in range(n_bands):
-                    bands[j].append(vals[j])
-                hexes.append(hx)
-            cols = {"doc_id": pd.Series(ids, dtype=object)}
-            for j in range(n_bands):
-                cols[f"band{j}"] = pd.array(bands[j], dtype="int32")
-            cols["phash_hex"] = pd.Series(hexes, dtype=object)
-            yield pd.DataFrame(cols)
+    def row(data: bytes):
+        votes = np.zeros(64, dtype=np.int64)
+        used = 0
+        for _fi, bits in _mp4_frame_bits(data, every_n):
+            votes += bits
+            used += 1
+        if used == 0:
+            return []
+        return [_pack_bands((2 * votes > used).astype(np.int64), n_bands, bpb)]  # strict majority
 
-    id_type = dict(df.dtypes)[id_col]
-    band_schema = ", ".join(f"band{j} int" for j in range(n_bands))
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, {band_schema}, phash_hex string"
-    )
+    return _map_payloads(df, row, _band_schema(n_bands), id_col, payload_col)
+
+
+def _mp4_frame_bits(data: bytes, every_n: int):
+    """Yield ``(frame_idx, 64 gradient bits)`` for every ``every_n``-th
+    non-empty sample of an MP4 payload: position k ∈ [0, 65) of a frame
+    of m bytes reads byte ``(k·m) div 65``, bit k = 1 iff b(k) <
+    b(k+1). Raises NotImplementedError for non-BMFF payloads."""
+    import numpy as np
+
+    samples = _parse_mp4_samples(data)
+    for fi in range(0, len(samples), every_n):
+        off, size, _t = samples[fi]
+        if off >= len(data):
+            # truncated mdat: a sample table can point past the bytes
+            # that actually arrived — skip the frame, don't crash the
+            # task (frombuffer raises on offset > buffer length)
+            continue
+        frame = np.frombuffer(data, np.uint8, min(size, len(data) - off), off)
+        m = len(frame)
+        if m < 1:
+            continue
+        fb = frame[(np.arange(65) * m) // 65].astype(np.int64)
+        yield fi, (fb[:64] < fb[1:]).astype(np.int64)
 
 
 def mp4_frame_phash(
@@ -7159,53 +5800,16 @@ def mp4_frame_phash(
     Scale: same economics as the whole-video hash — one Arrow
     ``mapInPandas`` byte parse, 65 sampled bytes per selected frame, no
     shuffle; output rows = sampled frames."""
-    import numpy as np
-
     bpb = _require_bands(n_bands)
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, bands, hexes = [], [], [[] for _ in range(n_bands)], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                data = bytes(b)
-                try:
-                    samples = _parse_mp4_samples(data)
-                except NotImplementedError:
-                    continue
-                for fi in range(0, len(samples), every_n):
-                    off, size, _t = samples[fi]
-                    if off >= len(data):
-                        continue  # truncated mdat (same guard as mp4_vhash)
-                    frame = np.frombuffer(
-                        data, np.uint8, min(size, len(data) - off), off
-                    )
-                    m = len(frame)
-                    if m < 1:
-                        continue
-                    fb = frame[(np.arange(65) * m) // 65].astype(np.int64)
-                    bits = (fb[:64] < fb[1:]).astype(np.int64)
-                    vals, hx = _pack_bands(bits, n_bands, bpb)
-                    ids.append(i)
-                    fidx.append(fi)
-                    for j in range(n_bands):
-                        bands[j].append(vals[j])
-                    hexes.append(hx)
-            cols = {
-                "doc_id": pd.Series(ids, dtype=object),
-                "frame_idx": pd.array(fidx, dtype="int64"),
-            }
-            for j in range(n_bands):
-                cols[f"band{j}"] = pd.array(bands[j], dtype="int32")
-            cols["phash_hex"] = pd.Series(hexes, dtype=object)
-            yield pd.DataFrame(cols)
+    def row(data: bytes):
+        for fi, bits in _mp4_frame_bits(data, every_n):
+            yield (fi, *_pack_bands(bits, n_bands, bpb))
 
-    id_type = dict(df.dtypes)[id_col]
-    band_schema = ", ".join(f"band{j} int" for j in range(n_bands))
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, frame_idx long, {band_schema}, phash_hex string"
+    return _map_payloads(
+        df, row, "frame_idx long, " + _band_schema(n_bands), id_col, payload_col
     )
 
 
@@ -7282,40 +5886,18 @@ def video_pixel_vhash(
     bpb = _require_bands(n_bands)
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bands, hexes = [], [[] for _ in range(n_bands)], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                data = bytes(b)
-                votes = np.zeros(64, dtype=np.int64)
-                used = 0
-                try:
-                    for _fi, gray in _video_decoded_frames(data, every_n):
-                        votes += _gray_dhash_bits(gray)
-                        used += 1
-                except NotImplementedError:
-                    continue
-                if used == 0:
-                    continue
-                bits = (2 * votes > used).astype(np.int64)  # strict majority
-                vals, hx = _pack_bands(bits, n_bands, bpb)
-                ids.append(i)
-                for j in range(n_bands):
-                    bands[j].append(vals[j])
-                hexes.append(hx)
-            cols = {"doc_id": pd.Series(ids, dtype=object)}
-            for j in range(n_bands):
-                cols[f"band{j}"] = pd.array(bands[j], dtype="int32")
-            cols["phash_hex"] = pd.Series(hexes, dtype=object)
-            yield pd.DataFrame(cols)
+    def row(data: bytes):
+        votes = np.zeros(64, dtype=np.int64)
+        used = 0
+        for _fi, gray in _video_decoded_frames(data, every_n):
+            votes += _gray_dhash_bits(gray)
+            used += 1
+        if used == 0:
+            return []
+        return [_pack_bands((2 * votes > used).astype(np.int64), n_bands, bpb)]  # strict majority
 
-    id_type = dict(df.dtypes)[id_col]
-    band_schema = ", ".join(f"band{j} int" for j in range(n_bands))
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, {band_schema}, phash_hex string"
-    )
+    return _map_payloads(df, row, _band_schema(n_bands), id_col, payload_col)
 
 
 def video_frame_pixel_phash(
@@ -7361,36 +5943,309 @@ def video_frame_pixel_phash(
     bpb = _require_bands(n_bands)
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    id_name = id_col
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, bands, hexes = [], [], [[] for _ in range(n_bands)], []
-            for i, b in zip(pdf[id_name], pdf[payload_col]):
-                data = bytes(b)
-                try:
-                    frames = list(_video_decoded_frames(data, every_n))
-                except NotImplementedError:
-                    continue
-                for fi, gray in frames:
-                    bits = _gray_dhash_bits(gray)
-                    vals, hx = _pack_bands(bits, n_bands, bpb)
-                    ids.append(i)
-                    fidx.append(fi)
-                    for j in range(n_bands):
-                        bands[j].append(vals[j])
-                    hexes.append(hx)
-            cols = {
-                "doc_id": pd.Series(ids, dtype=object),
-                "frame_idx": pd.array(fidx, dtype="int64"),
-            }
-            for j in range(n_bands):
-                cols[f"band{j}"] = pd.array(bands[j], dtype="int32")
-            cols["phash_hex"] = pd.Series(hexes, dtype=object)
-            yield pd.DataFrame(cols)
+    def row(data: bytes):
+        for fi, gray in _video_decoded_frames(data, every_n):
+            yield (fi, *_pack_bands(_gray_dhash_bits(gray), n_bands, bpb))
 
-    id_type = dict(df.dtypes)[id_col]
-    band_schema = ", ".join(f"band{j} int" for j in range(n_bands))
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, f"doc_id {id_type}, frame_idx long, {band_schema}, phash_hex string"
+    return _map_payloads(
+        df, row, "frame_idx long, " + _band_schema(n_bands), id_col, payload_col
     )
+
+
+# ---------------------------------------------------------------------------
+# The codec table: one entry per fixture corpus, served by
+# attach_payload(df, codec) and media_stats(df, codec).
+#
+# * ``synth(id, data) -> bytes | None`` wraps a document's utf-8 text
+#   bytes in the codec's container; None keeps the raw bytes. Twin
+#   codecs instead map ``data -> [(side, payload), ...]`` (side 1 is
+#   the other-container twin at id + AUDIO_TWIN_OFFSET).
+# * ``stats(bytes)`` is the decode row function behind media_stats:
+#   one tuple of ``schema``'s columns, or a NotImplementedError / no
+#   tuple for a payload it does not decode.
+# ---------------------------------------------------------------------------
+
+
+class Codec(NamedTuple):
+    synth: Callable
+    stats: Callable | None = None
+    schema: str | None = None
+    twin: bool = False
+
+
+_PIXEL_SCHEMA = "width int, height int, sum_rgb array<long>, peak_rgb array<int>"
+_RGBA_SCHEMA = "width int, height int, sum_rgba array<long>, peak_rgba array<int>"
+_CMYK_SCHEMA = "width int, height int, sum_cmyk array<long>, peak_cmyk array<int>"
+_GRAY_SCHEMA = "width int, height int, sum_gray long, peak_gray int"
+_PCM_SCHEMA = "n_samples long, sample_rate int, sum_abs long, peak_abs int"
+_WAV_SCHEMA = "n_frames long, sum_abs array<long>, peak_abs array<int>"
+_STEREO_SCHEMA = (
+    "n_frames long, sum_abs_ch1 long, sum_abs_ch2 long, peak_abs_ch1 int, peak_abs_ch2 int"
+)
+
+
+def _pixel_stats(decode):
+    """Stats row: width, height and per-channel sums/peaks of
+    ``decode(bytes) -> (h, w, channels)`` pixels."""
+
+    def row(data: bytes):
+        px = decode(data)
+        h, w = px.shape[:2]
+        return [(w, h, *_sum_peak(px.reshape(h * w, -1)))]
+
+    return row
+
+
+def _jpeg_gray_stats(data: bytes):
+    px = _jpeg_gray_pixels(data)
+    h, w = px.shape
+    (s,), (p,) = _sum_peak(px.reshape(h * w, 1))
+    return [(w, h, s, p)]
+
+
+def _bmp8_pixels(data: bytes):
+    if _parse_bmp(data)[5] != 8:
+        raise NotImplementedError("not a paletted BMP")
+    return _bmp_logical_pixels(data)
+
+
+def _png_pixels(color: int, dtype=None):
+    """(h, w, channels) pixels of PNGs of one color type (and, when
+    given, sample dtype); other PNGs raise."""
+
+    def decode(data: bytes):
+        _h, _w, c, px = _png_decode(data)
+        if c != color or (dtype is not None and px.dtype != dtype):
+            raise NotImplementedError("PNG of another color type or depth")
+        return px
+
+    return decode
+
+
+def _pcm_stats(decode):
+    """Stats row for mono ``decode(bytes) -> (sample_rate, samples)``
+    streams: sample count, rate, exact sum of |sample| and peak."""
+
+    def row(data: bytes):
+        sr, pcm = decode(data)
+        (s,), (p,) = _sum_peak(pcm.reshape(-1, 1)) if len(pcm) else ((0,), (0,))
+        return [(len(pcm), sr, s, p)]
+
+    return row
+
+
+def _wav_pcm_stats(data: bytes):
+    """Per-channel frame count, sum of |sample| and peak of an integer
+    PCM WAV: the ``data`` chunk :func:`_wav_chunks` locates is read with
+    one zero-copy ``np.frombuffer`` view. Empty data chunks give empty
+    arrays."""
+    import numpy as np
+
+    _sr, ch, _br, off, dlen, fmt_tag, bits = _wav_chunks(data)
+    # integer PCM at 16 or 8 bit only: a zero channel count would divide
+    # by zero below, and float (fmt 3) payloads would be silently
+    # mis-read — drop (r12 ADVICE). 8-bit WAV PCM is UNSIGNED with the
+    # zero line at 128 (the spec's legacy depth), so amplitude = |v - 128|.
+    if ch < 1 or fmt_tag != 1 or bits not in (8, 16):
+        return []
+    dlen = min(dlen, len(data) - off)  # tolerate truncated files
+    n = dlen // ((bits // 8) * ch)
+    if n < 1:
+        return [(0, [], [])]
+    if bits == 16:
+        pcm = np.frombuffer(data, dtype="<i2", offset=off, count=n * ch)
+    else:
+        pcm = np.frombuffer(data, dtype=np.uint8, offset=off, count=n * ch).astype(np.int64) - 128
+    return [(n, *_sum_peak(pcm.reshape(n, ch)))]
+
+
+def _flac_stereo_stats(data: bytes):
+    _sr, ch, pcm = _flac_decode(data)
+    if ch != 2 or len(pcm) < 1:
+        return []
+    (s1, s2), (p1, p2) = _sum_peak(pcm)
+    return [(len(pcm), s1, s2, p1, p2)]
+
+
+def _residues(modulus: int, synths: dict):
+    """Synth rule: ids ≡ r (mod ``modulus``) with an entry in ``synths``
+    become ``synths[r](data, width = 4 + id % 8)``; other ids stay raw."""
+
+    def synth(i: int, d: bytes):
+        s = synths.get(i % modulus)
+        return s(d, 4 + i % 8) if s else None
+
+    return synth
+
+
+def _every(synth_w):
+    """Synth rule: every id, at width = 4 + id % 8."""
+    return lambda i, d: synth_w(d, 4 + i % 8)
+
+
+def _whole(synth):
+    """Synth rule: every id, the container's own fixed geometry."""
+    return lambda i, d: synth(d)
+
+
+def _cycled(synth, mcu: int):
+    """Synth rule for the chroma-subsampled JPEGs, whose MCU is larger
+    than most texts: the pixel source is the text bytes cycled to
+    ``max(1, len // mcu)`` whole MCUs (pixel byte j = text[j % len]);
+    empty texts stay raw."""
+
+    def rule(i: int, d: bytes):
+        if not d:
+            return None
+        need = max(1, len(d) // mcu) * mcu
+        return synth((d * ((need + len(d) - 1) // len(d)))[:need])
+
+    return rule
+
+
+def _tiff_synth(i: int, d: bytes):
+    """Baseline TIFF whose variant is set by id: byte order ``MM`` on
+    odd ids, PackBits on ids ≡ 0 (mod 3), a two-strip cut on ids ≡ 0
+    (mod 5); the logical pixels stay the PPM rule at width 4 + id % 8."""
+    w = 4 + i % 8
+    h = (len(d) // 3) // w
+    return synth_tiff(
+        d,
+        w,
+        big_endian=bool(i % 2),
+        packbits=i % 3 == 0,
+        rows_per_strip=(h + 1) // 2 if (i % 5 == 0 and h > 1) else None,
+    )
+
+
+def _media_synth(i: int, d: bytes):
+    """Mixed audio/video corpus by id mod 5: 0 WAV, 1 MP4, 2 MP3, 3 FLAC,
+    4 raw — container parameters derived from the id and byte length."""
+    m = i % 5
+    if m == 0:
+        return synth_wav(d, sample_rate=8000 + (i % 4) * 4000, channels=1 + i % 2)
+    if m == 1:
+        return synth_mp4(
+            d,
+            width=160 + (i % 8) * 16,
+            height=120 + (i % 6) * 24,
+            duration_ms=len(d) * 40,
+        )
+    if m == 2:
+        return synth_mp3(
+            d,
+            bitrate_kbps=(96, 128, 160, 192)[i % 4],
+            sample_rate=_MP3_RATES[i % 3],
+            channels=1 + i % 2,
+        )
+    if m == 3:
+        return synth_flac(d, sample_rate=16000 + (i % 3) * 16000, channels=1 + i % 2)
+    return None
+
+
+#: id offset separating the two copies in the twin corpora — far above
+#: any testdata doc_id, so the pair (i, i + offset) is unambiguous.
+AUDIO_TWIN_OFFSET = 1_000_000
+
+
+def _audio_twin(d: bytes):
+    """A mono 16-bit WAV and a real-frame FLAC of the same samples."""
+    flac = synth_flac_pcm(d) if len(d) >= 2 else None
+    return [] if flac is None else [(0, synth_wav(d, 16000, 1)), (1, flac)]
+
+
+def _audio_mp3_twin(d: bytes):
+    """The profile MP3 stream, and a WAV of that stream's DECODED PCM:
+    MP3 is lossy, so only an exact synthesis chain lands both sides in
+    the same envelope buckets."""
+    mp3 = synth_mp3_pcm(d)
+    if mp3 is None:
+        return []
+    _sr, pcm = _mp3_decode(mp3)
+    return [(0, mp3), (1, synth_wav(pcm.astype("<i2").tobytes(), 32000, 1))]
+
+
+def _video_pixel_twin(d: bytes):
+    """An MJPEG AVI with one baseline JPEG per 64-byte text block, and a
+    raw-gray MP4 of those JPEGs' DECODED pixels (64-byte samples)."""
+    nb = len(d) // 64
+    if nb < 1:
+        return []
+    jpegs = [synth_jpeg(d[k * 64 : (k + 1) * 64]) for k in range(nb)]
+    decoded = b"".join(_jpeg_gray_pixels(j).tobytes() for j in jpegs)
+    raw = synth_mp4(decoded, 8, 8, nb * FRAME_DUR_MS, frame_sizes=[64] * nb, codec=b"raw ")
+    return [(0, synth_avi_mjpeg(jpegs, 8, 8)), (1, raw)]
+
+
+_RGB_STATS = _pixel_stats(_jpeg_rgb_pixels)
+_PNG_STATS = _pixel_stats(_png_logical_pixels)
+_FLAC_STATS = _pcm_stats(_flac_pcm_samples)
+
+CODECS = {
+    # Lossless images; logical pixels are the text bytes as RGB rows of
+    # width 4 + id % 8 (or 1-byte indices / 6-byte pixels / RGBA), so
+    # one oracle rule covers every container. PPM, BMP and GIF take
+    # disjoint ids mod 3 and coexist on one table; the 24-bit BMP
+    # reader also decodes paletted BMPs.
+    "ppm": Codec(_residues(3, {0: synth_ppm}), _pixel_stats(_ppm_logical_pixels), _PIXEL_SCHEMA),
+    "bmp": Codec(_residues(3, {1: synth_bmp}), _pixel_stats(_bmp_logical_pixels), _PIXEL_SCHEMA),
+    "gif": Codec(_residues(3, {2: synth_gif}), _pixel_stats(_gif_logical_pixels), _PIXEL_SCHEMA),
+    "png": Codec(_every(synth_png), _PNG_STATS, _PIXEL_SCHEMA),
+    "png_adam7": Codec(_every(synth_png_adam7), _PNG_STATS, _PIXEL_SCHEMA),
+    "png16": Codec(_every(synth_png16), _pixel_stats(_png_pixels(2, "uint16")), _PIXEL_SCHEMA),
+    "png_rgba": Codec(_every(synth_png_rgba), _pixel_stats(_png_pixels(6)), _RGBA_SCHEMA),
+    "png_palette": Codec(_every(synth_png_palette), _pixel_stats(_png_pixels(3)), _RGBA_SCHEMA),
+    "bmp8": Codec(_every(synth_bmp8), _pixel_stats(_bmp8_pixels), _PIXEL_SCHEMA),
+    "tiff": Codec(_tiff_synth, _pixel_stats(_tiff_logical_pixels), _PIXEL_SCHEMA),
+    # Six containers over one logical image by id mod 8 (interlaced GIF
+    # and Adam7 PNG on 6 and 7): the cross-container phash corpus.
+    "multiformat": Codec(
+        _residues(
+            8,
+            {
+                0: synth_ppm,
+                1: synth_bmp,
+                2: synth_gif,
+                3: synth_png,
+                4: synth_tiff,
+                5: lambda d, w: synth_tiff(d, w, big_endian=True, packbits=True),
+                6: lambda d, w: synth_gif(d, w, interlace=True),
+                7: synth_png_adam7,
+            },
+        )
+    ),
+    # Lossy images: pixels are the text bytes through the documented
+    # fixed-point pipeline the oracles replay. Gray 8 wide (restart
+    # interval 2 + id % 8 MCUs), 4:4:4 color and CMYK 8 wide; the
+    # subsampled 4:2:0 (16×16 MCU, 768 bytes) and 4:2:2 (16×8, 384)
+    # streams cycle short texts to one whole MCU.
+    "jpeg": Codec(_whole(synth_jpeg), _jpeg_gray_stats, _GRAY_SCHEMA),
+    "jpeg_restart": Codec(
+        lambda i, d: synth_jpeg_restart(d, 2 + i % 8), _jpeg_gray_stats, _GRAY_SCHEMA
+    ),
+    "jpeg_progressive": Codec(_whole(synth_jpeg_progressive), _jpeg_gray_stats, _GRAY_SCHEMA),
+    "jpeg_color": Codec(_whole(synth_jpeg_color), _RGB_STATS, _PIXEL_SCHEMA),
+    "jpeg420": Codec(_cycled(synth_jpeg_420, 768), _RGB_STATS, _PIXEL_SCHEMA),
+    "jpeg420_progressive": Codec(
+        _cycled(synth_jpeg_420_progressive, 768), _RGB_STATS, _PIXEL_SCHEMA
+    ),
+    "jpeg422": Codec(_cycled(synth_jpeg_422, 384), _RGB_STATS, _PIXEL_SCHEMA),
+    "jpeg_cmyk": Codec(_whole(synth_jpeg_cmyk), _pixel_stats(_jpeg_cmyk_pixels), _CMYK_SCHEMA),
+    # Audio: the text bytes ARE the samples (mono int16 LE for FLAC/WAV,
+    # 24-bit for flac24, unsigned 8-bit for wav8 with channels 1 + id % 2,
+    # interleaved L/R for stereo FLAC); MP3 derives spectral lines from
+    # them. The mixed media corpus's stats read its WAV members.
+    "media": Codec(_media_synth, _wav_pcm_stats, _WAV_SCHEMA),
+    "wav8": Codec(
+        lambda i, d: synth_wav(d, 16000, 1 + i % 2, bits=8), _wav_pcm_stats, _WAV_SCHEMA
+    ),
+    "flac_pcm": Codec(_whole(synth_flac_pcm), _FLAC_STATS, _PCM_SCHEMA),
+    "flac24": Codec(lambda i, d: synth_flac_pcm(d, bits=24), _FLAC_STATS, _PCM_SCHEMA),
+    "flac_stereo": Codec(_whole(synth_flac_stereo), _flac_stereo_stats, _STEREO_SCHEMA),
+    "mp3_pcm": Codec(_whole(synth_mp3_pcm), _pcm_stats(_mp3_decode), _PCM_SCHEMA),
+    # Cross-container twins for the dedup rows (hashed, not stats'd).
+    "audio_twin": Codec(_audio_twin, twin=True),
+    "audio_mp3_twin": Codec(_audio_mp3_twin, twin=True),
+    "video_pixel_twin": Codec(_video_pixel_twin, twin=True),
+}

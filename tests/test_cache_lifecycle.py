@@ -114,3 +114,24 @@ def test_iterative_loops_release_superseded_rounds(spark, sf_small):
     swept = cache_registry.sweep_persistent_rdds(spark)
     assert swept > 0
     assert _persistent_rdd_count(spark) == 0
+
+
+def test_materialize_count_surfaces_job_failure_without_retry(spark):
+    """A failing job must raise from materialize_count after ONE job —
+    not be swallowed and re-run as a second full scan via count()."""
+    import pytest
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("materialize-count-boom")
+
+    df = spark.range(4).select(boom("id").alias("x"))
+    sc = spark.sparkContext
+    group = "materialize-count-failure"
+    sc.setJobGroup(group, "materialize_count failure test")
+    try:
+        with pytest.raises(Exception, match="materialize-count-boom"):
+            cache_registry.materialize_count(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

@@ -109,3 +109,51 @@ def test_repetition_signals_hand_values(spark):
     assert out[3] == (0, 0.0, 0.0, 0.0, 0)
     assert out[4] == (0, 0.0, 0.0, 0.0, 0)
     assert out[5] == (1, 1.0, 1.0, 0.0, 1)
+
+
+# -- multimodal payload readers ------------------------------------------
+
+_BANDS = "band0 int, band1 int, band2 int, band3 int, phash_hex string"
+_HASHERS = {
+    "ppm_phash": _BANDS,
+    "wav_phash": _BANDS,
+    "mp4_vhash": _BANDS,
+    "mp4_frame_phash": "frame_idx long, " + _BANDS,
+    "video_pixel_vhash": _BANDS,
+    "video_frame_pixel_phash": "frame_idx long, " + _BANDS,
+}
+
+
+def _payload_readers():
+    from polars_sim_spark.operators import multimodal as mm
+
+    readers = {
+        f"media_stats:{name}": (
+            lambda df, name=name: mm.media_stats(df, name),
+            codec.schema,
+        )
+        for name, codec in mm.CODECS.items()
+        if codec.stats is not None
+    }
+    readers.update(
+        {name: (getattr(mm, name), schema) for name, schema in _HASHERS.items()}
+    )
+    return readers
+
+
+@pytest.mark.parametrize("reader", sorted(_payload_readers()))
+def test_payload_reader_empty_and_foreign_inputs(spark, reader):
+    """Every stats codec and every perceptual hasher returns zero rows
+    with its declared schema on a zero-row input and on an input of only
+    foreign (raw utf-8 text) payloads."""
+    fn, schema = _payload_readers()[reader]
+    want = spark.createDataFrame([], f"doc_id long, {schema}").schema
+    texts = ["", "a", "hello world", "naïve café ünïcödé " * 9, "x" * 700]
+    foreign = spark.createDataFrame(
+        [(i, bytearray(t.encode("utf-8"))) for i, t in enumerate(texts)],
+        "doc_id long, payload binary",
+    )
+    for df in (foreign.limit(0), foreign):
+        out = fn(df)
+        assert out.schema == want
+        assert out.collect() == []

@@ -236,7 +236,7 @@ def test_decode_media_meta_end_to_end(spark):
     from pyspark.sql import functions as F
 
     from polars_sim_spark.operators.multimodal import (
-        attach_media_payload,
+        attach_payload,
         decode_media_meta,
     )
 
@@ -246,7 +246,7 @@ def test_decode_media_meta_end_to_end(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in decode_media_meta(attach_media_payload(docs)).collect()
+        for r in decode_media_meta(attach_payload(docs, "media")).collect()
     }
     assert out[0]["decoder"] == "wav" and out[5]["decoder"] == "wav"
     assert out[1]["decoder"] == "mp4" and out[6]["decoder"] == "mp4"
@@ -292,7 +292,7 @@ def test_wav_pcm_stats_known_samples(spark):
     byte that must be ignored (incomplete frame)."""
     import struct
 
-    from polars_sim_spark.operators.multimodal import synth_wav, wav_pcm_stats
+    from polars_sim_spark.operators.multimodal import media_stats, synth_wav
 
     stereo = synth_wav(
         struct.pack("<4h", 1, -2, 32767, -32768), sample_rate=8000, channels=2
@@ -302,7 +302,7 @@ def test_wav_pcm_stats_known_samples(spark):
         [(1, bytearray(stereo)), (2, bytearray(mono)), (3, bytearray(b"not wav"))],
         "doc_id long, payload binary",
     )
-    got = {r["doc_id"]: r.asDict() for r in wav_pcm_stats(df).collect()}
+    got = {r["doc_id"]: r.asDict() for r in media_stats(df, "media").collect()}
     assert set(got) == {1, 2}  # non-WAV rows drop
     assert got[1]["n_frames"] == 2
     assert list(got[1]["sum_abs"]) == [1 + 32767, 2 + 32768]
@@ -320,7 +320,7 @@ def test_ppm_parse_and_pixel_stats(spark):
 
     from polars_sim_spark.operators.multimodal import (
         _parse_ppm,
-        ppm_pixel_stats,
+        media_stats,
         synth_ppm,
     )
 
@@ -339,7 +339,7 @@ def test_ppm_parse_and_pixel_stats(spark):
 
     rows = [(1, p), (2, b"not an image"), (3, b"P6\n5 2\n255\n" + bytes(10))]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in ppm_pixel_stats(df).collect()}
+    got = {r["doc_id"]: r for r in media_stats(df, "ppm").collect()}
     assert list(got) == [1]  # non-PPM and truncated-pixels dropped
     rgb = np.frombuffer(data[: 5 * 51 * 3], dtype=np.uint8).reshape(-1, 3)
     assert got[1]["sum_rgb"] == [int(x) for x in rgb.astype(np.int64).sum(axis=0)]
@@ -360,7 +360,7 @@ def test_bmp_parse_and_pixel_stats(spark):
     from polars_sim_spark.operators.multimodal import (
         _bmp_logical_pixels,
         _parse_bmp,
-        bmp_pixel_stats,
+        media_stats,
         synth_bmp,
     )
 
@@ -398,7 +398,7 @@ def test_bmp_parse_and_pixel_stats(spark):
 
     rows = [(1, b), (2, b"not an image"), (3, b[:100])]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in bmp_pixel_stats(df).collect()}
+    got = {r["doc_id"]: r for r in media_stats(df, "bmp").collect()}
     assert list(got) == [1]
     rgb = np.frombuffer(data[: 5 * 51 * 3], dtype=np.uint8).reshape(-1, 3)
     assert got[1]["sum_rgb"] == [int(x) for x in rgb.astype(np.int64).sum(axis=0)]
@@ -463,7 +463,7 @@ def test_mp4_parser_handles_general_layouts():
 
 def test_mp4_frame_sample_spark_fanout(spark):
     from polars_sim_spark.operators.multimodal import (
-        attach_media_payload,
+        attach_payload,
         mp4_frame_sample,
     )
 
@@ -471,7 +471,7 @@ def test_mp4_frame_sample_spark_fanout(spark):
         [(i, "frame payload bytes " * (i + 3)) for i in range(10)],
         "doc_id long, text string",
     )
-    out = mp4_frame_sample(attach_media_payload(df), every_n=2).collect()
+    out = mp4_frame_sample(attach_payload(df, "media"), every_n=2).collect()
     # only ids ≡ 1 (mod 5) are MP4
     assert {r["doc_id"] for r in out} == {1, 6}
     for r in out:
@@ -552,7 +552,7 @@ def test_gif_synth_decode_and_pixel_stats(spark):
 
     from polars_sim_spark.operators.multimodal import (
         _gif_logical_pixels,
-        gif_pixel_stats,
+        media_stats,
         synth_gif,
     )
 
@@ -605,7 +605,7 @@ def test_gif_synth_decode_and_pixel_stats(spark):
 
     rows = [(1, g), (2, b"not an image"), (3, g[:60])]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in gif_pixel_stats(df).collect()}
+    got = {r["doc_id"]: r for r in media_stats(df, "gif").collect()}
     assert list(got) == [1]
     rgb = np.frombuffer(data[: 5 * 51 * 3], dtype=np.uint8).reshape(-1, 3)
     assert got[1]["width"] == 5 and got[1]["height"] == 51
@@ -807,13 +807,13 @@ def test_wav_pcm_gate_drops_non_int16_payloads(spark):
     """Round 12 (ADVICE): a WAV whose fmt chunk declares channels=0 must
     be DROPPED (not ZeroDivisionError the task), and float (fmt 3) /
     unsupported-depth payloads must be dropped rather than silently
-    mis-read. Round 14: wav_pcm_stats now DECODES 8-bit (unsigned,
+    mis-read. Round 14: the WAV stats reader now DECODES 8-bit (unsigned,
     offset 128); wav_phash keeps its 16-bit envelope contract."""
     import struct
 
     from polars_sim_spark.operators.multimodal import (
+        media_stats,
         synth_wav,
-        wav_pcm_stats,
         wav_phash,
     )
 
@@ -834,7 +834,7 @@ def test_wav_pcm_gate_drops_non_int16_payloads(spark):
         (4, patched(bits=24)),     # 24-bit WAV stays gated
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in wav_pcm_stats(df).collect()}
+    got = {r["doc_id"]: r for r in media_stats(df, "media").collect()}
     assert sorted(got) == [2, 3]
     # the 8-bit reinterpretation of the int16 bytes: unsigned |v - 128|
     raw = bytes(good[44:])
@@ -1022,7 +1022,7 @@ def test_png_nonpalette_color_types_decode(spark):
         _png_decode,
         _png_filter_row,
         _png_logical_pixels,
-        png_rgba_stats,
+        media_stats,
         synth_png,
         synth_png_rgba,
     )
@@ -1078,7 +1078,7 @@ def test_png_nonpalette_color_types_decode(spark):
         [(1, bytearray(rgba)), (2, bytearray(synth_png(bytes(range(240)), 5)))],
         "doc_id long, payload binary",
     )
-    rows_out = {r["doc_id"]: r for r in png_rgba_stats(df).collect()}
+    rows_out = {r["doc_id"]: r for r in media_stats(df, "png_rgba").collect()}
     assert list(rows_out) == [1]
     want = np.frombuffer(bytes(range(240)), np.uint8).reshape(-1, 4).astype(np.int64)
     assert list(rows_out[1]["sum_rgba"]) == [int(x) for x in want.sum(axis=0)]
@@ -1094,7 +1094,7 @@ def test_bmp8_paletted_decode_and_stats(spark):
 
     from polars_sim_spark.operators.multimodal import (
         _bmp_logical_pixels,
-        bmp8_pixel_stats,
+        media_stats,
         ppm_phash,
         synth_bmp,
         synth_bmp8,
@@ -1131,7 +1131,7 @@ def test_bmp8_paletted_decode_and_stats(spark):
         [(1, bytearray(b8)), (2, bytearray(synth_bmp(bytes(range(240)), 5)))],
         "doc_id long, payload binary",
     )
-    got = {r["doc_id"]: r for r in bmp8_pixel_stats(df).collect()}
+    got = {r["doc_id"]: r for r in media_stats(df, "bmp8").collect()}
     assert list(got) == [1]
     flat = px.reshape(-1, 3).astype(np.int64)
     assert list(got[1]["sum_rgb"]) == [int(x) for x in flat.sum(axis=0)]
@@ -1149,7 +1149,7 @@ def test_png16_decode_and_stats(spark):
     from polars_sim_spark.operators.multimodal import (
         _png_decode,
         _png_logical_pixels,
-        png16_stats,
+        media_stats,
         synth_png,
         synth_png16,
     )
@@ -1169,7 +1169,7 @@ def test_png16_decode_and_stats(spark):
         [(1, bytearray(p16)), (2, bytearray(synth_png(bytes(range(240)), 5)))],
         "doc_id long, payload binary",
     )
-    rows_out = {r["doc_id"]: r for r in png16_stats(df).collect()}
+    rows_out = {r["doc_id"]: r for r in media_stats(df, "png16").collect()}
     assert list(rows_out) == [1]
     want = np.frombuffer(bytes(range(240)), ">u2").reshape(-1, 3).astype(np.int64)
     assert list(rows_out[1]["sum_rgb"]) == [int(x) for x in want.sum(axis=0)]
@@ -1189,7 +1189,7 @@ def test_png_palette_decode_and_stats(spark):
 
     from polars_sim_spark.operators.multimodal import (
         _png_decode,
-        png_palette_stats,
+        media_stats,
         synth_png,
         synth_png_palette,
     )
@@ -1263,7 +1263,7 @@ def test_png_palette_decode_and_stats(spark):
         [(1, bytearray(pal)), (2, bytearray(synth_png(bytes(range(240)), 5)))],
         "doc_id long, payload binary",
     )
-    rows_out = {r["doc_id"]: r for r in png_palette_stats(df).collect()}
+    rows_out = {r["doc_id"]: r for r in media_stats(df, "png_palette").collect()}
     assert list(rows_out) == [1]
     h_, w_, _c, px = _png_decode(pal)
     flat = px.reshape(-1, 4).astype(np.int64)
@@ -1381,9 +1381,9 @@ def test_flac_and_wav_depth_widening(spark):
 
     from polars_sim_spark.operators.multimodal import (
         _flac_pcm_samples,
+        media_stats,
         synth_flac_pcm,
         synth_wav,
-        wav_pcm_stats,
     )
 
     rng = np.random.default_rng(24)
@@ -1421,7 +1421,7 @@ def test_flac_and_wav_depth_widening(spark):
     data = bytes(range(256))  # every byte value once
     wav8 = synth_wav(data, 16000, 1, bits=8)
     df = spark.createDataFrame([(1, bytearray(wav8))], "doc_id long, payload binary")
-    row = wav_pcm_stats(df).collect()[0]
+    row = media_stats(df, "wav8").collect()[0]
     want = np.abs(np.arange(256, dtype=np.int64) - 128)
     assert row["n_frames"] == 256
     assert list(row["sum_abs"]) == [int(want.sum())]
@@ -1429,7 +1429,7 @@ def test_flac_and_wav_depth_widening(spark):
     # stereo 8-bit interleave
     wav8s = synth_wav(data, 16000, 2, bits=8)
     df = spark.createDataFrame([(1, bytearray(wav8s))], "doc_id long, payload binary")
-    row = wav_pcm_stats(df).collect()[0]
+    row = media_stats(df, "wav8").collect()[0]
     w2 = want.reshape(128, 2)
     assert row["n_frames"] == 128
     assert list(row["sum_abs"]) == [int(x) for x in w2.sum(axis=0)]
@@ -1448,7 +1448,7 @@ def test_jpeg_cmyk_decode_matches_pipeline_replay(spark):
         _JPEG_QUANT,
         _jpeg_cmyk_pixels,
         _rha_arr,
-        jpeg_cmyk_pixel_stats,
+        media_stats,
         synth_jpeg,
         synth_jpeg_cmyk,
         synth_jpeg_color,
@@ -1474,7 +1474,7 @@ def test_jpeg_cmyk_decode_matches_pipeline_replay(spark):
         (3, bytearray(synth_jpeg_color(data[:576]))),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in jpeg_cmyk_pixel_stats(df).collect()}
+    got = {r["doc_id"]: r for r in media_stats(df, "jpeg_cmyk").collect()}
     assert list(got) == [1]
     flat = px.reshape(-1, 4).astype(np.int64)
     assert list(got[1]["sum_cmyk"]) == [int(x) for x in flat.sum(axis=0)]
@@ -1581,7 +1581,7 @@ def test_flac_pcm_roundtrip_all_subframe_types(spark):
     from polars_sim_spark.operators.multimodal import (
         _FLAC_PCM_BLOCK,
         _flac_pcm_samples,
-        flac_pcm_stats,
+        media_stats,
         synth_flac_pcm,
         synth_wav,
         wav_phash,
@@ -1623,7 +1623,7 @@ def test_flac_pcm_roundtrip_all_subframe_types(spark):
     rows = {r["doc_id"]: r["phash_hex"] for r in wav_phash(df).collect()}
     assert rows[0] == rows[1]
     # stats operator: exact integers off the decoded samples
-    st = {r["doc_id"]: r for r in flac_pcm_stats(df).collect()}
+    st = {r["doc_id"]: r for r in media_stats(df, "flac_pcm").collect()}
     assert list(st) == [1]  # the WAV payload is dropped by the FLAC op
     amp = np.abs(cases["smooth"].astype(np.int64))
     assert st[1]["n_samples"] == len(amp)
@@ -1644,7 +1644,7 @@ def test_flac_stereo_decorrelation_roundtrip(spark):
         _FLAC_PCM_BLOCK,
         _flac_decode,
         _flac_pcm_samples,
-        flac_stereo_pcm_stats,
+        media_stats,
         synth_flac_stereo,
     )
 
@@ -1665,7 +1665,7 @@ def test_flac_stereo_decorrelation_roundtrip(spark):
     assert synth_flac_stereo(b"abc") is None
     # stats operator: exact per-channel integers
     df = spark.createDataFrame([(5, bytearray(fl))], "doc_id long, payload binary")
-    row = flac_stereo_pcm_stats(df).collect()[0]
+    row = media_stats(df, "flac_stereo").collect()[0]
     amp = np.abs(pcm.astype(np.int64))
     assert row["n_frames"] == n
     assert row["sum_abs_ch1"] == int(amp[:, 0].sum())
@@ -1688,8 +1688,8 @@ def test_flac_multi_partition_and_escaped_residuals_decode():
 
     from polars_sim_spark.operators.multimodal import (
         _MsbBitWriter,
-        _crc8_flac,
         _crc16_flac,
+        _crc8_flac,
         _flac_decode,
         _flac_utf8,
     )
@@ -1771,13 +1771,13 @@ def test_audio_twin_corpus_pairs_every_doc_across_containers(spark):
     from polars_sim_spark.operators import dedup
     from polars_sim_spark.operators.multimodal import (
         AUDIO_TWIN_OFFSET,
-        attach_audio_twin_payload,
+        attach_payload,
         wav_phash,
     )
 
     rows = [(i, f"sample text payload number {i} " * (2 + i % 5)) for i in range(20)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    ph = wav_phash(attach_audio_twin_payload(docs), n_bands=4)
+    ph = wav_phash(attach_payload(docs, "audio_twin"), n_bands=4)
     pairs = dedup.phash_near_pairs(
         ph,
         id_col="doc_id",
@@ -1946,14 +1946,14 @@ def test_jpeg_roundtrip_matches_fixedpoint_pipeline():
 
 
 def test_jpeg_pixel_stats_spark_path(spark):
-    """The Arrow jpeg_pixel_stats operator: decoded sums/peaks match the
+    """The Arrow gray-JPEG stats reader (codec "jpeg"): decoded sums/peaks match the
     per-block reference, non-JPEG payloads drop."""
     import numpy as np
 
     from polars_sim_spark.operators.multimodal import (
         _JPEG_QUANT,
         _jpeg_block_pipeline,
-        jpeg_pixel_stats,
+        media_stats,
         synth_jpeg,
     )
 
@@ -1974,7 +1974,7 @@ def test_jpeg_pixel_stats_spark_path(spark):
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {
         r["doc_id"]: (r["width"], r["height"], r["sum_gray"], r["peak_gray"])
-        for r in jpeg_pixel_stats(df).collect()
+        for r in media_stats(df, "jpeg").collect()
     }
     assert got == want
 
@@ -1995,7 +1995,7 @@ def test_jpeg_color_roundtrip_and_spark_stats(spark):
         _jpeg_rgb_pixels,
         _rgb_to_ycc,
         _ycc_to_rgb,
-        jpeg_color_pixel_stats,
+        media_stats,
         synth_jpeg,
         synth_jpeg_color,
     )
@@ -2032,7 +2032,7 @@ def test_jpeg_color_roundtrip_and_spark_stats(spark):
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got_stats = {
         r["doc_id"]: (r["width"], r["height"], list(r["sum_rgb"]), list(r["peak_rgb"]))
-        for r in jpeg_color_pixel_stats(df).collect()
+        for r in media_stats(df, "jpeg_color").collect()
     }
     assert got_stats == want
     with pytest.raises(NotImplementedError):
@@ -2055,7 +2055,7 @@ def test_jpeg_420_roundtrip_and_spark_stats(spark):
         _jpeg_rgb_pixels,
         _rgb_to_ycc,
         _ycc_to_rgb,
-        jpeg_color_pixel_stats,
+        media_stats,
         synth_jpeg_420,
     )
 
@@ -2117,7 +2117,7 @@ def test_jpeg_420_roundtrip_and_spark_stats(spark):
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got_stats = {
         r["doc_id"]: (r["width"], r["height"], list(r["sum_rgb"]), list(r["peak_rgb"]))
-        for r in jpeg_color_pixel_stats(df).collect()
+        for r in media_stats(df, "jpeg_color").collect()
     }
     assert got_stats == want
     # 4:2:2 (x-only decimation): decoded RGB equals the per-block

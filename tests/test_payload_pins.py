@@ -71,42 +71,6 @@ PINS = {
     "video_pixel_twin": "874ef9803097976b83b884b2a8e8a912",
 }
 
-_ATTACHERS = {
-    "ppm": mm.attach_image_payload,
-    "bmp": mm.attach_bmp_payload,
-    "gif": mm.attach_gif_payload,
-    "png": mm.attach_png_payload,
-    "png_adam7": mm.attach_png_adam7_payload,
-    "png_palette": mm.attach_png_palette_payload,
-    "png16": mm.attach_png16_payload,
-    "png_rgba": mm.attach_png_rgba_payload,
-    "bmp8": mm.attach_bmp8_payload,
-    "tiff": mm.attach_tiff_payload,
-    "multiformat": mm.attach_multiformat_payload,
-    "jpeg": mm.attach_jpeg_payload,
-    "jpeg_color": mm.attach_jpeg_color_payload,
-    "jpeg_cmyk": mm.attach_jpeg_cmyk_payload,
-    "jpeg_restart": mm.attach_jpeg_restart_payload,
-    "jpeg_progressive": mm.attach_jpeg_progressive_payload,
-    "jpeg420": mm.attach_jpeg420_payload,
-    "jpeg420_progressive": mm.attach_jpeg420_progressive_payload,
-    "jpeg422": mm.attach_jpeg422_payload,
-    "media": mm.attach_media_payload,
-    "mp3_pcm": mm.attach_mp3_pcm_payload,
-    "flac_pcm": mm.attach_flac_pcm_payload,
-    "flac24": mm.attach_flac24_payload,
-    "wav8": mm.attach_wav8_payload,
-    "flac_stereo": mm.attach_flac_stereo_payload,
-    "audio_twin": mm.attach_audio_twin_payload,
-    "audio_mp3_twin": mm.attach_audio_mp3_twin_payload,
-    "video_pixel_twin": mm.attach_video_pixel_twin_payload,
-}
-
-
-def _attach(df, codec):
-    return _ATTACHERS[codec](df)
-
-
 @pytest.fixture(scope="module")
 def pin_docs(spark):
     return spark.createDataFrame(
@@ -123,5 +87,5 @@ def _digest(rows) -> str:
 
 @pytest.mark.parametrize("codec", sorted(PINS))
 def test_attacher_bytes_pinned(pin_docs, codec):
-    out = _attach(pin_docs, codec).select("doc_id", "payload").collect()
+    out = mm.attach_payload(pin_docs, codec).select("doc_id", "payload").collect()
     assert _digest(out) == PINS[codec]

@@ -316,20 +316,20 @@ def test_phash_rgba_png_equals_rgb_twin(spark):
 
 def test_multiformat_corpus_hashes_equal_ppm_twin(spark):
     """Round 11 (PNG added r12): dHashes over the MIXED-container corpus
-    (PPM/BMP/GIF/PNG by id mod 4, attach_multiformat_payload) must be
+    (PPM/BMP/GIF/PNG by id mod 4, attach_payload(df, "multiformat")) must be
     IDENTICAL per doc to a
     twin corpus storing every image as raw PPM — the container must be
     invisible to the hash, which makes the near-dup pair set identical
     by construction (pairs are a function of the hashes)."""
     from polars_sim_spark.operators.multimodal import (
-        attach_multiformat_payload,
+        attach_payload,
         synth_ppm,
     )
 
     images = _rand_images(31, 45)
     text_rows = [(i, data.decode("latin-1")) for i, _w, data in images]
     docs = spark.createDataFrame(text_rows, "doc_id long, text string")
-    mixed = ppm_phash(attach_multiformat_payload(docs), n_bands=8)
+    mixed = ppm_phash(attach_payload(docs, "multiformat"), n_bands=8)
     got = {r["doc_id"]: r["phash_hex"] for r in mixed.collect()}
 
     # the attacher reads TEXT and encodes utf-8 (bytes ≥ 0x80 widen to
@@ -523,7 +523,7 @@ def test_video_pixel_phash_cross_container_twin(spark):
     must produce IDENTICAL per-frame pixel hashes — the lossy twin
     identity the dedup row's oracle certifies."""
     from polars_sim_spark.operators.multimodal import (
-        attach_video_pixel_twin_payload,
+        attach_payload,
         video_frame_pixel_phash,
     )
 
@@ -533,7 +533,7 @@ def test_video_pixel_phash_cross_container_twin(spark):
         (2, "short"),  # below one frame: emits nothing
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
-    ph = video_frame_pixel_phash(attach_video_pixel_twin_payload(docs))
+    ph = video_frame_pixel_phash(attach_payload(docs, "video_pixel_twin"))
     rows = {(r["doc_id"], r["frame_idx"]): r["phash_hex"] for r in ph.collect()}
     assert rows, "no frames hashed"
     assert not any(d % 1_000_000 == 2 for d, _f in rows)
@@ -641,7 +641,7 @@ def test_video_pixel_vhash_fold_and_container_invariance(spark):
     """video_pixel_vhash = strict-majority fold of the per-frame pixel
     dHashes, and the AVI twin folds to the SAME hash as the raw MP4."""
     from polars_sim_spark.operators.multimodal import (
-        attach_video_pixel_twin_payload,
+        attach_payload,
         video_frame_pixel_phash,
         video_pixel_vhash,
     )
@@ -649,7 +649,7 @@ def test_video_pixel_vhash_fold_and_container_invariance(spark):
     texts = [(i, "".join(chr(33 + (i * 7 + k * 13) % 90) for k in range(64 * (1 + i % 4))))
              for i in range(8)]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
-    twins = attach_video_pixel_twin_payload(docs)
+    twins = attach_payload(docs, "video_pixel_twin")
     vh = {r["doc_id"]: r["phash_hex"] for r in video_pixel_vhash(twins, n_bands=8).collect()}
     assert len(vh) == 16
     for i in range(8):

@@ -1030,17 +1030,19 @@ def test_substring_gate_ttl(spark):
         # documented operational caveat, whose own advice is to stop()
         # once the input is through). Waiting out a flat
         # awaitTermination(120) made this ONE test ~6.5 min of suite
-        # wall (round 15). Instead: once a committed progress entry
-        # reports zero input rows, every DATA batch has committed — the
+        # wall (round 15). Instead: once a zero-input progress entry
+        # follows one that read input, the data batch has committed — the
         # sink is complete (expiry batches only drop state, they never
-        # emit) — so stop the query and read the sink.
+        # emit) — so stop the query and read the sink. A zero-input entry
+        # alone is not enough: a restarted TTL query's FIRST batch is a
+        # no-data expiry batch that runs before the new file is read.
         deadline = _time.time() + 120
         while _time.time() < deadline:
             qy.awaitTermination(2)
             if not qy.isActive:
                 break
-            lp = qy.lastProgress
-            if lp is not None and lp["numInputRows"] == 0:
+            counts = [p["numInputRows"] for p in qy.recentProgress]
+            if counts and counts[-1] == 0 and any(counts):
                 break
         if qy.isActive:
             qy.stop()
@@ -1814,11 +1816,11 @@ def test_stream_phash_match_equals_batch(spark, sf_small, tmp_path):
     import uuid as _uuid
 
     from polars_sim_spark.operators.dedup import phash_match_pairs
-    from polars_sim_spark.operators.multimodal import attach_image_payload, ppm_phash
+    from polars_sim_spark.operators.multimodal import attach_payload, ppm_phash
     from polars_sim_spark.streaming.stream_ops import stream_phash_match
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    payloads = attach_image_payload(docs).select("doc_id", "payload")
+    payloads = attach_payload(docs, "ppm").select("doc_id", "payload")
     # history = the same images under shifted ids, so every streamed
     # image has a distance-0 twin and the match set is provably nonempty
     hist_imgs = payloads.select(
@@ -2000,11 +2002,11 @@ def test_stream_phash_match_audio_equals_batch(spark, sf_small, tmp_path):
     import pytest
 
     from polars_sim_spark.operators.dedup import phash_match_pairs
-    from polars_sim_spark.operators.multimodal import attach_media_payload, wav_phash
+    from polars_sim_spark.operators.multimodal import attach_payload, wav_phash
     from polars_sim_spark.streaming.stream_ops import stream_phash_match
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    payloads = attach_media_payload(docs).select("doc_id", "payload")
+    payloads = attach_payload(docs, "media").select("doc_id", "payload")
     hist = payloads.select((F.col("doc_id") + 100000).alias("doc_id"), "payload")
 
     idx_path = str(tmp_path / "wav_idx")
@@ -2054,13 +2056,13 @@ def test_stream_phash_match_video_pixels_equals_batch(spark, sf_small, tmp_path)
 
     from polars_sim_spark.operators.dedup import phash_match_pairs
     from polars_sim_spark.operators.multimodal import (
-        attach_video_pixel_twin_payload,
+        attach_payload,
         video_pixel_vhash,
     )
     from polars_sim_spark.streaming.stream_ops import stream_phash_match
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    twins = attach_video_pixel_twin_payload(docs)
+    twins = attach_payload(docs, "video_pixel_twin")
     arrivals = twins.where(F.col("doc_id") < 1_000_000)  # MJPEG AVI side
     hist = twins.where(F.col("doc_id") >= 1_000_000)  # raw-gray MP4 side
 

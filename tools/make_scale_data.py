@@ -135,7 +135,7 @@ def replicate(spark, src: str, dst: str, replicas: int, tables: list[str] | None
                 # within-replica structure is untouched (same shift both
                 # sides of every pair).
                 #
-                # MEASURED OUTCOME (round 11, tools/bench_round11_fixture):
+                # MEASURED OUTCOME (round 11, BASELINE.md round-11 tables):
                 # replica-copy pairs are gone — same-base-doc pairs are
                 # 615 of 311,618 ×10 phash pairs (0.2%; round 10's raw
                 # copy fixture had chains everywhere) and non-degenerate
