@@ -1,99 +1,97 @@
-"""Session-scoped cache registry.
+"""Storage lifecycle of the blocks this package's operators create.
 
-Operators in this package ``persist()`` intermediate frames whose blocks
-must outlive the operator call — the returned DataFrame's lineage still
-references them, so the operator itself can never safely unpersist
-(contrast ``dedup.remove_near_dups``, which localCheckpoints past its
-postings and unpersists inline). In a one-shot job those blocks die with
-the session; in a long-lived session (streaming, a notebook, a query
-server) they would accumulate in executor storage memory until eviction
-pressure.
+Operators keep intermediates in Spark storage for one of two lifetimes:
 
-The contract: every such persist is routed through :func:`track`, and the
-session owner calls :func:`unpersist_all` whenever the frames returned by
-prior operator calls are no longer needed (typically after their terminal
-action). This frees exactly the blocks this package created — unlike
-``spark.catalog.clearCache()`` it never touches caches the application
-itself manages. Two caveats to that promise:
+* **Session lifetime** — :func:`track`. A frame ``persist()``-ed inside
+  an operator that the RETURNED frame's lineage still reads, so the
+  operator can never unpersist it itself. The session owner calls
+  :func:`unpersist_all` once the frames returned by prior operator
+  calls are no longer needed (typically after their terminal action).
+  This frees exactly the blocks this package created — unlike
+  ``spark.catalog.clearCache()`` it never touches caches the
+  application manages. Operators only ever ``track`` frames DERIVED
+  from caller input, and ``DataFrame.unpersist`` is non-cascading, so an
+  application cache on the same source survives — unless it persists
+  the identical derived plan, which Spark canonicalizes to one entry.
+* **Superseded lifetime** — :class:`Slot`. A ``localCheckpoint`` that a
+  later checkpoint of the same loop or serving path replaces: iterative
+  rounds (connected components, k-core, label propagation, PageRank,
+  BPE) and back-to-back serves (kNN graph, IVF pairs). The new
+  checkpoint truncates lineage, so nothing can read the old blocks
+  again, yet without an explicit release they wait for a driver JVM GC
+  and pile up in the block manager — back-to-back ``knn_graph`` serves
+  degraded 18→71→140 s as storage filled (BASELINE.md round-10
+  repeated-serve table).
 
-* operators only ever ``track`` frames DERIVED from caller input (a
-  ``withColumn``/``select``/``distinct`` of it, never the caller's
-  DataFrame object itself), and ``DataFrame.unpersist`` is non-cascading,
-  so a cache the application holds on the same source is a separate
-  CacheManager entry and survives ``unpersist_all``. If an application
-  persists the *identical derived plan* an operator builds internally,
-  Spark canonicalizes them to one entry and ``unpersist_all`` will drop
-  it — pathological, but possible;
-* the registry is guarded by a process-wide lock, so concurrent threads
-  sharing one SparkSession may interleave ``track``/``unpersist_all``
-  safely — but ``unpersist_all`` releases EVERY tracked frame, including
-  those another thread still computes over (whose results then silently
-  recompute from lineage). Scope one registry epoch per logical job if
-  you run operators concurrently.
+localCheckpoint blocks are per-RDD, not CacheManager entries, so neither
+:func:`unpersist_all` nor ``clearCache()`` reaches them;
+:func:`sweep_persistent_rdds` is the end-of-query sweep that does.
+
+The registry and every slot are guarded by locks, so threads sharing one
+SparkSession may call operators concurrently — but ``unpersist_all``
+releases EVERY tracked frame, including those another thread still
+computes over (they silently recompute from lineage). Scope one registry
+epoch per logical job if you run operators concurrently.
 """
 
 from __future__ import annotations
 
 import threading
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
-_CKPT_SLOTS: dict[str, object] = {}  # slot -> JVM RDD backing a localCheckpoint
 _LOCK = threading.Lock()
 
 
-def track_local_checkpoint(df: DataFrame, slot: str) -> DataFrame:
-    """Eager ``localCheckpoint`` with an explicit storage lifecycle:
-    materialize ``df``, register the backing JVM RDD under ``slot``, and
-    RELEASE the blocks of the previous checkpoint registered under the
-    same slot.
-
-    Why: localCheckpoint blocks otherwise free only when the JVM
-    garbage-collects the dropped DataFrame — measured on back-to-back
-    ``knn_graph`` serves, executor storage filled until later joins
-    spilled (18→71→140 s for identical calls, BASELINE.md round-10
-    repeated-serve table). Slot-keyed release caps a serving path at ONE
-    live checkpoint regardless of how many times it is called.
-
-    Contract: the frame a previous same-slot call returned becomes
-    INVALID once the next call checkpoints (its lineage was truncated to
-    the now-released blocks) — consume each serve's result before
-    requesting the next, which every sequential query/bench/driver loop
-    already does. Releasing is best-effort: if the JVM handle can't be
-    resolved the new checkpoint still works, the old blocks just wait
-    for GC as before."""
-    out = df.localCheckpoint(eager=True)
-    try:
-        jrdd = out._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        jrdd = None
-    with _LOCK:
-        prev = _CKPT_SLOTS.pop(slot, None)
-        if jrdd is not None:
-            _CKPT_SLOTS[slot] = jrdd
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:
-            pass
-    return out
-
-
-def release_checkpoint(slot: str) -> bool:
-    """Free the blocks of the checkpoint registered under ``slot`` (the
-    explicit end-of-life call for a caller done with a serve's result
-    before any next serve would release it implicitly). True if a
-    registered checkpoint was released."""
-    with _LOCK:
-        prev = _CKPT_SLOTS.pop(slot, None)
-    if prev is None:
+def _unpersist(rdd: object | None) -> bool:
+    """Drop ``rdd``'s blocks; False if there was nothing to drop. A
+    context already stopped has nothing left to release."""
+    if rdd is None:
         return False
     try:
-        prev.unpersist(False)
-    except Exception:
+        rdd.unpersist(False)
+    except Py4JError:
         pass
     return True
+
+
+class Slot:
+    """Holds at most ONE live ``localCheckpoint``: each
+    :meth:`checkpoint` frees the blocks of the checkpoint it replaces.
+
+    Contract: the replaced checkpoint must not be read by anything still
+    pending — that includes ``df``'s own lineage when ``eager=False``
+    (the old blocks are freed before the new checkpoint materializes).
+    A loop-local slot satisfies this by construction; for a module-level
+    serving slot it means the previous serve's result must be consumed
+    before the next serve is built, which every sequential query loop
+    does. The final checkpoint stays live until :meth:`release`, or until
+    a JVM GC once the slot and every frame reading it are dropped."""
+
+    def __init__(self) -> None:
+        self._rdd: object | None = None
+        self._lock = threading.Lock()
+
+    def checkpoint(self, df: DataFrame, *, eager: bool = True) -> DataFrame:
+        """``df.localCheckpoint(eager)``, keeping its backing RDD and
+        releasing the one this slot held before."""
+        out = df.localCheckpoint(eager)
+        try:
+            rdd = out._jdf.queryExecution().analyzed().rdd()
+        except AttributeError:  # no JVM handle: blocks wait for GC
+            rdd = None
+        with self._lock:
+            prev, self._rdd = self._rdd, rdd
+        _unpersist(prev)
+        return out
+
+    def release(self) -> bool:
+        """Free the current checkpoint; True if the slot held one."""
+        with self._lock:
+            prev, self._rdd = self._rdd, None
+        return _unpersist(prev)
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -120,43 +118,9 @@ def unpersist_all(blocking: bool = False) -> int:
         try:
             df.unpersist(blocking)
             n += 1
-        except Exception:
-            # A frame whose SparkSession already stopped has nothing to
-            # release; never let cleanup raise.
-            pass
+        except Py4JError:
+            pass  # its session already stopped: nothing to release
     return n
-
-
-def chain_local_checkpoint(df: DataFrame, prev: object | None) -> tuple[DataFrame, object | None]:
-    """Eager ``localCheckpoint`` for ITERATIVE LOOP bodies: materialize
-    ``df``, then release the blocks of the PREVIOUS round's checkpoint
-    (optimization round 14, guide §5 — storage blocks are execution
-    memory's competitor).
-
-    A loop that checkpoints each round (connected_components, k_core,
-    label_propagation, pagerank) supersedes round r's blocks the moment
-    round r+1 is materialized: the new checkpoint truncates lineage, so
-    nothing can ever read the old blocks again. Without an explicit
-    release they wait for a driver JVM GC + ContextCleaner pass (py4j
-    holds the Python-side references), and in a long multi-query session
-    the dead rounds pile up in the block manager — measured in the bench
-    session as rising GC time on the checkpoint-heavy rows
-    (graph_part_communities: 34.7 s GC of 194 s task time at rep 2).
-
-    Contract: ``prev`` must be a handle whose blocks are referenced ONLY
-    through lineage that ``df`` replaces — i.e. pass the handle returned
-    by the previous same-loop call, never a checkpoint something else
-    still reads. Returns ``(checkpointed_df, handle)``; release of the
-    final round's handle is the caller's choice (usually: don't — the
-    returned frame still serves it).
-    """
-    out = df.localCheckpoint(eager=True)
-    try:
-        handle = out._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        handle = None
-    release_handle(prev)
-    return out, handle
 
 
 def materialize_count(df: DataFrame) -> int:
@@ -194,48 +158,17 @@ def num_partitions(df: DataFrame) -> int:
     return int(qe.toRdd().getNumPartitions())
 
 
-def checkpoint_handle(df: DataFrame) -> object | None:
-    """JVM RDD handle backing an already-materialized localCheckpoint of
-    ``df`` (for a later :func:`release_handle`), or None if unresolvable."""
-    try:
-        return df._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        return None
-
-
-def release_handle(handle: object | None) -> None:
-    """Best-effort block release of a JVM RDD handle from
-    :func:`chain_local_checkpoint`. Never raises."""
-    if handle is None:
-        return
-    try:
-        handle.unpersist(False)
-    except Exception:
-        pass
-
-
 def sweep_persistent_rdds(spark) -> int:
     """Unpersist EVERY persistent RDD in the session — the end-of-query
     sweep for a session owner (bench loop, driver harness) that knows no
-    cross-query frame survives. localCheckpoint blocks are per-RDD (not
-    CacheManager entries), so neither ``unpersist_all`` nor
-    ``spark.catalog.clearCache()`` reaches them; this does. NEVER call
-    it while a returned-but-unconsumed checkpointed frame is still
-    pending — a localCheckpoint's lineage is truncated, so dropped
-    blocks cannot recompute. Returns the number of RDDs released."""
-    try:
-        jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-        it = jmap.values().iterator()
-        n = 0
-        while it.hasNext():
-            try:
-                it.next().unpersist(False)
-                n += 1
-            except Exception:
-                pass
-    except Exception:
+    cross-query frame survives. NEVER call it while a returned-but-
+    unconsumed checkpointed frame is still pending — a localCheckpoint's
+    lineage is truncated, so dropped blocks cannot recompute. Returns
+    the number of RDDs released (0 on a stopped context)."""
+    jsc = spark.sparkContext._jsc
+    if jsc is None:
         return 0
+    n = sum(_unpersist(rdd) for rdd in list(jsc.getPersistentRDDs().values()))
     with _LOCK:
-        _CKPT_SLOTS.clear()
         _TRACKED.clear()
     return n

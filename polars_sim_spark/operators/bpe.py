@@ -39,6 +39,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from polars_sim_spark import cache as cache_registry
+
+#: Merges between vocab-table checkpoints in :func:`bpe_fit` (bounds plan
+#: growth; each checkpoint frees the blocks of the one it supersedes).
+_CHECKPOINT_EVERY = 5
+
 #: Pre-tokenizer: lowercase letter runs (BPE fits within-word; the
 #: digit/punctuation classes of text_bpe_token_count's BPE-ish counter
 #: are atomic tokens there and would be atomic here too — letters are
@@ -158,7 +164,6 @@ def bpe_fit(
     *,
     num_merges: int = 20,
     word_pattern: str = WORD_PATTERN,
-    checkpoint_every: int = 5,
     batch_size: int = 8,
     stats: dict | None = None,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
@@ -182,11 +187,11 @@ def bpe_fit(
     The per-round ``.collect()`` receives a bounded handful of rows
     (3·batch + 1) — driver-coordinated iteration in the Lloyd/k-means
     style, not a data collect. Lineage is truncated every
-    ``checkpoint_every`` merges, bounding plan growth. ``stats``, if
-    given, receives {"rounds": r, "merges": m}."""
-    wf = word_frequency_table(docs, text_col, word_pattern).localCheckpoint(eager=True)
+    ``_CHECKPOINT_EVERY`` merges. ``stats``, if given, receives
+    {"rounds": r, "merges": m}."""
+    vocab = cache_registry.Slot()
+    wf = vocab.checkpoint(word_frequency_table(docs, text_col, word_pattern))
     merges: list[tuple[str, str]] = []
-    last_ckpt = wf
     rounds = 0
     merges_since_ckpt = 0
     while len(merges) < num_merges:
@@ -217,10 +222,8 @@ def bpe_fit(
         merges.extend(batch)
         wf = wf.withColumn("syms", _apply_merges_expr(F.col("syms"), batch))
         merges_since_ckpt += len(batch)
-        if merges_since_ckpt >= checkpoint_every:
-            nxt = wf.localCheckpoint(eager=True)
-            last_ckpt.unpersist()
-            wf = last_ckpt = nxt
+        if merges_since_ckpt >= _CHECKPOINT_EVERY:
+            wf = vocab.checkpoint(wf)
             merges_since_ckpt = 0
     if stats is not None:
         stats["rounds"] = rounds

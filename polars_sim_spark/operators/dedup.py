@@ -1339,7 +1339,6 @@ def connected_components(
     src_col: str = "l_id",
     dst_col: str = "r_id",
     max_iter: int = 64,
-    rounds_per_check: int = 1,
 ) -> DataFrame:
     """(id, cluster_id): connected components by iterative min-label
     propagation — the dedup clustering step that turns near-dup PAIRS into
@@ -1373,21 +1372,13 @@ def connected_components(
     a short-circuiting ``isEmpty`` filter over the just-checkpointed
     blocks — replacing a per-round join + full count job. Measured ~10%
     off the CC-dominated contract queries at sf0.1 (head-to-head vs the
-    round-3 implementation in one session).
-
-    ``rounds_per_check`` probes only every k-th round. The default is 1:
-    probing less often means running whole EXTRA propagation rounds
-    (neighbor-min join over the full edge set + two label joins) before
-    noticing convergence, and on the converge-in-1-2-rounds graphs real
-    dedup produces (tiny clusters) that measured ~25% SLOWER at k=2 than
-    probing every round — "pointer jumping makes extra rounds nearly
-    free" is false once the edge set dwarfs the label table. Raise it
-    only for graphs known to need many rounds (long chains), where a
-    probe per round is the waste instead. The driver only reads the
-    converged flag; all data stays distributed.
+    round-3 implementation in one session). The probe runs every round:
+    probing every second round measured ~25% SLOWER on the
+    converge-in-1-2-rounds graphs real dedup produces (each skipped
+    probe is a whole extra propagation round before convergence is
+    noticed). The driver only reads the converged flag; all data stays
+    distributed.
     """
-    if rounds_per_check < 1:
-        raise ValueError(f"rounds_per_check must be >= 1, got {rounds_per_check}")
     both = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).unionByName(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
@@ -1480,74 +1471,67 @@ def connected_components(
     # union-find + node-keyed min-combine is strictly stronger than the
     # identity-start neighbor-min it replaced, at the same job count).
     labels: DataFrame = seed.select("id", "cluster_id")
-    done = 0
     # Superseded-round block release (optimization round 14): each
     # round's checkpoint makes the previous round's blocks unreachable
     # (lineage is truncated), so they are freed inline instead of
-    # waiting for a driver GC + ContextCleaner pass. The seed and the
-    # final round are never released (prev starts None; the returned
-    # frame reads the last checkpoint).
-    prev_ckpt = None
-    while done < max_iter:
+    # waiting for a driver GC + ContextCleaner pass. The seed is not in
+    # the slot, and the final round stays live (the returned frame
+    # reads it).
+    rounds = cache_registry.Slot()
+    for done in range(int(max_iter)):
         cur = labels.withColumn("__old", F.col("cluster_id"))
-        for r in range(min(rounds_per_check, max_iter - done)):
-            # 1. Neighbor-min: label := min(own, min over neighbors').
-            nbr = (
-                both.join(cur, both.src == cur.id)
-                .groupBy("dst")
-                .agg(F.min("cluster_id").alias("nbr_min"))
-            )
-            stepped = cur.join(nbr, cur.id == nbr.dst, "left").select(
-                "id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-                "__old",
-            )
-            # 2. Pointer jump: label := label(label). cluster_id is always
-            # an existing node id, so the join is total; doubles the
-            # propagation distance per round.
-            lab2 = stepped.select(
-                F.col("id").alias("__pid"), F.col("cluster_id").alias("__plab")
-            )
-            nxt = stepped.join(lab2, stepped.cluster_id == lab2.__pid).select(
-                "id", F.least("cluster_id", "__plab").alias("cluster_id"), "__old"
-            )
-            # STATS SANITIZATION (every 6th round): Spark 4's
-            # localCheckpoint (rewriteStatsAndConstraints) stores the
-            # plan's ESTIMATED sizeInBytes on the new LogicalRDD, and a
-            # CC round's estimate is a PRODUCT over the previous round's
-            # stored stat (~3 references) — so the stat's bit length
-            # TRIPLES per round, and on graphs needing many rounds (a
-            # mutual-kNN graph with a 968-node eccentricity-54 component
-            # measured 32 rounds) the driver ends up burning minutes per
-            # checkpoint in BigInteger multiplies before any task
-            # launches (root-caused via jstack:
-            # SizeInBytesOnlyStatsPlanVisitor under Dataset.checkpoint).
-            # Materializing through the SQL cache first makes the
-            # checkpoint store the cache's REAL size, resetting growth;
-            # doing it every 6th round caps the estimate near 3^6× the
-            # base (~tens of kilobits — microseconds of BigInt math)
-            # while converge-in-a-few-rounds graphs — the common dedup
-            # shape — never pay the extra materialization.
-            if done % 6 == 5:
-                nxt = nxt.persist()
-                nxt.count()
-                cur, prev_ckpt = cache_registry.chain_local_checkpoint(
-                    nxt, prev_ckpt
-                )
-                nxt.unpersist()
-            else:
-                cur, prev_ckpt = cache_registry.chain_local_checkpoint(
-                    nxt, prev_ckpt
-                )
-            done += 1
+        # 1. Neighbor-min: label := min(own, min over neighbors').
+        nbr = (
+            both.join(cur, both.src == cur.id)
+            .groupBy("dst")
+            .agg(F.min("cluster_id").alias("nbr_min"))
+        )
+        stepped = cur.join(nbr, cur.id == nbr.dst, "left").select(
+            "id",
+            F.least(
+                F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
+            ).alias("cluster_id"),
+            "__old",
+        )
+        # 2. Pointer jump: label := label(label). cluster_id is always
+        # an existing node id, so the join is total; doubles the
+        # propagation distance per round.
+        lab2 = stepped.select(
+            F.col("id").alias("__pid"), F.col("cluster_id").alias("__plab")
+        )
+        nxt = stepped.join(lab2, stepped.cluster_id == lab2.__pid).select(
+            "id", F.least("cluster_id", "__plab").alias("cluster_id"), "__old"
+        )
+        # STATS SANITIZATION (every 6th round): Spark 4's
+        # localCheckpoint (rewriteStatsAndConstraints) stores the
+        # plan's ESTIMATED sizeInBytes on the new LogicalRDD, and a
+        # CC round's estimate is a PRODUCT over the previous round's
+        # stored stat (~3 references) — so the stat's bit length
+        # TRIPLES per round, and on graphs needing many rounds (a
+        # mutual-kNN graph with a 968-node eccentricity-54 component
+        # measured 32 rounds) the driver ends up burning minutes per
+        # checkpoint in BigInteger multiplies before any task
+        # launches (root-caused via jstack:
+        # SizeInBytesOnlyStatsPlanVisitor under Dataset.checkpoint).
+        # Materializing through the SQL cache first makes the
+        # checkpoint store the cache's REAL size, resetting growth;
+        # doing it every 6th round caps the estimate near 3^6× the
+        # base (~tens of kilobits — microseconds of BigInt math)
+        # while converge-in-a-few-rounds graphs — the common dedup
+        # shape — never pay the extra materialization.
+        if done % 6 == 5:
+            nxt = nxt.persist()
+            nxt.count()
+            cur = rounds.checkpoint(nxt)
+            nxt.unpersist()
+        else:
+            cur = rounds.checkpoint(nxt)
         labels = cur.select("id", "cluster_id")
         if cur.where(F.col("cluster_id") != F.col("__old")).isEmpty():
             return _with_isolated(labels)
-    # The loop's changed-check compares against labels as of the START of
-    # the last rounds_per_check block, so a fixpoint reached exactly on
-    # round max_iter still shows "changed". Confirm with one extra
+    # The last round's changed-check cannot tell whether that change
+    # reached the fixpoint, so a fixpoint reached exactly on round
+    # max_iter still shows "changed". Confirm with one extra
     # NEIGHBOR-MIN probe (no new propagation is counted): on symmetric
     # edges, no-change under neighbor-min ⇒ label(v) ≤ label(u) for every
     # neighbor pair in both directions ⇒ labels constant per component,
@@ -1636,9 +1620,11 @@ def update_entity_labels(
         .where(F.col("l_id") != F.col("r_id"))
     )
     # e is referenced by the node derivation AND every CC round (or the
-    # collect below) — materialize once (the multiply-referenced rule).
-    e = e.localCheckpoint(eager=True)
-    if e.count() <= small_quotient_max_edges:
+    # collect below) — materialize once (the multiply-referenced rule),
+    # fused with the size probe: the lazy checkpoint's blocks persist
+    # during the count's single job.
+    e = e.localCheckpoint(eager=False)
+    if cache_registry.materialize_count(e) <= small_quotient_max_edges:
         # Driver union-find over the bounded quotient edge set. Only
         # edge-incident nodes need a mapping row: the relabel joins
         # below coalesce unmapped ids to themselves, which is exactly
@@ -1894,6 +1880,11 @@ def _verify_cosine_pairs(
     )
 
 
+#: Backing checkpoint of the last :func:`embedding_ivf_near_dup_pairs`
+#: call's centroid assignment — one live across back-to-back calls.
+_IVF_ASSIGNED = cache_registry.Slot()
+
+
 def embedding_ivf_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -1960,6 +1951,9 @@ def embedding_ivf_near_dup_pairs(
     within-hot-cell recall is traded — the same trade ``nprobe`` makes,
     one level down. Work per hot cell drops from size² to
     Σ sub² + size·⌈size/cap⌉ (sub-centroid scoring).
+
+    Back-to-back calls share one checkpoint slot (``_IVF_ASSIGNED``):
+    consume each call's result before making the next call.
     """
     from polars_sim_spark.operators.similarity import (
         _centroid_scores,
@@ -2018,8 +2012,10 @@ def embedding_ivf_near_dup_pairs(
     # path's analysis/codegen blow-up — an A/B with persist() measured
     # 41 jobs / 11.2 s task time (AQE re-plans every InMemoryTableScan
     # reference) vs 17 / 5.8 before and 12 / 4.9 with the checkpoint.
+    # The module-level slot releases the PREVIOUS call's `assigned` (the
+    # knn serve's back-to-back contract, stated in the docstring).
     if not df.isStreaming:
-        assigned = assigned.localCheckpoint(eager=False)
+        assigned = _IVF_ASSIGNED.checkpoint(assigned, eager=False)
     if max_cell_fraction is None:
         a = assigned.select("c_id", F.col("__vid").alias("l_id"))
         b = assigned.select("c_id", F.col("__vid").alias("r_id"))

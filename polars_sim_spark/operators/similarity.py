@@ -1063,6 +1063,11 @@ def ann_topk_ivf_prebuilt(
     )
 
 
+#: Backing checkpoint of the last :func:`knn_graph_ivf_prebuilt` serve —
+#: one live across back-to-back serves.
+_KNN_SERVE = cache_registry.Slot()
+
+
 def knn_graph_ivf_prebuilt(
     spark,
     path: str,
@@ -1214,9 +1219,9 @@ def knn_graph_ivf_prebuilt(
     # back-to-back serves degraded 18→71→140 s as storage filled
     # (BASELINE.md). A caller holding two serves' outputs live at once
     # must consume the first before the second call (every sequential
-    # query loop does); cache.release_checkpoint("knn_graph_serve")
-    # frees the last serve explicitly.
-    knn = cache_registry.track_local_checkpoint(knn, slot="knn_graph_serve")
+    # query loop does); _KNN_SERVE.release() frees the last serve
+    # explicitly.
+    knn = _KNN_SERVE.checkpoint(knn)
     if mutual:
         back = knn.select(
             F.col("n_id").alias("q_id"), F.col("q_id").alias("n_id")

@@ -102,6 +102,18 @@ def test_bpe_batched_equals_sequential_with_fewer_rounds(spark, sf_small):
     assert st_b["merges"] == st_s["merges"] == 20
 
 
+def test_bpe_fit_releases_superseded_vocab_checkpoints(spark, sf_small):
+    """Each vocab checkpoint frees the one it supersedes: a 20-merge fit
+    (several mid-fit checkpoints) leaves at most the final one persistent.
+    JVM GC can only lower the count, never raise it."""
+    from polars_sim_spark import cache as cache_registry
+
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(200)
+    cache_registry.sweep_persistent_rdds(spark)
+    bpe_fit(docs, num_merges=20)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= 1
+
+
 def test_bpe_merge_overlap_semantics(spark):
     """'aaa' under merge (a,a) → [aa, a]: greedy left-to-right,
     non-overlapping — the exact reference behavior."""

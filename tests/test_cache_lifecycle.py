@@ -135,3 +135,36 @@ def test_materialize_count_surfaces_job_failure_without_retry(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_slot_keeps_one_live_checkpoint(spark):
+    """A Slot frees each superseded checkpoint: three checkpoints leave
+    only the last one live; release() frees it (True) and then finds the
+    slot empty (False); a lazy slot checkpoint fused with
+    materialize_count still runs exactly one job."""
+    slot = cache_registry.Slot()
+    handles = []
+    for i in range(3):
+        out = slot.checkpoint(spark.range(10 + i))
+        handles.append(slot._rdd)
+        assert out.count() == 10 + i
+    levels = [h.getStorageLevel() for h in handles]
+    assert [lvl.useMemory() or lvl.useDisk() for lvl in levels] == [False, False, True]
+
+    assert slot.release() is True
+    lvl = handles[-1].getStorageLevel()
+    assert not (lvl.useMemory() or lvl.useDisk())
+    assert slot.release() is False
+
+    sc = spark.sparkContext
+    group = "slot-lazy-checkpoint"
+    sc.setJobGroup(group, "lazy slot checkpoint + materialize_count")
+    try:
+        doubled = spark.range(100).select((F.col("id") * 2).alias("x"))
+        lazy = slot.checkpoint(doubled, eager=False)
+        assert cache_registry.materialize_count(lazy) == 100
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert lazy.agg(F.sum("x")).first()[0] == 9900
+    assert slot.release() is True

@@ -690,17 +690,10 @@ def test_embedding_ivf_star_contraction_components_identical(spark, sf_small):
             min_cosine=0.35, num_centroids=16, nprobe=2, assignment="expr",
             max_cell_fraction=cap,
         )
+        # Each call's pairs are consumed before the next call: the next
+        # call releases this one's checkpointed centroid assignment.
         raw = dedup.embedding_ivf_near_dup_pairs(emb, "vec_id", "embedding", **kw)
-        bucketed = dedup.embedding_ivf_near_dup_pairs(
-            emb, "vec_id", "embedding", with_bucket=True, **kw
-        )
         raw_pairs = sorted((r["l_id"], r["r_id"]) for r in raw.collect())
-        assert raw_pairs == sorted(
-            (r["l_id"], r["r_id"]) for r in bucketed.collect()
-        ), f"cap={cap}"
-        contracted = dedup.star_contract_pairs(
-            bucketed.select("l_id", "r_id", "__bucket")
-        )
         nodes = emb.select(F.col("vec_id").alias("id"))
         cc_raw = {
             r["id"]: r["cluster_id"]
@@ -708,6 +701,15 @@ def test_embedding_ivf_star_contraction_components_identical(spark, sf_small):
                 nodes, raw.select("l_id", "r_id")
             ).collect()
         }
+        bucketed = dedup.embedding_ivf_near_dup_pairs(
+            emb, "vec_id", "embedding", with_bucket=True, **kw
+        )
+        assert raw_pairs == sorted(
+            (r["l_id"], r["r_id"]) for r in bucketed.collect()
+        ), f"cap={cap}"
+        contracted = dedup.star_contract_pairs(
+            bucketed.select("l_id", "r_id", "__bucket")
+        )
         cc_con = {
             r["id"]: r["cluster_id"]
             for r in dedup.connected_components(nodes, contracted).collect()

@@ -346,8 +346,9 @@ def test_label_propagation_preserves_caller_checkpoint(spark):
     from polars_sim_spark.operators.graph import label_propagation
 
     pairs = list(itertools.combinations(range(5), 2)) + [(5, 6), (6, 7)]
-    caller_edges = _edges_df(spark, pairs).localCheckpoint()
-    caller_handle = cache_registry.checkpoint_handle(caller_edges)
+    caller = cache_registry.Slot()
+    caller_edges = caller.checkpoint(_edges_df(spark, pairs))
+    caller_handle = caller._rdd
     assert caller_handle is not None
     before = sorted((r.a, r.b) for r in caller_edges.collect())
 

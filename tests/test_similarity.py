@@ -782,10 +782,10 @@ def test_knn_graph_serve_releases_previous_checkpoint(spark, sf_small, tmp_path)
     """VERDICT r10 #2: back-to-back serves must not accumulate
     localCheckpoint blocks (measured 18→71→140 s degradation as storage
     filled). Slot-keyed lifecycle: serve N+1 releases serve N's backing
-    RDD; release_checkpoint frees the last one explicitly. Asserted on
+    RDD; the slot's release() frees the last one explicitly. Asserted on
     storage levels (noise-free), not wall-clock."""
-    from polars_sim_spark import cache
     from polars_sim_spark.operators.similarity import (
+        _KNN_SERVE,
         knn_graph_ivf_prebuilt,
         materialize_ivf_index,
     )
@@ -796,13 +796,13 @@ def test_knn_graph_serve_releases_previous_checkpoint(spark, sf_small, tmp_path)
 
     e1 = knn_graph_ivf_prebuilt(spark, path, k=3, nprobe=2)
     n1 = e1.count()  # consume serve 1 before serve 2 (the documented contract)
-    j1 = cache._CKPT_SLOTS["knn_graph_serve"]
+    j1 = _KNN_SERVE._rdd
     lvl1 = j1.getStorageLevel()
     assert lvl1.useMemory() or lvl1.useDisk()  # blocks live after serve 1
 
     e2 = knn_graph_ivf_prebuilt(spark, path, k=3, nprobe=2)
     n2 = e2.count()
-    j2 = cache._CKPT_SLOTS["knn_graph_serve"]
+    j2 = _KNN_SERVE._rdd
     assert j2.id() != j1.id()
     lvl1b = j1.getStorageLevel()
     assert not (lvl1b.useMemory() or lvl1b.useDisk())  # serve 1 released
@@ -810,10 +810,33 @@ def test_knn_graph_serve_releases_previous_checkpoint(spark, sf_small, tmp_path)
     assert lvl2.useMemory() or lvl2.useDisk()
     assert n1 == n2  # identical serves, identical edges
 
-    assert cache.release_checkpoint("knn_graph_serve") is True
+    assert _KNN_SERVE.release() is True
     lvl2b = j2.getStorageLevel()
     assert not (lvl2b.useMemory() or lvl2b.useDisk())
-    assert cache.release_checkpoint("knn_graph_serve") is False  # empty slot
+    assert _KNN_SERVE.release() is False  # empty slot
+
+
+def test_ivf_near_dup_pairs_releases_previous_assignment(spark, sf_small):
+    """Back-to-back IVF pair calls keep ONE live `assigned` checkpoint:
+    the second call releases the first call's backing RDD (the
+    knn-serve contract above, for embedding_ivf_near_dup_pairs)."""
+    from polars_sim_spark.operators import dedup
+
+    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
+    kw = dict(min_cosine=0.35, num_centroids=8, nprobe=2, assignment="expr")
+
+    n1 = dedup.embedding_ivf_near_dup_pairs(emb, "vec_id", "embedding", **kw).count()
+    j1 = dedup._IVF_ASSIGNED._rdd
+    lvl1 = j1.getStorageLevel()
+    assert lvl1.useMemory() or lvl1.useDisk()  # blocks live after call 1
+
+    n2 = dedup.embedding_ivf_near_dup_pairs(emb, "vec_id", "embedding", **kw).count()
+    j2 = dedup._IVF_ASSIGNED._rdd
+    assert j2.id() != j1.id()
+    lvl1b = j1.getStorageLevel()
+    assert not (lvl1b.useMemory() or lvl1b.useDisk())  # call 1 released
+    assert n1 == n2
+    assert dedup._IVF_ASSIGNED.release() is True
 
 
 def test_entity_label_store_equals_fresh_rebuild(spark):
