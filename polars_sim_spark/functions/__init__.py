@@ -1,7 +1,6 @@
 from polars_sim_spark.functions.text import (
     normalize_string_col,
     trigram_tokens,
-    trigram_token_ids,
     word_shingles,
 )
 from polars_sim_spark.functions.vectors import cosine_similarity, dot, l2_norm
@@ -9,7 +8,6 @@ from polars_sim_spark.functions.vectors import cosine_similarity, dot, l2_norm
 __all__ = [
     "normalize_string_col",
     "trigram_tokens",
-    "trigram_token_ids",
     "word_shingles",
     "cosine_similarity",
     "dot",

@@ -69,24 +69,6 @@ def trigram_tokens(s: Column | str) -> Column:
     return let_col(_as_col(s), body)
 
 
-def trigram_id(g: Column) -> Column:
-    """Dense id of an ``[a-z]{3}`` trigram in the fixed 26³ vocabulary.
-
-    The reference builds a ``HashMap`` once (``src/cossim.rs:14-25``); the
-    same mapping is pure arithmetic on char codes, so no dictionary or
-    fitting step is needed: ``id = (c0-97)*676 + (c1-97)*26 + (c2-97)``.
-    """
-    c0 = F.ascii(F.substring(g, 1, 1)) - F.lit(97)
-    c1 = F.ascii(F.substring(g, 2, 1)) - F.lit(97)
-    c2 = F.ascii(F.substring(g, 3, 1)) - F.lit(97)
-    return (c0 * F.lit(676) + c1 * F.lit(26) + c2).cast("long")
-
-
-def trigram_token_ids(s: Column | str) -> Column:
-    """Distinct in-vocab trigram ids of ``s`` as ``array<long>`` (0..17575)."""
-    return F.transform(trigram_tokens(s), trigram_id)
-
-
 def _max_run(arr: Column) -> Column:
     """Length of the longest run of consecutive equal elements in ``arr``
     (0 for an empty array) — a single ``aggregate`` HOF pass carrying

@@ -37,6 +37,10 @@ declare exactly that and let Catalyst/Tungsten choose the execution:
   heuristic (``join.py:107-114``) we pick by size: broadcast when the
   right side is small enough.
 
+One scorer serves every entry point: ``_postings`` builds the right side
+in the shape :func:`materialize_token_postings` stores, and
+``_score_topn`` scores it for the live join and the postings serve alike.
+
 Scale notes (100 TB): the trigram vocabulary is only 26³ = 17,576, so
 ultra-frequent tokens create join fan-out skew. Mitigations built in:
 AQE skew-join splitting is enabled by the session factory, and
@@ -79,20 +83,19 @@ def _tokens_long(
     df: DataFrame,
     key: str,
     id_col: str,
-    out_id: str,
     apply_word_normalization: bool,
     n_tok_name: str,
 ) -> DataFrame:
-    """(id, key) → exploded posting list (out_id, n_tok, token)."""
+    """(id, key) → exploded posting list (id, n_tok, token)."""
     s: Column = F.col(key)
     if apply_word_normalization:
         s = normalize_string_col(s)
     toks = trigram_tokens(s)
     return (
-        df.select(F.col(id_col).alias(out_id), toks.alias("__toks"))
+        df.select(F.col(id_col), toks.alias("__toks"))
         .where(F.size("__toks") > 0)
         .select(
-            out_id,
+            id_col,
             F.size("__toks").alias(n_tok_name),
             F.explode("__toks").alias("__token"),
         )
@@ -178,6 +181,156 @@ def build_idf_weights(
     return weights, n_docs, w0 * w0
 
 
+def _weigh(tokens: DataFrame, idf: tuple[DataFrame, int], *keep: str) -> DataFrame:
+    """Attach each posting's squared idf weight ``__w2`` (``w0_sq`` for a
+    token the fit never saw); the weight table is ≤ 26³ rows, so broadcast."""
+    weights, w0_sq = idf
+    return tokens.join(F.broadcast(weights), "__token", "left").select(
+        *keep, F.coalesce("__w2", F.lit(int(w0_sq))).alias("__w2")
+    )
+
+
+def _postings(
+    df: DataFrame,
+    on: str,
+    id_col: str,
+    apply_word_normalization: bool,
+    idf: tuple[DataFrame, int] | None = None,
+) -> DataFrame:
+    """The right-side posting list, in exactly the columns
+    :func:`materialize_token_postings` stores: ``(id, __nr, __token)``
+    for binary weights, ``(id, __nr, __token, __w2, __nr2)`` under
+    TF-IDF (``__nr2`` = the row's squared doc norm, denormalized onto
+    each posting). Norms are attached here, before any ``max_token_df``
+    pruning, so a pruned posting list keeps every row's FULL norm."""
+    rt = _tokens_long(df, on, id_col, apply_word_normalization, "__nr")
+    if idf is None:
+        return rt
+    rtw = _weigh(rt, idf, id_col, "__nr", "__token")
+    nr2 = rtw.groupBy(id_col).agg(F.sum("__w2").alias("__nr2"))
+    return rtw.join(nr2, id_col)
+
+
+def _top_n(scored: DataFrame, left_id: str, right_id: str, top_n: int, ties: bool = False) -> DataFrame:
+    """Per-left-row top-n (src/cossim.rs:110-133), tiebreak sim DESC,
+    right_id ASC; Catalyst rewrites rank<=k into a WindowGroupLimit
+    (partial top-k before the shuffle, like csr.rs:213-269). ``ties``
+    keeps boundary ties (rank) for the distinct-key pre-pass."""
+    if ties:
+        w = Window.partitionBy(left_id).orderBy(F.desc("sim"))
+        rankf = F.rank()
+    else:
+        w = Window.partitionBy(left_id).orderBy(F.desc("sim"), F.asc(right_id))
+        rankf = F.row_number()
+    return (
+        scored.withColumn("__rn", rankf.over(w))
+        .where(F.col("__rn") <= top_n)
+        .drop("__rn")
+    )
+
+
+def _score_topn(
+    lt: DataFrame,
+    rpost: DataFrame,
+    *,
+    left_id: str,
+    right_id: str,
+    normalization: str,
+    top_n: int,
+    idf: tuple[DataFrame, int] | None,
+    ties: bool = False,
+) -> DataFrame:
+    """The one scoring core: left token postings ``lt`` (``_tokens_long``)
+    ⋈ right postings ``rpost`` (``_postings`` shape, live or stored) →
+    per-pair aggregate → sim → top-n window."""
+    if idf is None:
+        # Binary weights ⇒ the sparse dot product (src/cossim.rs:88-108)
+        # is a plain overlap count per (row, col) pair; with binary
+        # weights ‖x‖₂ = √|T(x)|.
+        probe, dot, nl, nr = lt, "__overlap", "__nl", "__nr"
+        aggs = [F.count(F.lit(1)).alias(dot), F.first(nl).alias(nl)]
+    else:
+        # TF-IDF (the reference's declared roadmap, src/cossim.rs:45-48):
+        # each distinct trigram weighs idf(t) in exact micro-units, so a
+        # pair term is the stored posting's exact int64 idf(t)² and norms
+        # are exact int64 sums — oracle-reproducible bit for bit. The
+        # left norm is a map-side-combining agg over the probe postings.
+        ltw = _weigh(lt, idf, left_id, "__token")
+        probe, dot, nl, nr = ltw.drop("__w2"), "__dot", "__nl2", "__nr2"
+        aggs = [F.sum("__w2").alias(dot)]
+    pairs = (
+        probe.join(rpost, "__token")
+        .groupBy(left_id, right_id)
+        .agg(*aggs, F.first(nr).alias(nr))
+    )
+    if idf is not None:
+        pairs = pairs.join(ltw.groupBy(left_id).agg(F.sum("__w2").alias(nl)), left_id)
+    if normalization == "l2":
+        # L2 row-normalization (src/csr.rs:194-210) folded into one final
+        # multiply; exact ints → IEEE-deterministic, identical in the oracle.
+        sim = F.col(dot) / (F.sqrt(F.col(nl)) * F.sqrt(F.col(nr)))
+    elif idf is None:
+        sim = F.col(dot).cast("double")
+    else:
+        # Weighted overlap in natural idf units (micro² → unit).
+        sim = F.col(dot) / F.lit(float(IDF_MICRO) ** 2)
+    return _top_n(pairs.select(left_id, right_id, sim.alias("sim")), left_id, right_id, top_n, ties)
+
+
+def _live_score(
+    left: DataFrame,
+    right: DataFrame,
+    left_on: str,
+    right_on: str,
+    left_id: str,
+    right_id: str,
+    *,
+    normalization: str,
+    apply_word_normalization: bool,
+    strategy: str,
+    max_token_df: int | None,
+    top_n: int,
+    idf: tuple[DataFrame, int] | None,
+    ties: bool = False,
+) -> DataFrame:
+    """Tokenize both sides and score (``strategy`` already resolved)."""
+    lt = _tokens_long(left, left_on, left_id, apply_word_normalization, "__nl")
+    rpost = _postings(right, right_on, right_id, apply_word_normalization, idf)
+    if max_token_df is not None:
+        # Prune ultra-frequent tokens on the right side (skew guard). The
+        # norms rode in with the postings, so pruning only removes overlap
+        # terms: a doc containing a hot token keeps its true norm and its
+        # sims can only shrink, never inflate.
+        hot = (
+            rpost.groupBy("__token")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .where(F.col("__df") > max_token_df)
+            .select("__token")
+        )
+        rpost = rpost.join(F.broadcast(hot), "__token", "left_anti")
+    if strategy == "broadcast":
+        rpost = F.broadcast(rpost)
+    return _score_topn(
+        lt, rpost, left_id=left_id, right_id=right_id,
+        normalization=normalization, top_n=top_n, idf=idf, ties=ties,
+    )
+
+
+def _validate(normalization: str, top_n: int, weighting: str, left_id: str, right_id: str) -> None:
+    """Argument checks shared by the live and the served entry points."""
+    if normalization not in ("l2", "count"):
+        raise ValueError(f"normalization must be 'l2' or 'count', got {normalization!r}")
+    if top_n < 1:
+        raise ValueError("top_n must be >= 1")
+    if weighting not in ("binary", "tfidf"):
+        raise ValueError(f"weighting must be 'binary' or 'tfidf', got {weighting!r}")
+    if left_id == right_id:
+        raise ValueError(
+            f"left_id and right_id must be distinct column names (both {left_id!r}); "
+            "alias one side first, or use join_sim() which handles the rename"
+        )
+
+
 def similarity_mapping(
     left: DataFrame,
     right: DataFrame,
@@ -195,8 +348,6 @@ def similarity_mapping(
     weighting: str = "binary",
     idf_corpus: DataFrame | None = None,
     idf_on: str | None = None,
-    _rank_ties: bool = False,
-    _idf: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Compute the (row, col, sim) mapping table — the Spark equivalent of
     the reference kernel's COO output (``src/cossim.rs:203-262``).
@@ -214,101 +365,38 @@ def similarity_mapping(
     pre-aggregation. Standard practice in set-similarity-join literature;
     the reference has no such step (it recomputes per row).
     """
-    if normalization not in ("l2", "count"):
-        raise ValueError(f"normalization must be 'l2' or 'count', got {normalization!r}")
-    if strategy not in ("auto", "broadcast", "shuffle", "kernel"):
-        raise ValueError(
-            f"strategy must be 'auto', 'broadcast', 'shuffle' or 'kernel', got {strategy!r}"
-        )
-    if top_n < 1:
-        raise ValueError("top_n must be >= 1")
-    if left_id == right_id:
-        raise ValueError(
-            f"left_id and right_id must be distinct column names (both {left_id!r}); "
-            "alias one side first, or use join_sim() which handles the rename"
-        )
-    if weighting not in ("binary", "tfidf"):
-        raise ValueError(f"weighting must be 'binary' or 'tfidf', got {weighting!r}")
+    _validate(normalization, top_n, weighting, left_id, right_id)
+    if strategy not in ("auto", "broadcast", "shuffle"):
+        raise ValueError(f"strategy must be 'auto', 'broadcast' or 'shuffle', got {strategy!r}")
+    if idf_on is not None and idf_corpus is None:
+        raise ValueError("idf_on names a column of idf_corpus; pass idf_corpus too")
     if weighting == "binary" and idf_corpus is not None:
         raise ValueError("idf_corpus only applies with weighting='tfidf'")
+    idf = None
     if weighting == "tfidf":
-        if strategy == "kernel":
-            raise ValueError(
-                "strategy='kernel' (the broadcast dense-accumulator twin of the "
-                "reference's binary-weight SpGEMM) supports weighting='binary' only"
-            )
-        if _idf is None:
-            # Fit the IDF table ONCE, from the original corpus (default:
-            # the right side's key strings), BEFORE any distinct-key
-            # collapse — representatives must not distort document
-            # frequencies. Cached: both sides' posting joins read it.
-            corpus, ccol = (
-                (idf_corpus, idf_on if idf_on is not None else right_on)
-                if idf_corpus is not None
-                else (right, right_on)
-            )
-            if ccol not in corpus.columns:
-                raise ValueError(f"idf corpus column {ccol!r} not in corpus frame")
-            weights, _, w0_sq = build_idf_weights(
-                corpus, ccol, apply_word_normalization=apply_word_normalization
-            )
-            _idf = (cache_registry.track(weights), w0_sq)
-    else:
-        _idf = None
-
-    if strategy == "kernel":
-        # Broadcast dense-accumulator kernel (the reference's physical
-        # plan, src/cossim.rs:62-141, as mapInPandas) — see
-        # operators/join_sim_kernel.py. Right side must fit in memory.
-        from polars_sim_spark.operators.join_sim_kernel import similarity_mapping_kernel
-
-        return similarity_mapping_kernel(
-            left,
-            right,
-            left_on=left_on,
-            right_on=right_on,
-            top_n=top_n,
-            normalization=normalization,
-            apply_word_normalization=apply_word_normalization,
-            left_id=left_id,
-            right_id=right_id,
+        # Fit the IDF table ONCE, from the original corpus (default: the
+        # right side's key strings), BEFORE any distinct-key collapse —
+        # representatives must not distort document frequencies. Cached:
+        # both sides' posting joins read it.
+        corpus = idf_corpus if idf_corpus is not None else right
+        ccol = idf_on if idf_on is not None else right_on
+        if ccol not in corpus.columns:
+            raise ValueError(f"idf corpus column {ccol!r} not in corpus frame")
+        weights, _, w0_sq = build_idf_weights(
+            corpus, ccol, apply_word_normalization=apply_word_normalization
         )
+        idf = (cache_registry.track(weights), w0_sq)
 
+    ids = (left_on, right_on, left_id, right_id)
+    kw = dict(
+        top_n=top_n,
+        normalization=normalization,
+        apply_word_normalization=apply_word_normalization,
+        max_token_df=max_token_df,
+        idf=idf,
+    )
     if dedup_keys:
-        return _similarity_mapping_distinct(
-            left,
-            right,
-            left_on=left_on,
-            right_on=right_on,
-            top_n=top_n,
-            normalization=normalization,
-            apply_word_normalization=apply_word_normalization,
-            strategy=strategy,
-            left_id=left_id,
-            right_id=right_id,
-            max_token_df=max_token_df,
-            _idf=_idf,
-        )
-
-    lt = _tokens_long(left, left_on, left_id, left_id, apply_word_normalization, "__nl")
-    rt = _tokens_long(right, right_on, right_id, right_id, apply_word_normalization, "__nr")
-
-    rt_full = rt
-    if max_token_df is not None:
-        # Prune ultra-frequent tokens on the right side (skew guard).
-        # Norms stay FULL on both weightings: `__nr` was already counted
-        # over the unpruned token set inside _tokens_long, and the tfidf
-        # branch below computes `__nr2` from rt_full — pruning only
-        # removes overlap terms, so a doc containing a hot token keeps
-        # its true norm and its sims can only shrink, never inflate.
-        hot = (
-            rt.groupBy("__token")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") > max_token_df)
-            .select("__token")
-        )
-        rt = rt.join(F.broadcast(hot), "__token", "left_anti")
-
+        return _similarity_mapping_distinct(left, right, *ids, strategy=strategy, **kw)
     if strategy == "auto":
         # Mirrors the reference's row-count heuristic (join.py:107-114):
         # pick the physical variant from the size of the right side. The
@@ -319,114 +407,21 @@ def similarity_mapping(
         # (a bare right.count() here was a full O(N) blocking job).
         bounded = right.select(right_id).limit(BROADCAST_RIGHT_MAX_ROWS + 1).count()
         strategy = "broadcast" if bounded <= BROADCAST_RIGHT_MAX_ROWS else "shuffle"
-
-    if _idf is not None:
-        # TF-IDF weighting (the reference's declared roadmap,
-        # src/cossim.rs:45-48): each distinct trigram carries weight
-        # idf(t) in exact micro-units, so a dot-product term is the
-        # exact int64 idf(t)² and norms are exact int64 sums — the
-        # similarity stays a deterministic (oracle-reproducible)
-        # function of the corpus. The weight table is vocabulary-bounded
-        # (≤ 26³ rows), hence always a broadcast join onto postings.
-        weights, w0_sq = _idf
-        wb = F.broadcast(weights)
-        ltw = lt.join(wb, "__token", "left").select(
-            left_id, "__token", F.coalesce("__w2", F.lit(w0_sq)).alias("__w2")
-        )
-        rtw = rt.join(wb, "__token", "left").select(
-            right_id, "__token", F.coalesce("__w2", F.lit(w0_sq)).alias("__w2")
-        )
-        # Norms per id (map-side-combining aggs over each side's own
-        # postings — skew-safe, no window). The right norm is computed
-        # over the UNPRUNED postings (rt_full) so max_token_df keeps the
-        # binary path's semantics: prune the overlap, never the norm.
-        rtw_full = (
-            rtw
-            if rt_full is rt
-            else rt_full.join(wb, "__token", "left").select(
-                right_id, F.coalesce("__w2", F.lit(w0_sq)).alias("__w2")
-            )
-        )
-        nl2 = ltw.groupBy(left_id).agg(F.sum("__w2").alias("__nl2"))
-        nr2 = rtw_full.groupBy(right_id).agg(F.sum("__w2").alias("__nr2"))
-        rtw_side = rtw.select(right_id, "__token")
-        if strategy == "broadcast":
-            rtw_side = F.broadcast(rtw_side)
-            nr2 = F.broadcast(nr2)
-        # __w2 rides on the LEFT posting; the matched right token is the
-        # same trigram, so each pair term is idf(t)² counted once.
-        pairs = (
-            ltw.join(rtw_side, "__token")
-            .groupBy(left_id, right_id)
-            .agg(F.sum("__w2").alias("__dot"))
-            .join(nl2, left_id)
-            .join(nr2, right_id)
-        )
-        if normalization == "l2":
-            # Exact ints → one double division/multiply/sqrt each: IEEE-
-            # deterministic, identical in the oracle.
-            sim = F.col("__dot") / (F.sqrt(F.col("__nl2")) * F.sqrt(F.col("__nr2")))
-        else:
-            # Weighted overlap in natural idf units (micro² → unit).
-            sim = F.col("__dot") / F.lit(float(IDF_MICRO) ** 2)
-        scored = pairs.select(left_id, right_id, sim.alias("sim"))
-    else:
-        rt_side = F.broadcast(rt) if strategy == "broadcast" else rt
-
-        # Binary weights ⇒ the sparse dot product (src/cossim.rs:88-108) is a
-        # plain overlap count per (row, col) pair.
-        pairs = (
-            lt.join(rt_side, "__token")
-            .groupBy(left_id, right_id)
-            .agg(
-                F.count(F.lit(1)).alias("__overlap"),
-                F.first("__nl").alias("__nl"),
-                F.first("__nr").alias("__nr"),
-            )
-        )
-
-        if normalization == "l2":
-            # L2 row-normalization (src/csr.rs:194-210) folded into one final
-            # multiply: with binary weights ‖x‖₂ = √|T(x)|.
-            sim = F.col("__overlap") / (F.sqrt(F.col("__nl")) * F.sqrt(F.col("__nr")))
-        else:
-            sim = F.col("__overlap").cast("double")
-
-        scored = pairs.select(left_id, right_id, sim.alias("sim"))
-
-    # Per-left-row top-n (src/cossim.rs:110-133) with deterministic
-    # tiebreak; Catalyst rewrites rank<=k into WindowGroupLimit (partial
-    # top-k before the shuffle — the analog of the reference's
-    # partial→final merge in csr.rs:213-269). With _rank_ties (the
-    # distinct-key pre-pass), boundary ties are kept via rank() so the
-    # later row-level tiebreak sees every candidate string.
-    if _rank_ties:
-        w = Window.partitionBy(left_id).orderBy(F.desc("sim"))
-        rankf = F.rank()
-    else:
-        w = Window.partitionBy(left_id).orderBy(F.desc("sim"), F.asc(right_id))
-        rankf = F.row_number()
-    return (
-        scored.withColumn("__rn", rankf.over(w))
-        .where(F.col("__rn") <= top_n)
-        .drop("__rn")
-    )
+    return _live_score(left, right, *ids, strategy=strategy, **kw)
 
 
 def _similarity_mapping_distinct(
     left: DataFrame,
     right: DataFrame,
-    *,
     left_on: str,
     right_on: str,
-    top_n: int,
-    normalization: str,
-    apply_word_normalization: bool,
-    strategy: str,
     left_id: str,
     right_id: str,
-    max_token_df: int | None,
-    _idf: tuple[DataFrame, int] | None = None,
+    *,
+    top_n: int,
+    apply_word_normalization: bool,
+    strategy: str,
+    **score,
 ) -> DataFrame:
     """Distinct-TOKEN-SET evaluation of the similarity mapping (exact).
 
@@ -449,6 +444,8 @@ def _similarity_mapping_distinct(
     4. expand kept set pairs → right strings → right rows, take the true
        row-level top-n per left set (sim DESC, right_id ASC);
     5. expand to left strings → left rows.
+
+    ``score`` (normalization, max_token_df, idf) passes to the scorer.
     """
     def _distinct_strings(df, col, out_str):
         return (
@@ -535,22 +532,13 @@ def _similarity_mapping_distinct(
     else:
         rreps = rstr.select(F.col("__rs").alias("__rkey"), "__rs")
 
-    smap = similarity_mapping(
-        lreps,
-        rreps,
-        left_on="__ls",
-        right_on="__rs",
-        top_n=top_n,
-        normalization=normalization,
+    smap = _live_score(
+        lreps, rreps, "__ls", "__rs", "__lkey", "__rkey",
         apply_word_normalization=apply_word_normalization,
         strategy=strategy,
-        left_id="__lkey",
-        right_id="__rkey",
-        max_token_df=max_token_df,
-        dedup_keys=False,
-        weighting="tfidf" if _idf is not None else "binary",
-        _rank_ties=True,
-        _idf=_idf,
+        top_n=top_n,
+        ties=True,
+        **score,
     )
 
     rrows = right.select(F.col(right_id), F.col(right_on).alias("__rs"))
@@ -559,12 +547,7 @@ def _similarity_mapping_distinct(
     else:
         smap = smap.withColumnRenamed("__rkey", "__rs")
     cand = smap.join(rrows, "__rs").select("__lkey", right_id, "sim")
-    w = Window.partitionBy("__lkey").orderBy(F.desc("sim"), F.asc(right_id))
-    per_set = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= top_n)
-        .drop("__rn")
-    )
+    per_set = _top_n(cand, "__lkey", right_id, top_n)
     lrows = left.select(F.col(left_id), F.col(left_on).alias("__ls"))
     if l_keyed:
         per_set = per_set.join(lstr.withColumnRenamed("__key", "__lkey"), "__lkey")
@@ -799,28 +782,24 @@ def materialize_token_postings(
 
     if weighting not in ("binary", "tfidf"):
         raise ValueError(f"weighting must be 'binary' or 'tfidf', got {weighting!r}")
-    rt = _tokens_long(right, on, id_col, id_col, apply_word_normalization, "__nr")
+    spark = right.sparkSession
+    idf = None
     if weighting == "tfidf":
-        spark = right.sparkSession
         weights, _, w0_sq = build_idf_weights(
             right, on, apply_word_normalization=apply_word_normalization
         )
-        weights = cache_registry.track(weights)  # read by postings AND sidecar
-        rtw = rt.join(F.broadcast(weights), "__token", "left").select(
-            id_col,
-            "__nr",
-            "__token",
-            F.coalesce("__w2", F.lit(w0_sq)).alias("__w2"),
-        )
-        nr2 = rtw.groupBy(id_col).agg(F.sum("__w2").alias("__nr2"))
-        rt = rtw.join(nr2, id_col)
-        weights.write.mode("overwrite").saveAsTable(f"{table}_weights")
+        idf = (cache_registry.track(weights), w0_sq)  # read by postings AND sidecar
+        idf[0].write.mode("overwrite").saveAsTable(f"{table}_weights")
         spark.createDataFrame([(w0_sq,)], "default_w2 long").write.mode(
             "overwrite"
         ).saveAsTable(f"{table}_stats")
+    else:
+        # A stale tfidf sidecar would send later appends down the weighted arm.
+        for t in (f"{table}_weights", f"{table}_stats"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
     write_bucketed(
-        rt, table, bucket_by=["__token"], num_buckets=num_buckets,
-        sort_by=["__token"],
+        _postings(right, on, id_col, apply_word_normalization, idf),
+        table, bucket_by=["__token"], num_buckets=num_buckets, sort_by=["__token"],
     )
 
 
@@ -856,22 +835,14 @@ def append_token_postings(
     from polars_sim_spark.sources.sinks import write_bucketed
 
     spark = new_rows.sparkSession
-    rt = _tokens_long(new_rows, on, id_col, id_col, apply_word_normalization, "__nr")
-    tfidf = spark.catalog.tableExists(f"{table}_weights")
-    if tfidf:
-        weights = spark.table(f"{table}_weights")
+    idf = None
+    if spark.catalog.tableExists(f"{table}_weights"):
         w0_sq = int(spark.table(f"{table}_stats").collect()[0]["default_w2"])
-        rtw = rt.join(F.broadcast(weights), "__token", "left").select(
-            id_col,
-            "__nr",
-            "__token",
-            F.coalesce("__w2", F.lit(w0_sq)).alias("__w2"),
-        )
-        nr2 = rtw.groupBy(id_col).agg(F.sum("__w2").alias("__nr2"))
-        rt = rtw.join(nr2, id_col)
+        idf = (spark.table(f"{table}_weights"), w0_sq)
     write_bucketed(
-        rt, table, bucket_by=["__token"], num_buckets=num_buckets,
-        sort_by=["__token"], mode="append",
+        _postings(new_rows, on, id_col, apply_word_normalization, idf),
+        table, bucket_by=["__token"], num_buckets=num_buckets, sort_by=["__token"],
+        mode="append",
     )
 
 
@@ -894,9 +865,8 @@ def similarity_mapping_against_postings(
     ``spark.table(...)``) — identical (left_id, right_id, sim) rows to
     the shuffle-strategy live join over the same reference table
     (equivalence-tested), but the reference side is never re-tokenized,
-    re-exploded, or re-shuffled. The probe (left) side tokenizes and
-    shuffles only its own postings; overlap counting, normalization,
-    and the WindowGroupLimit top-n are byte-for-byte the live plan.
+    re-exploded, or re-shuffled. The probe (left) side tokenizes its own
+    postings; scoring is the live join's own core (``_score_topn``).
 
     Fit: reference tables of NEAR-UNIQUE strings (the master-list /
     gazetteer case). This twin matches ``dedup_keys=False`` semantics,
@@ -909,20 +879,11 @@ def similarity_mapping_against_postings(
     ``weighting="tfidf"`` serves a TF-IDF-weighted postings table
     (``materialize_token_postings(weighting="tfidf")``): pass the
     ``<table>_weights`` sidecar as ``idf_weights`` and the stored
-    ``default_w2``. The reference side's weights and norms come
-    entirely from the stored rows (frozen at build time — the
-    BM25-append frozen-stats contract); the probe side weighs its own
-    tokens through the same sidecar. Equivalence to the live
-    ``weighting="tfidf"`` path is pinned in tests/test_sinks.py."""
-    if normalization not in ("l2", "count"):
-        raise ValueError(
-            f"normalization must be 'l2' or 'count', got {normalization!r}"
-        )
-    if weighting not in ("binary", "tfidf"):
-        raise ValueError(f"weighting must be 'binary' or 'tfidf', got {weighting!r}")
-    lt = _tokens_long(
-        left, left_on, left_id, left_id, apply_word_normalization, "__nl"
-    )
+    ``default_w2``. The reference side's weights and norms come from the
+    stored rows (frozen at build time — the BM25-append frozen-stats
+    contract); the probe side weighs its own tokens through the sidecar."""
+    _validate(normalization, top_n, weighting, left_id, right_id)
+    idf = None
     if weighting == "tfidf":
         if idf_weights is None or default_w2 is None:
             raise ValueError(
@@ -930,43 +891,9 @@ def similarity_mapping_against_postings(
                 "idf_weights (the <table>_weights table) and default_w2 (from "
                 "<table>_stats)"
             )
-        ltw = lt.join(F.broadcast(idf_weights), "__token", "left").select(
-            left_id, "__token", F.coalesce("__w2", F.lit(int(default_w2))).alias("__w2")
-        )
-        nl2 = ltw.groupBy(left_id).agg(F.sum("__w2").alias("__nl2"))
-        pairs = (
-            ltw.drop("__w2")
-            .join(right_postings, "__token")
-            .groupBy(left_id, right_id)
-            .agg(
-                F.sum("__w2").alias("__dot"),  # the stored row's weight
-                F.first("__nr2").alias("__nr2"),
-            )
-            .join(nl2, left_id)
-        )
-        if normalization == "l2":
-            sim = F.col("__dot") / (F.sqrt(F.col("__nl2")) * F.sqrt(F.col("__nr2")))
-        else:
-            sim = F.col("__dot") / F.lit(float(IDF_MICRO) ** 2)
-        scored = pairs.select(left_id, right_id, sim.alias("sim"))
-    else:
-        pairs = (
-            lt.join(right_postings, "__token")
-            .groupBy(left_id, right_id)
-            .agg(
-                F.count(F.lit(1)).alias("__overlap"),
-                F.first("__nl").alias("__nl"),
-                F.first("__nr").alias("__nr"),
-            )
-        )
-        if normalization == "l2":
-            sim = F.col("__overlap") / (F.sqrt(F.col("__nl")) * F.sqrt(F.col("__nr")))
-        else:
-            sim = F.col("__overlap").cast("double")
-        scored = pairs.select(left_id, right_id, sim.alias("sim"))
-    w = Window.partitionBy(left_id).orderBy(F.desc("sim"), F.asc(right_id))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= top_n)
-        .drop("__rn")
+        idf = (idf_weights, default_w2)
+    lt = _tokens_long(left, left_on, left_id, apply_word_normalization, "__nl")
+    return _score_topn(
+        lt, right_postings, left_id=left_id, right_id=right_id,
+        normalization=normalization, top_n=top_n, idf=idf,
     )

@@ -6,7 +6,14 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from polars_sim_spark import join_sim
+
+
+@pytest.fixture(scope="module")
+def part(spark, sf_small):
+    return spark.read.parquet(f"{sf_small}/part.parquet").select("p_partkey", "p_name")
 
 
 @pytest.fixture(scope="module")
@@ -148,3 +155,19 @@ def test_max_token_df_prunes_hot_tokens(spark):
     # while "xyz" still reaches rid=12 via its rare trigram.
     pruned = join_sim(lt, rt, **kwargs, max_token_df=2)
     assert {(r["lid"], r["rid"]) for r in pruned.collect()} == {(2, 12)}
+
+
+def test_threading_dimension_compat(spark, part):
+    """Reference keyword `threading_dimension` maps onto the strategy."""
+    left = part.select(F.col("p_partkey").alias("l_id"), F.col("p_name").alias("s"))
+    a = join_sim(
+        left, left, on="s", top_n=2, left_id="l_id", right_id="l_id",
+        threading_dimension="left", threads=8,
+    )
+    b = join_sim(
+        left, left, on="s", top_n=2, left_id="l_id", right_id="l_id",
+        threading_dimension="right",
+    )
+    sa = sorted((r["l_id"], r["sim"]) for r in a.select("l_id", "sim").collect())
+    sb = sorted((r["l_id"], r["sim"]) for r in b.select("l_id", "sim").collect())
+    assert [x[0] for x in sa] == [x[0] for x in sb]

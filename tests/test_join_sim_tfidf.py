@@ -226,11 +226,17 @@ def test_tfidf_explicit_corpus_and_validation(spark):
         weighting="tfidf", idf_corpus=corpus, idf_on="s",
     )
     assert out.count() > 0
-    with pytest.raises(ValueError, match="kernel"):
+    with pytest.raises(ValueError, match="strategy"):
         similarity_mapping(
             _frame(spark, LEFT[:2], "l_id"), _frame(spark, RIGHT, "r_id"),
             left_on="s", right_on="s", left_id="l_id", right_id="r_id",
             weighting="tfidf", strategy="kernel",
+        )
+    with pytest.raises(ValueError, match="idf_on"):
+        similarity_mapping(
+            _frame(spark, LEFT[:2], "l_id"), _frame(spark, RIGHT, "r_id"),
+            left_on="s", right_on="s", left_id="l_id", right_id="r_id",
+            weighting="tfidf", idf_on="no_such_col",
         )
     with pytest.raises(ValueError, match="weighting"):
         similarity_mapping(

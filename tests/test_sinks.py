@@ -353,12 +353,81 @@ def test_append_token_postings_equals_pinned_rebuild(spark):
     assert got == want and len(got) > 0
 
 
+def test_served_postings_validates_top_n(spark):
+    """The served twin shares the live join's argument checks: top_n=0
+    raises instead of silently returning no rows."""
+    import pytest
+
+    from polars_sim_spark.operators.join_sim import similarity_mapping_against_postings
+
+    left = spark.createDataFrame([(1, "spark engine")], "l_id long, s string")
+    postings = spark.createDataFrame([(7, 3, "spa")], "r_id long, __nr int, __token string")
+    with pytest.raises(ValueError, match="top_n"):
+        similarity_mapping_against_postings(
+            left, postings, left_on="s", right_id="r_id", top_n=0, left_id="l_id"
+        )
+
+
+def test_binary_rebuild_drops_stale_tfidf_sidecars(spark, sf_small):
+    """Rebuilding a tfidf postings table as binary removes its idf
+    sidecars, so a later append takes the binary arm: serving the
+    rebuilt+appended table equals a fresh binary build plus the same
+    append."""
+    import shutil
+    from urllib.parse import urlparse
+
+    from polars_sim_spark.operators.join_sim import (
+        append_token_postings,
+        materialize_token_postings,
+        similarity_mapping_against_postings,
+    )
+
+    part = spark.read.parquet(f"{sf_small}/part.parquet")
+    left = part.limit(80).select(
+        F.col("p_partkey").alias("l_id"), F.col("p_name").alias("s")
+    )
+    right = part.where(F.col("p_partkey") % 2 == 0).select(
+        F.col("p_partkey").alias("r_id"), F.col("p_name").alias("s")
+    )
+    base = right.where(F.col("r_id") % 10 < 6)
+    extra = right.where(F.col("r_id") % 10 >= 6)
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    tables = ("t_rebuild", "t_rebuild_weights", "t_rebuild_stats", "t_rebuild_ref")
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
+
+    materialize_token_postings(
+        base, "t_rebuild", on="s", id_col="r_id", num_buckets=4, weighting="tfidf"
+    )
+    materialize_token_postings(base, "t_rebuild", on="s", id_col="r_id", num_buckets=4)
+    assert not spark.catalog.tableExists("t_rebuild_weights")
+    assert not spark.catalog.tableExists("t_rebuild_stats")
+    append_token_postings(extra, "t_rebuild", on="s", id_col="r_id", num_buckets=4)
+    materialize_token_postings(base, "t_rebuild_ref", on="s", id_col="r_id", num_buckets=4)
+    append_token_postings(extra, "t_rebuild_ref", on="s", id_col="r_id", num_buckets=4)
+
+    def _serve(tbl):
+        return {
+            (r["l_id"], r["r_id"], round(r["sim"], 9))
+            for r in similarity_mapping_against_postings(
+                left, spark.table(tbl), left_on="s", right_id="r_id",
+                top_n=3, left_id="l_id",
+            ).collect()
+        }
+
+    got = _serve("t_rebuild")
+    assert got == _serve("t_rebuild_ref") and len(got) > 0
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def _frozen_postings(spark, right, weights, w0):
     """Reference postings weighed through a FROZEN idf model — the
     in-memory twin of what build+append produce on disk."""
     from polars_sim_spark.operators.join_sim import _tokens_long
 
-    rt = _tokens_long(right, "s", "r_id", "r_id", False, "__nr")
+    rt = _tokens_long(right, "s", "r_id", False, "__nr")
     rtw = rt.join(F.broadcast(weights), "__token", "left").select(
         "r_id", "__nr", "__token",
         F.coalesce("__w2", F.lit(w0)).alias("__w2"),
