@@ -52,23 +52,17 @@ _CHECKPOINT_EVERY = 5
 WORD_PATTERN = "[a-z]+"
 
 
-def _apply_merge_expr(syms: Column, a: str, b: str) -> Column:
-    """Greedy left-to-right non-overlapping application of merge (a, b)
-    to an array<string> of symbols, as a sequential-scan ``aggregate``:
-    append each symbol unless the accumulator's last element is ``a``
-    and the incoming symbol is ``b`` — then replace the last element
-    with the merged symbol. ``F.get`` (0-based, null-safe) instead of
-    ``element_at`` keeps the empty-accumulator probe legal under ANSI
-    mode."""
-    return _apply_merges_expr(syms, [(a, b)])
-
-
 def _apply_merges_expr(syms: Column, batch: list[tuple[str, str]]) -> Column:
     """One sequential-scan pass applying a BATCH of token-disjoint
     merges (no symbol of one rule — including its merged string —
     appears in another rule's {a, b, a+b}): because the rules cannot
     interact, one left-to-right pass with a when-chain is exactly the
-    composition of the per-merge greedy passes in batch order."""
+    composition of the per-merge greedy passes in batch order. Each
+    merge is greedy left-to-right and non-overlapping: a symbol is
+    appended unless the accumulator's last element is ``a`` and the
+    symbol is ``b``, which replaces the last element with ``a + b``.
+    ``F.get`` (0-based, null-safe) instead of ``element_at`` keeps the
+    empty-accumulator probe legal under ANSI mode."""
     def step(acc: Column, s: Column) -> Column:
         last = F.get(acc, F.size(acc) - 1)
         expr = F.concat(acc, F.array(s))

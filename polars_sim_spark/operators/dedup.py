@@ -107,6 +107,24 @@ def lsh_bands(signatures: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROW
     )
 
 
+def _cap_buckets(df: DataFrame, key: list[str], max_bucket_size: int | None) -> DataFrame:
+    """``df`` without the rows of buckets (groups over ``key``) holding
+    more than ``max_bucket_size`` rows; ``None`` returns ``df`` as is.
+
+    The bucket size is a ``count`` window over ``key``, not a size
+    aggregate joined back: the window's exchange is the hash
+    partitioning the bucket self-join downstream needs anyway, so the
+    cap costs no extra shuffle and no second evaluation of ``df``'s
+    lineage (the aggregate-plus-join form planned it twice per self-join
+    side). The price: a hot bucket's rows all meet in one window task
+    (a spillable sort, linear in the bucket size) where a size aggregate
+    would have pre-counted them map-side."""
+    if max_bucket_size is None:
+        return df
+    n = F.count(F.lit(1)).over(Window.partitionBy(*key))
+    return df.withColumn("__n", n).where(F.col("__n") <= max_bucket_size).drop("__n")
+
+
 def lsh_candidate_pairs(
     bands_df: DataFrame,
     max_bucket_size: int | None = None,
@@ -117,16 +135,16 @@ def lsh_candidate_pairs(
 
     ``max_bucket_size`` drops pathologically hot buckets (boilerplate
     spam at web scale) before the quadratic self-join — a recall/cost
-    knob, disabled by default.
+    knob, disabled by default. The cap is a ``count`` window over the
+    bucket key ``(band, band_key)`` (:func:`_cap_buckets`), which shares
+    the self-join's partitioning. Uncapped, the plan is the plain
+    self-join, so AQE can still split a skewed bucket.
 
     ``with_bucket`` adds ``__bucket`` (the smallest shared band bucket,
     deterministic) for band-local star contraction downstream — the
     dedup is a groupBy-min instead of distinct, same single shuffle.
     """
-    if max_bucket_size is not None:
-        sizes = bands_df.groupBy("band", "band_key").agg(F.count(F.lit(1)).alias("__n"))
-        keep = sizes.where(F.col("__n") <= max_bucket_size).select("band", "band_key")
-        bands_df = bands_df.join(keep, ["band", "band_key"])
+    bands_df = _cap_buckets(bands_df, ["band", "band_key"], max_bucket_size)
     a = bands_df.select("band", "band_key", F.col("id").alias("l_id"))
     b = bands_df.select("band", "band_key", F.col("id").alias("r_id"))
     joined = a.join(b, ["band", "band_key"]).where(F.col("l_id") < F.col("r_id"))
@@ -1379,9 +1397,20 @@ def connected_components(
     noticed). The driver only reads the converged flag; all data stays
     distributed.
     """
+    # SINGLE PASS over ``edges``: each edge explodes into itself and its
+    # mirror — the same rows (and nulls) as a union of the two
+    # projections. The union planned ``edges``' whole lineage twice
+    # (for dedup callers: MinHash → LSH → verify → star contraction),
+    # and AQE reused no exchange across the two branches, so every CC
+    # caller ran its pair pipeline twice.
     both = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).unionByName(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+        F.explode(
+            F.array(
+                F.struct(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+                F.struct(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")),
+            )
+        ).alias("__e")
+    ).select("__e.src", "__e.dst")
     # LAZY checkpoint + count in one job (optimization round 14): the
     # seed pass below needs the edge count anyway, and a lazy
     # localCheckpoint materializes its blocks during the first action —
@@ -1833,10 +1862,7 @@ def embedding_lsh_near_dup_pairs(
         if num_dims is None:
             raise ValueError("embedding_lsh_near_dup_pairs: empty input and no num_dims")
     buckets = _sign_buckets(df, id_col, vec_col, num_planes, bands, num_dims)
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
-        keep = sizes.where(F.col("__n") <= max_bucket_size).select("band", "bucket")
-        buckets = buckets.join(keep, ["band", "bucket"])
+    buckets = _cap_buckets(buckets, ["band", "bucket"], max_bucket_size)
     a = buckets.select("band", "bucket", F.col("id").alias("l_id"))
     b = buckets.select("band", "bucket", F.col("id").alias("r_id"))
     cands = (
@@ -2292,10 +2318,7 @@ def video_frame_match_pairs(
             F.col(frame_col).alias("__f"),
             *[F.col(c).alias(f"__b{j}") for j, c in enumerate(band_cols)],
         )
-        if max_bucket_size is not None:
-            sizes = g.groupBy(*key).agg(F.count(F.lit(1)).alias("__n"))
-            keep = sizes.where(F.col("__n") <= max_bucket_size).select(*key)
-            g = g.join(keep, key)
+        g = _cap_buckets(g, key, max_bucket_size)
         a = g.select(*key, F.col("id").alias("l_id"))
         b = g.select(*key, F.col("id").alias("r_id"))
         matched = (
@@ -2316,14 +2339,7 @@ def video_frame_match_pairs(
             "band", "band_key"
         ),
     )
-    if max_bucket_size is not None:
-        sizes = bands_df.groupBy("__f", "band", "band_key").agg(
-            F.count(F.lit(1)).alias("__n")
-        )
-        keep = sizes.where(F.col("__n") <= max_bucket_size).select(
-            "__f", "band", "band_key"
-        )
-        bands_df = bands_df.join(keep, ["__f", "band", "band_key"])
+    bands_df = _cap_buckets(bands_df, ["__f", "band", "band_key"], max_bucket_size)
     a = bands_df.select("__f", "band", "band_key", F.col("id").alias("l_id"))
     b = bands_df.select("__f", "band", "band_key", F.col("id").alias("r_id"))
     cand = (

@@ -4822,32 +4822,6 @@ def _jpeg_lut9(dec: dict) -> list:
 _DHT_CACHE: dict = {}
 
 
-def _jpeg_huff_decode(reader, table, lut=None) -> int:
-    if lut is not None:
-        reader._fill(9)  # partial fill near segment end is fine
-        nb = reader.nbits
-        idx = (
-            (reader.acc >> (nb - 9)) if nb >= 9 else (reader.acc << (9 - nb))
-        ) & 511
-        e = lut[idx]
-        # Suffix bits beyond the code length are replicated in the lut,
-        # so the entry is valid whenever the CODE fits the buffered
-        # bits; zero-padding can only land on longer/None entries.
-        if e is not None and e[1] <= nb:
-            reader.nbits -= e[1]
-            reader.acc &= (1 << reader.nbits) - 1
-            return e[0]
-    code = ln = 0
-    while True:
-        code = (code << 1) | reader.bit()
-        ln += 1
-        sym = table.get((ln, code))
-        if sym is not None:
-            return sym
-        if ln > 16:
-            raise NotImplementedError("invalid JPEG Huffman code")
-
-
 def _jpeg_decode_progressive(h, w, comp_specs, quant, scans):
     """Progressive (SOF2) coefficient assembly + reconstruction
     (round 13): each scan deposits its spectral band / approximation

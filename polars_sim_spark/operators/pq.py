@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -364,8 +365,13 @@ def _load_index_artifacts(spark, path: str):
     root = path.rstrip("/")
     try:
         residual = spark.read.parquet(root + "/_meta").collect()[0]["residual"]
-    except Exception:
-        residual = False  # pre-residual layouts have no _meta sidecar
+    except AnalysisException as e:
+        # Pre-residual layouts have no _meta sidecar; any other failure
+        # (an unreadable or empty sidecar) is a broken layout, not an
+        # old one, and must not silently read as residual=False.
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        residual = False
     cent = spark.read.parquet(root + "/_centroids").collect()
     cent_rows = [
         {"c_id": r["c_id"], "__centroid": list(r["centroid"]), "__cnorm": r["cnorm"]}

@@ -82,6 +82,38 @@ def test_lsh_hot_bucket_cap(spark):
     assert uncapped == 45  # 10 choose 2
     assert capped == 0  # hot bucket dropped entirely
 
+    # Boundary: a bucket of exactly ``cap`` ids is kept, one of cap + 1 is
+    # dropped; a bucket is (band, band_key), so the same key in another
+    # band is a different bucket. Both arms match a Python reference.
+    cap = 3
+    rows = (
+        [(i, 0, "k") for i in (1, 2, 3)]  # exactly cap: kept
+        + [(i, 0, "hot") for i in (10, 11, 12, 13)]  # cap + 1: dropped
+        + [(i, 1, "hot") for i in (10, 11)]  # same key, other band: kept
+        + [(i, 1, "k") for i in (1, 2)]  # (1, 2) again: min bucket wins
+        + [(20, 2, "solo")]
+    )
+    hand = spark.createDataFrame(rows, "id long, band int, band_key string")
+    buckets: dict = {}
+    for i, band, key in rows:
+        buckets.setdefault((band, key), []).append(i)
+    ref: dict = {}
+    for (band, key), ids in buckets.items():
+        if len(ids) > cap:
+            continue
+        for lo in ids:
+            for hi in ids:
+                if lo < hi:
+                    b = f"{band}|{key}"
+                    ref[(lo, hi)] = min(ref.get((lo, hi), b), b)
+    assert ref == {(1, 2): "0|k", (1, 3): "0|k", (2, 3): "0|k", (10, 11): "1|hot"}
+    plain = dedup.lsh_candidate_pairs(hand, max_bucket_size=cap)
+    assert sorted(map(tuple, plain.collect())) == sorted(ref)
+    tagged = dedup.lsh_candidate_pairs(hand, max_bucket_size=cap, with_bucket=True)
+    assert sorted(map(tuple, tagged.select("l_id", "r_id", "__bucket").collect())) == sorted(
+        (lo, hi, b) for (lo, hi), b in ref.items()
+    )
+
 
 def test_connected_components(spark):
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "id long")
@@ -90,6 +122,27 @@ def test_connected_components(spark):
     cc = dedup.connected_components(nodes, edges)
     got = {r["id"]: r["cluster_id"] for r in cc.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 7}
+
+
+def test_connected_components_evaluates_edges_once(spark):
+    """CC reads its edge lineage ONCE: the mirrored edge set is built in
+    one pass, so a Python UDF in the edge lineage runs once per edge
+    (a union of the edges with their mirror evaluated it twice)."""
+    nodes = spark.createDataFrame([(i,) for i in range(1, 10)], "id long")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (5, 6), (7, 8)], "l_id long, r_id long"
+    )
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        calls.add(1)
+        return v
+
+    tick_udf = F.udf(tick, "long")
+    edges = edges.distinct().withColumn("l_id", tick_udf("l_id"))
+    got = {r["id"]: r["cluster_id"] for r in dedup.connected_components(nodes, edges).collect()}
+    assert calls.value == 5
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4, 7: 7, 8: 7, 9: 9}
 
 
 def test_connected_components_long_chain(spark):
