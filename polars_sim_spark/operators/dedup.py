@@ -126,10 +126,7 @@ def _cap_buckets(df: DataFrame, key: list[str], max_bucket_size: int | None) -> 
 
 
 def lsh_candidate_pairs(
-    bands_df: DataFrame,
-    max_bucket_size: int | None = None,
-    *,
-    with_bucket: bool = False,
+    bands_df: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
     """(l_id, r_id): distinct unordered candidate pairs sharing ≥1 LSH bucket.
 
@@ -139,139 +136,12 @@ def lsh_candidate_pairs(
     bucket key ``(band, band_key)`` (:func:`_cap_buckets`), which shares
     the self-join's partitioning. Uncapped, the plan is the plain
     self-join, so AQE can still split a skewed bucket.
-
-    ``with_bucket`` adds ``__bucket`` (the smallest shared band bucket,
-    deterministic) for band-local star contraction downstream — the
-    dedup is a groupBy-min instead of distinct, same single shuffle.
     """
     bands_df = _cap_buckets(bands_df, ["band", "band_key"], max_bucket_size)
     a = bands_df.select("band", "band_key", F.col("id").alias("l_id"))
     b = bands_df.select("band", "band_key", F.col("id").alias("r_id"))
     joined = a.join(b, ["band", "band_key"]).where(F.col("l_id") < F.col("r_id"))
-    if with_bucket:
-        return joined.groupBy("l_id", "r_id").agg(
-            F.min(
-                F.concat_ws("|", F.col("band").cast("string"), F.col("band_key"))
-            ).alias("__bucket")
-        )
     return joined.select("l_id", "r_id").distinct()
-
-
-def star_contract_pairs(
-    pairs: DataFrame,
-    *,
-    src_col: str = "l_id",
-    dst_col: str = "r_id",
-    bucket_col: str = "__bucket",
-) -> DataFrame:
-    """Collapse each bucket's local pair subgraph into a STAR — (local
-    min id) → member edges — before global connected components
-    (round 10, VERDICT r9 #8).
-
-    Global CC's round count tracks the pair graph's effective DIAMETER
-    (a near-dup chain a~b~c~… needs one min-label round per hop), and
-    per-round cost is dominated by fixed job latency on long chains.
-    Pairs that land in the same bucket (e.g. a shared phash band) are
-    locally union-found in one Arrow group pass and replaced by depth-1
-    star edges, so any within-bucket chain contributes ONE hop to the
-    global graph instead of its length. EXACT: every original edge
-    (a, b) lies in some bucket whose local union puts a and b in the
-    same local component, so a—min—b survives via the star — the
-    contracted graph has identical components (equivalence-tested in
-    tests/test_phash.py).
-
-    Scale: the only data moved is the PAIR set (output-proportional,
-    ≪ corpus) shuffled once by bucket; buckets are band collisions —
-    already bounded by ``max_bucket_size`` upstream — and the per-group
-    python union-find is O(edges α(n)) on a few-row pandas frame."""
-    import pandas as pd
-
-    t = dict(pairs.dtypes)[src_col]
-
-    def op(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in zip(pdf[src_col], pdf[dst_col]):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # smaller id stays the star center
-        nodes = set(pdf[src_col]).union(pdf[dst_col])
-        rows = [(find(x), x) for x in nodes]
-        rows = [(m, x) for m, x in rows if m != x]
-        return pd.DataFrame(
-            {
-                src_col: pd.Series([r[0] for r in rows], dtype=object),
-                dst_col: pd.Series([r[1] for r in rows], dtype=object),
-            }
-        )
-
-    return (
-        pairs.select(bucket_col, src_col, dst_col)
-        .groupBy(bucket_col)
-        .applyInPandas(op, f"{src_col} {t}, {dst_col} {t}")
-        .distinct()
-    )
-
-
-def phash_contracted_pairs(
-    ph: DataFrame,
-    *,
-    id_col: str = "id",
-    band_cols: tuple[str, ...] = ("band0", "band1", "band2", "band3"),
-    max_dist: int = 3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """:func:`phash_near_pairs` followed by band-local star contraction —
-    the edge set to feed :func:`connected_components` when only the
-    CLUSTERING matters (KEEP/DROP removal), not the individual pair
-    distances: components are identical (star contraction is exact) but
-    within-band chains collapse to depth 1, cutting global CC rounds.
-
-    Each verified pair is assigned to its FIRST shared band's bucket —
-    the pigeonhole guarantee (max_dist ≤ bands−1) means at least one
-    shared band always exists, so no edge is left behind."""
-    nb = len(band_cols)
-    pairs = phash_near_pairs(
-        ph,
-        id_col=id_col,
-        band_cols=band_cols,
-        max_dist=max_dist,
-        max_bucket_size=max_bucket_size,
-    )
-    lt = ph.select(
-        F.col(id_col).alias("l_id"),
-        *[F.col(c).alias(f"__l{j}") for j, c in enumerate(band_cols)],
-    )
-    rt = ph.select(
-        F.col(id_col).alias("r_id"),
-        *[F.col(c).alias(f"__r{j}") for j, c in enumerate(band_cols)],
-    )
-    bucket = F.coalesce(
-        *[
-            F.when(
-                F.col(f"__l{j}") == F.col(f"__r{j}"),
-                F.concat(F.lit(f"{j}:"), F.col(f"__l{j}").cast("string")),
-            )
-            for j in range(nb)
-        ],
-        F.lit("__none__"),  # unreachable under the pigeonhole guarantee
-    )
-    tagged = (
-        pairs.join(lt, "l_id")
-        .join(rt, "r_id")
-        .select("l_id", "r_id", bucket.alias("__bucket"))
-    )
-    return star_contract_pairs(tagged)
 
 
 def _hashed_postings(postings: DataFrame) -> DataFrame:
@@ -308,7 +178,6 @@ def _verify_jaccard_pairs(
     a = arrs.select(F.col("id").alias("l_id"), F.col("arr").alias("__la"), F.col("n").alias("na"))
     b = arrs.select(F.col("id").alias("r_id"), F.col("arr").alias("__rb"), F.col("n").alias("nb"))
     k = F.size(F.array_intersect("__la", "__rb")).cast("double")
-    carry = ["__bucket"] if "__bucket" in cands.columns else []
     # CPU-parallelism floor (round 15): candidate rows are ~16 bytes, so
     # AQE byte-coalescing legally serialized this verify (1-2 tasks at
     # sf0.1 on 32 cores) — and the per-candidate array_intersect is the
@@ -325,7 +194,6 @@ def _verify_jaccard_pairs(
             "l_id",
             "r_id",
             (k / (F.col("na") + F.col("nb") - k)).alias("jac"),
-            *carry,
         )
     )
     if min_jaccard is not None:
@@ -1400,7 +1268,7 @@ def connected_components(
     # SINGLE PASS over ``edges``: each edge explodes into itself and its
     # mirror — the same rows (and nulls) as a union of the two
     # projections. The union planned ``edges``' whole lineage twice
-    # (for dedup callers: MinHash → LSH → verify → star contraction),
+    # (for dedup callers: MinHash → LSH → verify),
     # and AQE reused no exchange across the two branches, so every CC
     # caller ran its pair pipeline twice.
     both = edges.select(
@@ -1582,6 +1450,11 @@ def connected_components(
     )
 
 
+#: Quotient edge count up to which :func:`update_entity_labels` maps
+#: components with a driver-side union-find instead of distributed CC.
+_SMALL_QUOTIENT_MAX_EDGES = 100_000
+
+
 def update_entity_labels(
     labels: DataFrame,
     new_nodes: DataFrame,
@@ -1591,7 +1464,6 @@ def update_entity_labels(
     label_col: str = "entity_id",
     src_col: str = "l_id",
     dst_col: str = "r_id",
-    small_quotient_max_edges: int = 100_000,
 ) -> DataFrame:
     """INCREMENTAL entity resolution (round 10, VERDICT r9 #5): fold a
     batch of new nodes + new edges into STORED component labels, running
@@ -1621,7 +1493,7 @@ def update_entity_labels(
     relabel is a broadcast-sized (old label → new label) mapping joined
     onto the stored table, and isolated new nodes label themselves.
 
-    Latency: when the quotient has ≤ ``small_quotient_max_edges`` edges
+    Latency: when the quotient has ≤ ``_SMALL_QUOTIENT_MAX_EDGES`` edges
     (one bounded count over the already-checkpointed edge frame), the
     component mapping is computed by a driver-side union-find instead of
     the iterative CC loop — the quotient of a typical append batch is a
@@ -1631,8 +1503,7 @@ def update_entity_labels(
     results are identical (min-label over components either way — the
     update_entity_labels equivalence tests run BOTH paths), and a batch
     big enough to cross the threshold takes the distributed loop, so
-    the 100 TB path never collects unbounded data. Set
-    ``small_quotient_max_edges=0`` to force distributed CC."""
+    the 100 TB path never collects unbounded data."""
     # project to the two contract columns up front: a payload column on
     # the stored frame named e.g. "cluster_id" would otherwise collide
     # with the CC mapping's output in the relabel joins below
@@ -1653,7 +1524,7 @@ def update_entity_labels(
     # fused with the size probe: the lazy checkpoint's blocks persist
     # during the count's single job.
     e = e.localCheckpoint(eager=False)
-    if cache_registry.materialize_count(e) <= small_quotient_max_edges:
+    if cache_registry.materialize_count(e) <= _SMALL_QUOTIENT_MAX_EDGES:
         # Driver union-find over the bounded quotient edge set. Only
         # edge-incident nodes need a mapping row: the relabel joins
         # below coalesce unmapped ids to themselves, which is exactly
@@ -1749,28 +1620,19 @@ def remove_near_dups(
     postings = shingle_postings(docs, id_col, text_col).persist()
     try:
         if use_lsh:
-            sigs = minhash_signatures(postings)
             cands = lsh_candidate_pairs(
-                lsh_bands(sigs), max_bucket_size, with_bucket=True
+                lsh_bands(minhash_signatures(postings)), max_bucket_size
             )
-            verified = _verify_jaccard_pairs(postings, cands, min_jaccard)
-            # Band-local star contraction (round 11, VERDICT r10 #4):
-            # the exactness argument is bucket-agnostic — ANY edge
-            # partition preserves components — and the LSH band buckets
-            # are exactly the groups where near-dup chains co-locate, so
-            # within-band chains collapse to depth 1 before global CC
-            # (identical components, fewer min-label rounds; the phash
-            # path measured 66× fewer CC input edges at ×100).
-            pairs = star_contract_pairs(
-                verified.select("l_id", "r_id", "__bucket")
-            )
+            pairs = _verify_jaccard_pairs(postings, cands, min_jaccard)
         else:
-            pairs = jaccard_pairs(postings, min_jaccard=min_jaccard).select("l_id", "r_id")
+            pairs = jaccard_pairs(postings, min_jaccard=min_jaccard)
         nodes = docs.select(F.col(id_col).alias("id"))
-        # connected_components eagerly localCheckpoints both the edge set
-        # and every label iteration, so by the time it returns nothing
-        # downstream references the postings lineage...
-        cc = connected_components(nodes, pairs)
+        # The verified pairs go straight to CC: its seed pass union-finds
+        # each edge partition to min-root stars, the one place near-dup
+        # chains are contracted. CC eagerly localCheckpoints both the
+        # edge set and every label iteration, so by the time it returns
+        # nothing downstream references the postings lineage...
+        cc = connected_components(nodes, pairs.select("l_id", "r_id"))
     finally:
         # ...which makes this the earliest safe unpersist point: without
         # it every call leaks cached shingle blocks into executor storage
@@ -1814,15 +1676,9 @@ def remove_embedding_near_dups(
         num_centroids=num_centroids,
         nprobe=nprobe,
         assignment=assignment,
-        with_bucket=True,
     )
-    # Cell-local star contraction before global CC (round 11, VERDICT
-    # r10 #4): within-cell near-dup chains collapse to depth 1 —
-    # identical components, fewer min-label rounds (the phash twin's
-    # measured win at ×100).
-    pairs = star_contract_pairs(verified.select("l_id", "r_id", "__bucket"))
     nodes = df.select(F.col(id_col).alias("id"))
-    cc = connected_components(nodes, pairs)
+    cc = connected_components(nodes, verified.select("l_id", "r_id"))
     keep = cc.where(F.col("id") == F.col("cluster_id")).select(
         F.col("id").alias(id_col)
     )
@@ -1900,8 +1756,7 @@ def _verify_cosine_pairs(
     )
     denom = F.col("__na") * F.col("__nb")
     sim = F.when(denom > F.lit(0.0), dot("__va", "__vb") / denom).otherwise(F.lit(0.0))
-    carry = ["__bucket"] if "__bucket" in cands.columns else []
-    return pairs.select("l_id", "r_id", sim.alias("sim"), *carry).where(
+    return pairs.select("l_id", "r_id", sim.alias("sim")).where(
         F.round("sim", 6) >= min_cosine
     )
 
@@ -1922,14 +1777,11 @@ def embedding_ivf_near_dup_pairs(
     assignment: str = "auto",
     max_cell_fraction: float | None = None,
     subprobe: int = 2,
-    with_bucket: bool = False,
 ) -> DataFrame:
     """(l_id, r_id, sim): embedding near-dup pairs via IVF blocking —
-    the preferred scale path for moderate thresholds. ``with_bucket``
-    adds ``__bucket`` (smallest shared IVF cell / sub-cell block,
-    deterministic) so callers can star-contract within blocks before
-    global CC (round 11); the candidate dedup becomes a groupBy-min —
-    same single shuffle as the distinct it replaces.
+    the preferred scale path for moderate thresholds. A pair sharing
+    several cells is generated once per cell and deduplicated with one
+    ``distinct`` before verification.
 
     ``assignment``: ``"expr"`` scores centroids with zero-shuffle
     Column expressions (oracle-exact — what the contract query uses at
@@ -2046,12 +1898,7 @@ def embedding_ivf_near_dup_pairs(
         a = assigned.select("c_id", F.col("__vid").alias("l_id"))
         b = assigned.select("c_id", F.col("__vid").alias("r_id"))
         joined0 = a.join(b, "c_id").where(F.col("l_id") < F.col("r_id"))
-        if with_bucket:
-            cands = joined0.groupBy("l_id", "r_id").agg(
-                F.min(F.col("c_id").cast("string")).alias("__bucket")
-            )
-        else:
-            cands = joined0.select("l_id", "r_id").distinct()
+        cands = joined0.select("l_id", "r_id").distinct()
         return _verify_cosine_pairs(df, id_col, vec_col, cands, min_cosine)
 
     # ---- hot-cell cap: re-quantize oversized cells in place ----
@@ -2117,12 +1964,7 @@ def embedding_ivf_near_dup_pairs(
     a2 = blocks.select("__blk", F.col("__vid").alias("l_id"))
     b2 = blocks.select("__blk", F.col("__vid").alias("r_id"))
     joined2 = a2.join(b2, "__blk").where(F.col("l_id") < F.col("r_id"))
-    if with_bucket:
-        cands = joined2.groupBy("l_id", "r_id").agg(
-            F.min("__blk").alias("__bucket")
-        )
-    else:
-        cands = joined2.select("l_id", "r_id").distinct()
+    cands = joined2.select("l_id", "r_id").distinct()
     return _verify_cosine_pairs(df, id_col, vec_col, cands, min_cosine)
 
 

@@ -5705,8 +5705,7 @@ def mp4_vhash(
       fingerprint;
     * bands return in the :func:`~polars_sim_spark.operators.dedup.
       phash_near_pairs` shape: the banded Hamming join, pigeonhole
-      recall guarantee, hot-bucket cap and star contraction apply to
-      video unchanged.
+      recall guarantee and hot-bucket cap apply to video unchanged.
 
     Non-BMFF payloads and videos with zero non-empty sampled frames are
     dropped. Scale: one Arrow ``mapInPandas`` byte parse per row, 65

@@ -2568,8 +2568,8 @@ def dedup_audio_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient sign bits), and pairs within Hamming ≤ 15 surface via the
     SAME banded equi-join + exact xor/bit_count verify the image path
     uses (operators/dedup.py:phash_near_pairs — the pigeonhole recall
-    guarantee, hot-bucket cap and star contraction carry over to audio
-    unchanged). Integer-exact end to end: the oracle recomputes every
+    guarantee and hot-bucket cap carry over to audio unchanged).
+    Integer-exact end to end: the oracle recomputes every
     sampled amplitude from the fixture text bytes by hex extraction and
     filters ALL-pairs, proving both the sample interpretation (frame
     indexing through the channel interleave, int16 signedness) and the
@@ -2838,10 +2838,10 @@ def dedup_remove_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference made outside it). Tiny frame, released by the session
     # owner's unpersist_all.
     ph = cache_registry.track(ppm_phash(attach_payload(docs, "ppm"), n_bands=8))
-    # band-local star contraction (round 10): identical components —
-    # the oracle's reachability closure re-proves it every run — with
-    # within-band chains collapsed to depth 1 before the global rounds.
-    pairs = dedup.phash_contracted_pairs(
+    # The verified pairs go straight to CC, whose seed pass union-finds
+    # each edge partition to min-root stars; the oracle's reachability
+    # closure re-proves the components every run.
+    pairs = dedup.phash_near_pairs(
         ph,
         id_col="doc_id",
         band_cols=tuple(f"band{j}" for j in range(8)),
@@ -2849,7 +2849,7 @@ def dedup_remove_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = dedup.connected_components(
         ph.select(F.col("doc_id").alias("id")),
-        pairs,
+        pairs.select("l_id", "r_id"),
         id_col="id",
         src_col="l_id",
         dst_col="r_id",

@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "polars_sim_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (
@@ -61,10 +61,7 @@ def get_spark(app_name: str = "polars_sim_spark", shuffle_partitions: int | None
         # Attached to a pre-existing JVM: the daemon config (had we set
         # it) would have been silently ignored. Say so once instead of
         # letting the perf posture drift invisibly (round-15 ADVICE).
-        try:
-            configured = spark.conf.get("spark.python.daemon.module", None)
-        except Exception:
-            configured = None
+        configured = spark.conf.get("spark.python.daemon.module", None)
         if configured != "polars_sim_spark.worker_preload":
             import warnings
 

@@ -84,35 +84,30 @@ def test_lsh_hot_bucket_cap(spark):
 
     # Boundary: a bucket of exactly ``cap`` ids is kept, one of cap + 1 is
     # dropped; a bucket is (band, band_key), so the same key in another
-    # band is a different bucket. Both arms match a Python reference.
+    # band is a different bucket. The pairs match a Python reference.
     cap = 3
     rows = (
         [(i, 0, "k") for i in (1, 2, 3)]  # exactly cap: kept
         + [(i, 0, "hot") for i in (10, 11, 12, 13)]  # cap + 1: dropped
         + [(i, 1, "hot") for i in (10, 11)]  # same key, other band: kept
-        + [(i, 1, "k") for i in (1, 2)]  # (1, 2) again: min bucket wins
+        + [(i, 1, "k") for i in (1, 2)]  # (1, 2) again: one pair
         + [(20, 2, "solo")]
     )
     hand = spark.createDataFrame(rows, "id long, band int, band_key string")
     buckets: dict = {}
     for i, band, key in rows:
         buckets.setdefault((band, key), []).append(i)
-    ref: dict = {}
-    for (band, key), ids in buckets.items():
-        if len(ids) > cap:
-            continue
-        for lo in ids:
-            for hi in ids:
-                if lo < hi:
-                    b = f"{band}|{key}"
-                    ref[(lo, hi)] = min(ref.get((lo, hi), b), b)
-    assert ref == {(1, 2): "0|k", (1, 3): "0|k", (2, 3): "0|k", (10, 11): "1|hot"}
+    ref = {
+        (lo, hi)
+        for ids in buckets.values()
+        if len(ids) <= cap
+        for lo in ids
+        for hi in ids
+        if lo < hi
+    }
+    assert ref == {(1, 2), (1, 3), (2, 3), (10, 11)}
     plain = dedup.lsh_candidate_pairs(hand, max_bucket_size=cap)
     assert sorted(map(tuple, plain.collect())) == sorted(ref)
-    tagged = dedup.lsh_candidate_pairs(hand, max_bucket_size=cap, with_bucket=True)
-    assert sorted(map(tuple, tagged.select("l_id", "r_id", "__bucket").collect())) == sorted(
-        (lo, hi, b) for (lo, hi), b in ref.items()
-    )
 
 
 def test_connected_components(spark):
@@ -581,7 +576,7 @@ def test_connected_components_raises_on_round_exhaustion(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("small_max", [100_000, 0])
-def test_update_entity_labels_equals_full_recompute(spark, small_max):
+def test_update_entity_labels_equals_full_recompute(spark, small_max, monkeypatch):
     """Incremental resolution (round 10): folding a batch of new nodes +
     edges into stored CC labels via the quotient graph must equal a full
     CC recompute over the union edge set — including cross-historical
@@ -598,6 +593,7 @@ def test_update_entity_labels_equals_full_recompute(spark, small_max):
         update_entity_labels,
     )
 
+    monkeypatch.setattr(dedup, "_SMALL_QUOTIENT_MAX_EDGES", small_max)
     rng = random.Random(42)
     hist_nodes = list(range(10, 110))  # ids 10..109
     hist_edges = [(a, a + 1) for a in range(10, 30)]  # one chain
@@ -630,7 +626,6 @@ def test_update_entity_labels_equals_full_recompute(spark, small_max):
             spark.createDataFrame([(n,) for n in new_nodes], "id long"),
             spark.createDataFrame(new_edges, "l_id long, r_id long"),
             id_col="id",
-            small_quotient_max_edges=small_max,
         ).collect()
     }
 
@@ -694,77 +689,20 @@ def test_connected_components_fixpoint_exactly_at_max_iter(spark):
     assert got == {0: 0, 1: 0}
 
 
-def test_lsh_star_contraction_components_identical(spark, sf_small):
-    """VERDICT r10 #4: band-local star contraction on the MinHash-LSH
-    text path — CC over the contracted edge set must produce the same
-    components (hence the same keep set) as CC over the raw verified
-    pairs, and with_bucket must not change WHICH pairs verify."""
-    from polars_sim_spark.operators import dedup
-
+def test_lsh_removal_multipartition_cc_matches_single(spark, sf_small, monkeypatch):
+    """The LSH removal path feeds its verified pairs, clique-shaped band
+    collisions included, straight into connected components. With the
+    seed's edges-per-partition budget pinned tiny, the seed union-find
+    runs on many partitions and the loop must finish the contraction;
+    the surviving ids must equal the single-partition run's."""
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    postings = dedup.shingle_postings(docs, "doc_id", "text")
-    bands = dedup.lsh_bands(dedup.minhash_signatures(postings))
 
-    raw = dedup.lsh_candidate_pairs(bands)
-    bucketed = dedup.lsh_candidate_pairs(bands, with_bucket=True)
-    assert sorted((r["l_id"], r["r_id"]) for r in raw.collect()) == sorted(
-        (r["l_id"], r["r_id"]) for r in bucketed.collect()
-    )
+    def kept_ids():
+        out = dedup.remove_near_dups(docs, "doc_id", "text", use_lsh=True)
+        return sorted(r["doc_id"] for r in out.select("doc_id").collect())
 
-    verified = dedup._verify_jaccard_pairs(postings, bucketed, 0.5)
-    assert "__bucket" in verified.columns
-    contracted = dedup.star_contract_pairs(
-        verified.select("l_id", "r_id", "__bucket")
-    )
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    cc_raw = {
-        r["id"]: r["cluster_id"]
-        for r in dedup.connected_components(
-            nodes, verified.select("l_id", "r_id")
-        ).collect()
-    }
-    cc_con = {
-        r["id"]: r["cluster_id"]
-        for r in dedup.connected_components(nodes, contracted).collect()
-    }
-    assert cc_raw == cc_con
-    assert any(v != k for k, v in cc_raw.items())  # non-trivial clusters exist
-
-
-def test_embedding_ivf_star_contraction_components_identical(spark, sf_small):
-    """VERDICT r10 #4, embedding side: with_bucket must not change which
-    pairs verify (uncapped AND hot-cell-capped paths), and CC over the
-    cell-local star contraction equals CC over the raw pairs."""
-    from polars_sim_spark.operators import dedup
-
-    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    for cap in (None, 0.2):
-        kw = dict(
-            min_cosine=0.35, num_centroids=16, nprobe=2, assignment="expr",
-            max_cell_fraction=cap,
-        )
-        # Each call's pairs are consumed before the next call: the next
-        # call releases this one's checkpointed centroid assignment.
-        raw = dedup.embedding_ivf_near_dup_pairs(emb, "vec_id", "embedding", **kw)
-        raw_pairs = sorted((r["l_id"], r["r_id"]) for r in raw.collect())
-        nodes = emb.select(F.col("vec_id").alias("id"))
-        cc_raw = {
-            r["id"]: r["cluster_id"]
-            for r in dedup.connected_components(
-                nodes, raw.select("l_id", "r_id")
-            ).collect()
-        }
-        bucketed = dedup.embedding_ivf_near_dup_pairs(
-            emb, "vec_id", "embedding", with_bucket=True, **kw
-        )
-        assert raw_pairs == sorted(
-            (r["l_id"], r["r_id"]) for r in bucketed.collect()
-        ), f"cap={cap}"
-        contracted = dedup.star_contract_pairs(
-            bucketed.select("l_id", "r_id", "__bucket")
-        )
-        cc_con = {
-            r["id"]: r["cluster_id"]
-            for r in dedup.connected_components(nodes, contracted).collect()
-        }
-        assert cc_raw == cc_con, f"cap={cap}"
+    single = kept_ids()
+    monkeypatch.setattr(dedup, "_SEED_EDGES_PER_PART", 8)
+    multi = kept_ids()
+    assert multi == single
+    assert len(single) < docs.count()  # a non-trivial cluster was removed

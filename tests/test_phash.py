@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql.functions import col as pyspark_col
 
 from polars_sim_spark.operators.dedup import phash_near_pairs
 from polars_sim_spark.operators.multimodal import ppm_phash, synth_ppm
@@ -107,59 +106,6 @@ def test_constructed_near_dup_found_with_exact_distance(spark):
     ).count("1")
     assert d_true <= 1
     assert [(r["l_id"], r["r_id"], r["hamming"]) for r in pairs] == [(0, 1, d_true)]
-
-
-def test_star_contraction_preserves_components(spark):
-    """phash_contracted_pairs (round 10): connected components over the
-    band-locally star-contracted edge set must equal components over the
-    raw verified pairs — contraction changes diameter, never
-    connectivity. Also checks the contracted graph is never LARGER in
-    diameter: every contracted edge points at a local-min center."""
-    from polars_sim_spark.operators.dedup import (
-        connected_components,
-        phash_contracted_pairs,
-    )
-
-    images = _rand_images(11, 120)
-    df = _ppm_df(spark, images)
-    ph = ppm_phash(df, n_bands=8)
-    bands = tuple(f"band{j}" for j in range(8))
-    nodes = ph.select(pyspark_col("doc_id").alias("id"))
-
-    raw = phash_near_pairs(ph, id_col="doc_id", band_cols=bands, max_dist=7)
-    con = phash_contracted_pairs(ph, id_col="doc_id", band_cols=bands, max_dist=7)
-
-    lab_raw = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(
-            nodes, raw, id_col="id", src_col="l_id", dst_col="r_id"
-        ).collect()
-    }
-    lab_con = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(
-            nodes, con, id_col="id", src_col="l_id", dst_col="r_id"
-        ).collect()
-    }
-    assert lab_raw == lab_con
-    assert any(v != k for k, v in lab_raw.items())  # non-trivial clusters exist
-    # star invariant: every contracted edge's src is a smaller id
-    for r in con.collect():
-        assert r["l_id"] < r["r_id"]
-
-
-def test_star_contraction_collapses_chain_to_depth_one(spark):
-    """A synthetic within-bucket chain must contract to a single star:
-    union-find inside one bucket yields (min → member) edges only."""
-    from polars_sim_spark.operators.dedup import star_contract_pairs
-
-    # chain 1-2-3-4-5 in bucket A, separate pair 10-11 in bucket B
-    rows = [(1, 2, "A"), (2, 3, "A"), (3, 4, "A"), (4, 5, "A"), (10, 11, "B")]
-    pairs = spark.createDataFrame(rows, "l_id long, r_id long, __bucket string")
-    got = sorted(
-        (r["l_id"], r["r_id"]) for r in star_contract_pairs(pairs).collect()
-    )
-    assert got == [(1, 2), (1, 3), (1, 4), (1, 5), (10, 11)]
 
 
 def test_phash_cross_format_ppm_equals_bmp(spark):

@@ -5,7 +5,7 @@ without paying for the full 195-query run.
 
 Usage: python tools/bench_subset.py [--repeat N] <query> [query ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-       SPARK_GRAFT_CPUS (default 32)
+       SPARK_GRAFT_CPUS (default: the cores this process may run on)
 
 Prints one JSON line per query: {"query": ..., "secs": [...], "rows": N}.
 """

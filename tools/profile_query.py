@@ -9,7 +9,7 @@ read/write bytes, input bytes, and task count — plus per-query totals.
 
 Usage: python tools/profile_query.py [--repeat N] <query>
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-       SPARK_GRAFT_CPUS (default 32)
+       SPARK_GRAFT_CPUS (default: the cores this process may run on)
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ def main() -> None:
     name = args[0]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     evdir = tempfile.mkdtemp(prefix="spark-ev-")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     from pyspark.sql import SparkSession
 
     spark = (
