@@ -260,6 +260,24 @@ CANARY = [
 ]
 
 
+def _query_map_lines(timings: dict, limit: int = 1024) -> list:
+    """``timings`` as JSON lines ``{"queries_part": i, "queries": {...}}``,
+    each at most ``limit`` bytes, in the map's order."""
+    lines, part = [], {}
+
+    def render(d):
+        return json.dumps({"queries_part": len(lines), "queries": d})
+
+    for name, secs in timings.items():
+        if part and len(render({**part, name: secs}).encode()) > limit:
+            lines.append(render(part))
+            part = {}
+        part[name] = secs
+    if part:
+        lines.append(render(part))
+    return lines
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
@@ -473,6 +491,10 @@ def main() -> None:
         json.dump(full, fh, indent=1)
         fh.write("\n")
     print(json.dumps(full))
+    # The per-query map again, as lines of at most 1 KB each, so a tail
+    # capture that cuts the full line above still holds every time.
+    for line in _query_map_lines(timings):
+        print(line)
     print(
         json.dumps(
             {

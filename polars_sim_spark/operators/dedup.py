@@ -43,17 +43,6 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
 LSH_BANDS = 4
 LSH_ROWS_PER_BAND = 4
 
-#: IVF centroid-assignment strategy crossover: the Column-expression
-#: scorer evaluates num_centroids HOF dot products per row and becomes
-#: allocation-bound as centroids grow (measured at 10× data: 142
-#: centroids → 64.6 s expr vs 9.8 s GEMM kernel; at the contract's 16
-#: centroids expr is fine and oracle-exact). Auto mode flips to the
-#: kernel above this count. Re-confirmed round 4 on the ANN query paths
-#: (BASELINE.md "Kernel crossover re-measured"): kernel ≥ expr at every
-#: count, but ≤32 the gap is ~0.5-1 s fixed overhead while expr is the
-#: engine-reproducible path, so contract-scale quantizers stay exact.
-KERNEL_ASSIGNMENT_MIN_CENTROIDS = 32
-
 
 def md5_hash64(c: Column) -> Column:
     """Deterministic 32-bit-range token hash: first 8 hex chars of md5.
@@ -1652,7 +1641,6 @@ def remove_embedding_near_dups(
     min_cosine: float = 0.35,
     num_centroids: int | None = None,
     nprobe: int = 2,
-    assignment: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style SEMANTIC removal: the surviving corpus after
     collapsing every cosine-≥``min_cosine`` cluster of embeddings to
@@ -1675,7 +1663,6 @@ def remove_embedding_near_dups(
         min_cosine=min_cosine,
         num_centroids=num_centroids,
         nprobe=nprobe,
-        assignment=assignment,
     )
     nodes = df.select(F.col(id_col).alias("id"))
     cc = connected_components(nodes, verified.select("l_id", "r_id"))
@@ -1774,7 +1761,6 @@ def embedding_ivf_near_dup_pairs(
     min_cosine: float = 0.35,
     num_centroids: int | None = None,
     nprobe: int = 2,
-    assignment: str = "auto",
     max_cell_fraction: float | None = None,
     subprobe: int = 2,
 ) -> DataFrame:
@@ -1783,15 +1769,11 @@ def embedding_ivf_near_dup_pairs(
     several cells is generated once per cell and deduplicated with one
     ``distinct`` before verification.
 
-    ``assignment``: ``"expr"`` scores centroids with zero-shuffle
-    Column expressions (oracle-exact — what the contract query uses at
-    its fixed 16 centroids); ``"kernel"`` swaps in the Arrow-batched
-    GEMM (``similarity.centroid_assignments_kernel``) — same
-    assignments (equivalence-tested), 6.6× faster at √n centroids on
-    the 10× bench (64.6 → 9.8 s, BASELINE.md) because the expression
-    path's per-centroid HOF dot products are allocation-bound.
-    ``"auto"`` (default) picks kernel above
-    ``KERNEL_ASSIGNMENT_MIN_CENTROIDS``.
+    Centroids are scored by :func:`similarity._top_cells`: Column
+    expressions (oracle-exact) up to its 32-centroid crossover, the
+    Arrow-batched GEMM above — 6.6× faster at √n centroids on the 10×
+    bench (64.6 → 9.8 s, BASELINE.md) because the expression's
+    per-centroid HOF dot products are allocation-bound.
 
     Every vector is assigned to its ``nprobe`` nearest of
     ``num_centroids`` deterministic (md5-hash-sampled) centroids;
@@ -1833,16 +1815,8 @@ def embedding_ivf_near_dup_pairs(
     Back-to-back calls share one checkpoint slot (``_IVF_ASSIGNED``):
     consume each call's result before making the next call.
     """
-    from polars_sim_spark.operators.similarity import (
-        _centroid_scores,
-        centroid_assignments_kernel,
-        pick_centroids,
-    )
+    from polars_sim_spark.operators.similarity import _top_cells, _vec_side, pick_centroids
 
-    if assignment not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"assignment must be 'auto', 'expr' or 'kernel', got {assignment!r}"
-        )
     n_total = None
     if num_centroids is None:
         import math
@@ -1851,34 +1825,15 @@ def embedding_ivf_near_dup_pairs(
         # size and block count balanced.
         n_total = df.count()
         num_centroids = max(4, math.isqrt(n_total) + 1)
-    if assignment == "auto":
-        assignment = "kernel" if num_centroids > KERNEL_ASSIGNMENT_MIN_CENTROIDS else "expr"
     cent_rows = pick_centroids(df, id_col, vec_col, num_centroids).collect()
     cent_rows.sort(key=lambda r: r["c_id"])
-    from polars_sim_spark.functions.vectors import l2_norm
-
-    if assignment == "kernel":
-        assigned = centroid_assignments_kernel(
-            df, id_col, vec_col, cent_rows, nprobe
-        ).withColumnRenamed("id", "__vid")
-    else:
-        scores = _centroid_scores(cent_rows)
-        assigned = (
-            df.select(
-                F.col(id_col).alias("__vid"),
-                F.col(vec_col).alias("__v"),
-                l2_norm(vec_col).alias("__vn"),
-            )
-            .select(
-                "__vid",
-                F.explode(F.slice(F.sort_array(scores, asc=False), 1, nprobe)).alias("__s"),
-            )
-            .select("__vid", F.col("__s").getField("c_id").alias("c_id"))
-        )
+    assigned = _top_cells(
+        _vec_side(df, id_col, vec_col, "__vid"), cent_rows, nprobe=nprobe, carry=("__vid",)
+    )
     # Checkpoint at the fan-out (optimization round 15, the Change-16
     # pattern): `assigned` is the costliest projection of the query —
-    # the full 16-centroid HOF scoring (expr) or the Arrow GEMM
-    # (kernel) over every corpus vector — and it is referenced by BOTH
+    # the full 16-centroid HOF scoring (or the Arrow GEMM above 32
+    # centroids) over every corpus vector — and it is referenced by BOTH
     # self-join sides, and on the capped path additionally by the
     # cell-size agg and the hot/cold splits. Catalyst shares no
     # projection subtrees across references, so the uncapped plan
@@ -1902,7 +1857,7 @@ def embedding_ivf_near_dup_pairs(
         return _verify_cosine_pairs(df, id_col, vec_col, cands, min_cosine)
 
     # ---- hot-cell cap: re-quantize oversized cells in place ----
-    from polars_sim_spark.functions.vectors import dot
+    from polars_sim_spark.functions.vectors import dot, l2_norm
 
     if n_total is None:
         n_total = df.count()

@@ -362,6 +362,8 @@ def _load_index_artifacts(spark, path: str):
     hive cell data."""
     import numpy as np
 
+    from polars_sim_spark.operators.similarity import _read_centroids
+
     root = path.rstrip("/")
     try:
         residual = spark.read.parquet(root + "/_meta").collect()[0]["residual"]
@@ -372,11 +374,7 @@ def _load_index_artifacts(spark, path: str):
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
         residual = False
-    cent = spark.read.parquet(root + "/_centroids").collect()
-    cent_rows = [
-        {"c_id": r["c_id"], "__centroid": list(r["centroid"]), "__cnorm": r["cnorm"]}
-        for r in sorted(cent, key=lambda r: r["c_id"])
-    ]
+    cent_rows = _read_centroids(spark, root)
     pq_rows = spark.read.parquet(root + "/_pq").collect()
     m = max(r["j"] for r in pq_rows) + 1
     kk = max(r["code"] for r in pq_rows) + 1
@@ -430,8 +428,8 @@ def _index_rows(
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """The stored form of ``corpus`` under GIVEN quantizers:
-    ``(id, vec, vnorm, codes, c_id)`` — cell assignment by the
-    oracle-exact expression path, codes from the broadcast-codebook
+    ``(id, vec, vnorm, codes, c_id)`` — cell assignment by
+    ``nearest_centroid_assignments``, codes from the broadcast-codebook
     Arrow kernel. Shared by the initial build, the pinned rebuild and
     the incremental append, so all three store byte-identical content
     for the same rows."""
@@ -443,7 +441,6 @@ def _index_rows(
             corpus,
             id_col=id_col,
             vec_col=vec_col,
-            assignment="expr",
             cent_rows=cent_rows,
         ).select(F.col("id").alias(id_col), "c_id")
     if residual:
@@ -548,6 +545,7 @@ def materialize_ivfpq_index(
     :func:`append_to_ivfpq_index`.
     """
     from polars_sim_spark.operators.similarity import (
+        _write_centroids,
         nearest_centroid_assignments,
         pick_centroids,
         refine_centroids_kmeans,
@@ -566,7 +564,6 @@ def materialize_ivfpq_index(
             corpus,
             id_col=id_col,
             vec_col=vec_col,
-            assignment="expr",
             cent_rows=cent_rows,
         ).select(F.col("id").alias(id_col), "c_id")
     else:
@@ -576,16 +573,13 @@ def materialize_ivfpq_index(
             cent_rows = refine_centroids_kmeans(
                 corpus, vec_col, cent_rows, kmeans_iters
             )
-        # cent_rows passed through + assignment pinned to the oracle-exact
-        # expression path: the stored centroid table and the stored cell
-        # assignments come from ONE quantizer computation (no duplicated
-        # Lloyd run), and no kernel 6-decimal rounding-boundary divergence
-        # can slip between what is stored and how rows were routed.
+        # cent_rows passed through: the stored centroid table and the
+        # stored cell assignments come from ONE quantizer computation (no
+        # duplicated Lloyd run).
         assigned = nearest_centroid_assignments(
             corpus,
             id_col=id_col,
             vec_col=vec_col,
-            assignment="expr",
             cent_rows=cent_rows,
         ).select(F.col("id").alias(id_col), "c_id")
         if residual:
@@ -605,14 +599,7 @@ def materialize_ivfpq_index(
     spark.createDataFrame([(bool(residual),)], "residual boolean").coalesce(
         1
     ).write.mode("overwrite").parquet(path.rstrip("/") + "/_meta")
-    id_type = dict(corpus.dtypes)[id_col]
-    spark.createDataFrame(
-        [
-            (r["c_id"], [float(x) for x in r["__centroid"]], float(r["__cnorm"]))
-            for r in cent_rows
-        ],
-        f"c_id {id_type}, centroid array<double>, cnorm double",
-    ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/_centroids")
+    _write_centroids(corpus, id_col, cent_rows, path)
     mm, kk, dsub = cb.shape
     spark.createDataFrame(
         [
@@ -650,7 +637,8 @@ def ann_topk_ivfpq_prebuilt(
     broadcasts per-query ADC LUTs — fastest for top-k serving (few
     queries), but driver memory is q × m × k. ``"distributed"`` never
     collects query vectors: queries score the stored centroids as a
-    Column projection, join their probed cells' codes by cell id, and
+    zero-shuffle projection (``similarity._top_cells``), join their
+    probed cells' codes by cell id, and
     the Arrow ADC kernel builds per-query LUTs inside each batch (no
     extra shuffle — rows score where the cell join left them) —
     driver traffic is O(index metadata) regardless of batch size (the
@@ -661,8 +649,8 @@ def ann_topk_ivfpq_prebuilt(
     import numpy as np
     import pandas as pd
 
-    from polars_sim_spark.functions.vectors import cosine_similarity, l2_norm
-    from polars_sim_spark.operators.similarity import _centroid_scores
+    from polars_sim_spark.functions.vectors import cosine_similarity
+    from polars_sim_spark.operators.similarity import _top_cells, _vec_side
     from pyspark.sql import Window
 
     if query_mode not in ("auto", "driver", "distributed"):
@@ -697,18 +685,11 @@ def ann_topk_ivfpq_prebuilt(
             is_residual=is_residual,
         )
 
-    scores = _centroid_scores(cent_rows)
-    probes = (
-        queries.select(
-            F.col(q_id_col).alias("q_id"),
-            F.col(q_vec_col).alias("__v"),
-            l2_norm(q_vec_col).alias("__vn"),
-        )
-        .select(
-            "q_id",
-            F.explode(F.slice(F.sort_array(scores, asc=False), 1, nprobe)).alias("__s"),
-        )
-        .select("q_id", F.col("__s").getField("c_id").alias("c_id"))
+    probes = _top_cells(
+        _vec_side(queries, q_id_col, q_vec_col, "q_id"),
+        cent_rows,
+        nprobe=nprobe,
+        carry=("q_id",),
     )
     cells = sorted({r["c_id"] for r in probes.select("c_id").distinct().collect()})
 
@@ -819,7 +800,8 @@ def _ivfpq_serve_distributed(
 ) -> DataFrame:
     """Query-distributed IVF-PQ serving: no driver collect of query
     vectors at any batch size. Queries score the stored centroids as a
-    zero-shuffle Column projection and explode into (q_id, q̂vec, cell)
+    zero-shuffle projection (``similarity._top_cells``: Column
+    expression up to 32 centroids, GEMM above) into (q_id, q̂vec, cell)
     probe rows; the probed cells' code rows join them BY CELL ID (a
     shuffled equi-join — the query side is batch-sized, deliberately
     not broadcast); the Arrow ADC kernel then scores rows WHERE THE
@@ -836,8 +818,8 @@ def _ivfpq_serve_distributed(
     import numpy as np
     import pandas as pd
 
-    from polars_sim_spark.functions.vectors import cosine_similarity, l2_norm
-    from polars_sim_spark.operators.similarity import _centroid_scores
+    from polars_sim_spark.functions.vectors import cosine_similarity
+    from polars_sim_spark.operators.similarity import _top_cells, _vec_side
     from pyspark.sql import Window
 
     m, kk, dsub = cb.shape
@@ -850,20 +832,12 @@ def _ivfpq_serve_distributed(
             cent_unit[r["c_id"]] = v
     bc = spark.sparkContext.broadcast((cb, cent_unit, is_residual))
 
-    scores = _centroid_scores(cent_rows)
-    probes = (
-        queries.select(
-            F.col(q_id_col).alias("q_id"),
-            F.col(q_vec_col).alias("__v"),
-            l2_norm(q_vec_col).alias("__vn"),
-        )
-        .select(
-            "q_id",
-            F.col("__v").alias("__qv"),
-            F.explode(F.slice(F.sort_array(scores, asc=False), 1, nprobe)).alias("__s"),
-        )
-        .select("q_id", "__qv", F.col("__s").getField("c_id").alias("c_id"))
-    )
+    probes = _top_cells(
+        _vec_side(queries, q_id_col, q_vec_col, "q_id"),
+        cent_rows,
+        nprobe=nprobe,
+        carry=("q_id", "__v"),
+    ).withColumnRenamed("__v", "__qv")
     # Probed-cell id list: bounded by the CENTROID count, not the query
     # count — the one sanctioned driver read, feeding partition pruning.
     cells = sorted({r["c_id"] for r in probes.select("c_id").distinct().collect()})

@@ -101,6 +101,27 @@ def pick_centroids(
     )
 
 
+#: Centroid-scoring crossover, read only by :func:`_top_cells`: above
+#: this many centroids the broadcast-matrix GEMM scores, at or below it
+#: the Column expression. The expression evaluates num_centroids HOF dot
+#: products per row over num_centroids × dim plan literals, so it grows
+#: allocation- and planning-bound (10× data, 142 centroids: 64.6 s vs
+#: 9.8 s GEMM). Up to 32 the GEMM's lead is ~0.5-1 s of fixed overhead,
+#: and the expression rounds exactly as the DuckDB oracles do
+#: (BASELINE.md "Kernel crossover re-measured", SCALE.md "Large centroid
+#: counts").
+KERNEL_ASSIGNMENT_MIN_CENTROIDS = 32
+
+
+def _vec_side(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
+    """``(out_id, __v, __vn)``: the frame :func:`_top_cells` scores."""
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.col(vec_col).alias("__v"),
+        l2_norm(vec_col).alias("__vn"),
+    )
+
+
 def _centroid_scores(cent_rows) -> Column:
     """``array<struct<sim,tie,c_id>>`` scoring a row's ``__v``/``__vn``
     against every (collected) centroid — a pure Column expression, so
@@ -189,16 +210,17 @@ def refine_centroids_kmeans(
     vec_col: str,
     cent_rows: list,
     iters: int,
-    assignment: str = "expr",
 ) -> list:
     """``iters`` Lloyd iterations over collected centroid rows.
 
     Each iteration: (1) assign every corpus vector to its nearest
-    centroid — the same ZERO-shuffle array-expression argmax as the index
-    assignment; (2) per-centroid component means via posexplode + one
-    hash aggregate — the only shuffle, of narrow (c_id, pos, val) rows;
-    (3) collect the ``num_centroids × dim`` means (an O(1) driver read,
-    ≤ a few thousand rows) and rebuild the literal centroid table.
+    centroid — the same zero-shuffle :func:`_top_cells` scoring as the
+    index assignment, with the vector carried along so the component
+    aggregate needs no join back; (2) per-centroid component means via
+    posexplode + one hash aggregate — the only shuffle, of narrow
+    (c_id, pos, val) rows; (3) collect the ``num_centroids × dim`` means
+    (an O(1) driver read, ≤ a few thousand rows) and rebuild the
+    centroid table.
     Each component is rounded to 6 decimals and accumulated as
     DECIMAL(18,6) — an EXACT, order-independent sum — then divided by the
     member count and rounded to 6 decimals, so any engine (and any
@@ -208,31 +230,11 @@ def refine_centroids_kmeans(
     ``embedding_label_centroids``). A centroid that loses every member
     keeps its previous position.
 
-    ``assignment="kernel"`` routes step (1) through the broadcast-matrix
-    GEMM (``centroid_assignments_kernel`` with ``carry_vec=True`` —
-    one row per vector, vector carried through so the component
-    aggregate needs NO join back), eliminating the num_centroids × dim
-    plan literals that bind past a few hundred centroids — the same
-    lever as the IVF probe scorer (BASELINE.md). The component SUMS
-    stay on the exact decimal expression path either way; only the
-    assignment argmax inherits the kernel's documented 6-decimal
-    rounding-boundary caveat, so contract queries keep ``"expr"``.
-
     Returns rows shaped like ``pick_centroids`` output (dicts with
     ``c_id``/``__centroid``/``__cnorm``), sorted by c_id.
     """
     import math
 
-    if assignment not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"assignment must be 'auto', 'expr' or 'kernel', got {assignment!r}"
-        )
-    if assignment == "auto":
-        from polars_sim_spark.operators.dedup import KERNEL_ASSIGNMENT_MIN_CENTROIDS
-
-        assignment = (
-            "kernel" if len(cent_rows) > KERNEL_ASSIGNMENT_MIN_CENTROIDS else "expr"
-        )
     cents = [
         {
             "c_id": r["c_id"],
@@ -241,39 +243,14 @@ def refine_centroids_kmeans(
         }
         for r in cent_rows
     ]
-    if assignment == "kernel":
-        # synthetic pass-through id (never surfaced); c_id dtype derives
-        # from the centroid ids themselves since no corpus id is in play
-        c_id_type = "string" if isinstance(cents[0]["c_id"], str) else "bigint"
-        vecs = corpus.select(
-            F.monotonically_increasing_id().alias("__kid"),
-            F.col(vec_col).alias("__kv"),
-        )
-    else:
-        vecs = corpus.select(
-            F.col(vec_col).alias("__v"), l2_norm(vec_col).alias("__vn")
-        )
+    vecs = corpus.select(F.col(vec_col).alias("__v"), l2_norm(vec_col).alias("__vn"))
     if iters > 1:
         # Each iteration scans the projected vectors once; for multi-iter
         # training pay the materialization once instead of re-reading
         # (and re-decoding) the source per iteration.
         vecs = vecs.persist()
     for _ in range(iters):
-        if assignment == "kernel":
-            assigned = centroid_assignments_kernel(
-                vecs,
-                "__kid",
-                "__kv",
-                cents,
-                nprobe=1,
-                c_id_type=c_id_type,
-                carry_vec=True,
-            ).select("c_id", "__v")
-        else:
-            scores = _centroid_scores(cents)
-            assigned = vecs.select(
-                F.array_max(scores).getField("c_id").alias("c_id"), F.col("__v")
-            )
+        assigned = _top_cells(vecs, cents, carry=("__v",))
         comp6 = F.round(F.col("val").cast("double"), 6).cast("decimal(18,6)")
         means = (
             assigned.select("c_id", F.posexplode("__v").alias("pos", "val"))
@@ -321,7 +298,6 @@ def ann_topk_ivf(
     nprobe: int = 3,
     kmeans_iters: int = 0,
     exclude_same_id: bool = True,
-    assignment: str = "auto",
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index.
 
@@ -335,81 +311,30 @@ def ann_topk_ivf(
     those candidates. Recall improves with nprobe at linear cost.
 
     At scale the assignment is a pure per-row projection (ZERO shuffle of
-    the corpus — see ``_centroid_scores``); the candidate join shuffles a
-    narrow (id, centroid) projection by centroid id, so work is
+    the corpus — see :func:`_top_cells`, which scores both sides by
+    Column expression up to ``KERNEL_ASSIGNMENT_MIN_CENTROIDS`` centroids
+    and by the broadcast-matrix GEMM above); the candidate join shuffles
+    a narrow (id, centroid) projection by centroid id, so work is
     proportional to the probed lists, never the full corpus per query.
-
-    ``assignment`` governs the CORPUS-side scoring: ``"expr"`` = the
-    Column-expression path (oracle-exact, what the contract queries
-    use at their fixed small centroid counts); ``"kernel"`` = the
-    Arrow-batched GEMM (``centroid_assignments_kernel``; same
-    assignments, equivalence-tested, 6.6× cheaper at √n centroids —
-    BASELINE.md); ``"auto"`` flips to kernel above
-    ``dedup.KERNEL_ASSIGNMENT_MIN_CENTROIDS``. Kernel mode scores the
-    probe side against the broadcast centroid matrix too, so the
-    num_centroids × dim literal array is never built — at large centroid
-    counts constructing/compiling those plan literals is itself the
-    binding cost (BASELINE.md "probe scorer at large centroid counts").
     """
-    from polars_sim_spark.operators.dedup import KERNEL_ASSIGNMENT_MIN_CENTROIDS
-
-    if assignment not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"assignment must be 'auto', 'expr' or 'kernel', got {assignment!r}"
-        )
-    if assignment == "auto":
-        assignment = (
-            "kernel" if num_centroids > KERNEL_ASSIGNMENT_MIN_CENTROIDS else "expr"
-        )
     # The collect is an O(num_centroids) scout read (16 rows), the one
     # sanctioned driver-read pattern.
     cent_rows = pick_centroids(corpus, id_col, vec_col, num_centroids).collect()
     cent_rows.sort(key=lambda r: r["c_id"])
     if kmeans_iters > 0:
-        cent_rows = refine_centroids_kmeans(
-            corpus, vec_col, cent_rows, kmeans_iters, assignment=assignment
-        )
-
-    def _side(df, in_id, in_vec, out_id):
-        return df.select(
-            F.col(in_id).alias(out_id),
-            F.col(in_vec).alias("__v"),
-            l2_norm(in_vec).alias("__vn"),
-        )
-
-    # argmax / top-nprobe over the centroid scores as pure array
-    # expressions — no crossJoin, no window, no Exchange: the judge's
-    # round-1 finding was a full-corpus shuffle of 16n rows here.
-    #
-    # In kernel mode BOTH sides score against the broadcast centroid
-    # matrix and the num_centroids × dim literal array is never built:
-    # past a few hundred centroids the literal plan itself (construction
-    # + codegen of c×dim constants) becomes the binding cost even when
-    # only the tiny probe side evaluates it (measured — BASELINE.md
-    # "probe scorer at large centroid counts").
-    if assignment == "kernel":
-        assign = centroid_assignments_kernel(
-            corpus, id_col, vec_col, cent_rows, nprobe=1
-        ).withColumnRenamed("id", "n_id")
-        probes = centroid_assignments_kernel(
-            queries,
-            query_id_col,
-            query_vec_col,
-            cent_rows,
-            nprobe=nprobe,
-            c_id_type=dict(corpus.dtypes)[id_col],
-        ).withColumnRenamed("id", "q_id")
-    else:
-        scores = _centroid_scores(cent_rows)
-        assign = _side(corpus, id_col, vec_col, "n_id").select(
-            "n_id", F.array_max(scores).getField("c_id").alias("c_id")
-        )
-        probes = _side(queries, query_id_col, query_vec_col, "q_id").select(
-            "q_id",
-            F.explode(
-                F.slice(F.sort_array(scores, asc=False), 1, nprobe)
-            ).alias("__s"),
-        ).select("q_id", F.col("__s").getField("c_id").alias("c_id"))
+        cent_rows = refine_centroids_kmeans(corpus, vec_col, cent_rows, kmeans_iters)
+    # argmax / top-nprobe over the centroid scores — no crossJoin, no
+    # window, no Exchange (a windowed formulation shuffled 16n rows of
+    # the full corpus here).
+    assign = _top_cells(
+        _vec_side(corpus, id_col, vec_col, "n_id"), cent_rows, carry=("n_id",)
+    )
+    probes = _top_cells(
+        _vec_side(queries, query_id_col, query_vec_col, "q_id"),
+        cent_rows,
+        nprobe=nprobe,
+        carry=("q_id",),
+    )
     # |Q|·nprobe rows — broadcast so the corpus-sized assignment side
     # never shuffles for the candidate join (mapInPandas sources carry
     # no size stats, so without the hint this planned as SortMergeJoin).
@@ -600,74 +525,59 @@ def centroid_assignments_kernel(
     id_col: str,
     vec_col: str,
     cent_rows: list,
-    nprobe: int,
-    c_id_type: str | None = None,
-    carry_vec: bool = False,
-    carry_sim: bool = False,
+    nprobe: int = 1,
+    *,
+    sim: bool = False,
 ) -> DataFrame:
-    """(id, c_id[, sim][, __v]): each vector's top-``nprobe`` centroids via one
-    Arrow-batched numpy GEMM per partition — the kernel twin of the
-    Column-expression assignment (``_centroid_scores``).
+    """``(id_col, c_id[, sim])``: each ``vec_col`` vector's top-``nprobe``
+    centroids via one Arrow-batched numpy GEMM per partition — the GEMM
+    arm of :func:`_top_cells`, which alone decides when it runs.
+    ``id_col`` rides the Arrow batch through (it may be ``vec_col``
+    itself), repeated once per emitted centroid; ``sim`` adds the
+    6-dp-rounded cosine to that centroid.
 
-    The expression path evaluates num_centroids HOF dot products per
-    row (one ``zip_with`` array allocation + ``aggregate`` each) —
-    zero-shuffle and oracle-exact, but allocation-bound once the
-    centroid count grows past a few dozen (measured: the √n-centroid
-    assignment dominated IVF dedup wall-clock at 10× data,
-    BASELINE.md). Here the centroid matrix is broadcast once and each
-    Arrow batch computes ``V @ Cᵀ`` as a single dense product — the
-    same physical idea as the reference's in-memory kernel regime
-    (``src/cossim.rs:62-141``: hold one side dense, stream the other).
+    The expression arm (``_centroid_scores``) evaluates num_centroids
+    HOF dot products per row (one ``zip_with`` array allocation +
+    ``aggregate`` each) — zero-shuffle and oracle-exact, but
+    allocation-bound once the centroid count grows past a few dozen
+    (measured: the √n-centroid assignment dominated IVF dedup wall-clock
+    at 10× data, BASELINE.md). Here the centroid matrix is broadcast
+    once and each Arrow batch computes ``V @ Cᵀ`` as a single dense
+    product — the same physical idea as the reference's in-memory kernel
+    regime (``src/cossim.rs:62-141``: hold one side dense, stream the
+    other).
 
-    Tiebreak matches the expression path exactly: sims rounded to 6
+    Tiebreak matches the expression arm exactly: sims rounded to 6
     decimals, descending, ties by centroid rank (= c_id order,
     ``cent_rows`` must be sorted by c_id) — ``np.argsort(kind='stable')``
-    preserves rank order on ties. Equivalence to the expression path is
-    exact UP TO 6-DECIMAL ROUNDING BOUNDARIES: ``np.round`` is
-    half-to-even while Spark's ``F.round`` is HALF_UP, and the GEMM's
-    float reduction order differs from the HOF sum's, so a cosine landing
-    exactly on a boundary can round differently and flip an assignment.
-    Downstream verification is always exact, so only candidate recall
-    (not correctness) can drift; contract/oracle queries pin
-    ``assignment="expr"`` precisely so their outputs never depend on
-    this. The equivalence tests use corpora away from boundaries.
+    preserves rank order on ties; ``c_id`` takes the type the expression
+    arm gives it (``bigint`` for integer ids). Equivalence is exact UP
+    TO 6-DECIMAL ROUNDING BOUNDARIES: ``np.round`` is half-to-even while
+    Spark's ``F.round`` is HALF_UP, and the GEMM's float reduction order
+    differs from the HOF sum's, so a cosine landing exactly on a boundary
+    can round differently and flip an assignment. Downstream
+    verification is always exact, so only candidate recall (not
+    correctness) can drift; every contract row scores at most 32
+    centroids, so oracle outputs never depend on this — except
+    ``resolve_entities_scale`` at sf0.1, whose oracle pins the GEMM's
+    probes too. The equivalence tests use corpora away from boundaries.
 
-    Mixed-dimension corpora are rejected (the GEMM needs a rectangular
-    batch); the expression path handles them via zip_with semantics.
+    Null and mixed-dimension vectors are rejected (the GEMM needs a
+    rectangular batch); the expression arm scores them with zip_with
+    semantics.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
+    src = df.select(*dict.fromkeys([id_col, vec_col]))
     dim = len(cent_rows[0]["__centroid"])
     cmat = np.array([r["__centroid"] for r in cent_rows], dtype=np.float64)
     cnorm = np.array([r["__cnorm"] for r in cent_rows], dtype=np.float64)
     c_ids = np.array([r["c_id"] for r in cent_rows])
     bc = df.sparkSession.sparkContext.broadcast((cmat, cnorm, c_ids))
-
-    if carry_vec and nprobe != 1:
-        raise ValueError(
-            "carry_vec emits exactly one row per input vector; it requires "
-            f"nprobe=1 (got {nprobe})"
-        )
-    id_type = dict(df.dtypes)[id_col]
-    # c_id values come from the CORPUS that produced cent_rows; when the
-    # scored side is a different table (the probe path), its id type may
-    # differ from the centroid id type — let callers say so.
-    fields = [
-        T.StructField("id", T._parse_datatype_string(id_type)),
-        T.StructField("c_id", T._parse_datatype_string(c_id_type or id_type)),
-    ]
-    if carry_sim:
-        # the (6-dp-rounded) cosine to each emitted centroid — what
-        # nearest_centroid_assignments/cluster_medoids consume; same
-        # rounding-boundary caveat as the assignment argmax itself
-        fields.append(T.StructField("sim", T._parse_datatype_string("double")))
-    if carry_vec:
-        # float→double widening is exact, and the k-means consumer rounds
-        # per-component to the 6-dp grid anyway
-        fields.append(T.StructField("__v", T._parse_datatype_string("array<double>")))
-    schema = T.StructType(fields)
+    fields = [src.schema[id_col], T.StructField("c_id", T._infer_type(c_ids[0].item()))]
+    if sim:
+        fields.append(T.StructField("sim", T.DoubleType()))
 
     def compute(batches):
         cmat_, cnorm_, cids_ = bc.value
@@ -675,47 +585,81 @@ def centroid_assignments_kernel(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if pdf["__v"].isnull().any():
-                bad = pdf.loc[pdf["__v"].isnull(), "__id"].head(3).tolist()
+            vecs = pdf[vec_col]
+            if vecs.isnull().any():
+                bad = pdf.loc[vecs.isnull(), id_col].head(3).tolist()
                 raise ValueError(
                     "centroid_assignments_kernel: null embedding vectors "
-                    f"(e.g. ids {bad}); drop/impute nulls first, or use the "
-                    "expression assignment, which scores them as empty"
+                    f"(e.g. {id_col} {bad}); drop or impute nulls first"
                 )
-            vlens = pdf["__v"].map(len)
+            vlens = vecs.map(len)
             if (vlens != dim).any():
                 raise ValueError(
                     f"centroid_assignments_kernel needs uniform {dim}-dim vectors; "
-                    f"found lengths {sorted(set(vlens) - {dim})} — use the "
-                    "expression assignment for mixed-dimension corpora"
+                    f"found lengths {sorted(set(vlens) - {dim})}"
                 )
-            vmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
+            vmat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
             vnorm = np.sqrt((vmat * vmat).sum(axis=1))
             denom = np.outer(vnorm, cnorm_)
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = np.where(denom > 0.0, (vmat @ cmat_.T) / denom, 0.0)
             sims = np.round(sims, 6)
             top = np.argsort(-sims, axis=1, kind="stable")[:, :k]
-            if carry_vec:
-                out = {
-                    "id": pdf["__id"].to_numpy(),
-                    "c_id": cids_[top[:, 0]],
-                }
-                if carry_sim:
-                    out["sim"] = sims[np.arange(len(pdf)), top[:, 0]]
-                out["__v"] = pdf["__v"]
-                yield pd.DataFrame(out)
-            else:
-                ids = np.repeat(pdf["__id"].to_numpy(), k)
-                out = {"id": ids, "c_id": cids_[top].ravel()}
-                if carry_sim:
-                    out["sim"] = sims[
-                        np.repeat(np.arange(len(pdf)), k), top.ravel()
-                    ]
-                yield pd.DataFrame(out)
+            out = pdf[[id_col]].iloc[np.repeat(np.arange(len(pdf)), k)]
+            out = out.reset_index(drop=True)
+            out["c_id"] = cids_[top].ravel()
+            if sim:
+                out["sim"] = np.take_along_axis(sims, top, axis=1).ravel()
+            yield out
 
-    src = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-    return src.mapInPandas(compute, schema=schema)
+    return src.mapInPandas(compute, schema=T.StructType(fields))
+
+
+def _top_cells(
+    df: DataFrame,
+    cent_rows: list,
+    *,
+    nprobe: int = 1,
+    sim: bool = False,
+    carry=(),
+) -> DataFrame:
+    """``(*carry, c_id[, sim])``: the top-``nprobe`` centroids of each
+    ``__v`` vector of ``df`` (``__vn`` its norm), one row per emitted
+    centroid, with the ``carry`` columns of ``df`` passed through —
+    the first one a unique row key (usually the id) whenever more
+    follow; ``sim`` adds the 6-dp cosine.
+
+    The one place that picks the scorer, by centroid count:
+    ``_centroid_scores`` (a zero-shuffle Column expression, oracle-exact)
+    up to ``KERNEL_ASSIGNMENT_MIN_CENTROIDS`` centroids, the
+    broadcast-matrix GEMM (:func:`centroid_assignments_kernel`) above,
+    where the expression's plan literals and per-row HOF dot products
+    become the binding cost. Ties break to the smaller c_id on both
+    arms (``cent_rows`` sorted by c_id).
+    """
+    fields = ("c_id", "sim") if sim else ("c_id",)
+    if len(cent_rows) > KERNEL_ASSIGNMENT_MIN_CENTROIDS:
+        # Only the key rides the Arrow batch; the other carried columns
+        # re-attach by a key join, which the caller's next join sits on
+        # (the ×100 order of knn_graph_ivf_prebuilt). Carrying the vectors
+        # through the batch instead read 0.96 MB of shuffle against
+        # 0.56 MB on resolve_entities_scale at sf0.1.
+        top = centroid_assignments_kernel(df, carry[0], "__v", cent_rows, nprobe, sim=sim)
+        if len(carry) == 1:
+            return top
+        return top.join(df.select(*carry), carry[0]).select(*carry, *fields)
+    scores = _centroid_scores(cent_rows)
+    if nprobe == 1:
+        best = F.array_max(scores)
+        if not sim:
+            return df.select(*carry, best.getField("c_id").alias("c_id"))
+        top, name = best, "__b"
+    else:
+        top = F.explode(F.slice(F.sort_array(scores, asc=False), 1, nprobe))
+        name = "__s"
+    return df.select(*carry, top.alias(name)).select(
+        *carry, *(F.col(name).getField(f).alias(f) for f in fields)
+    )
 
 
 def bm25_topk(
@@ -816,59 +760,28 @@ def nearest_centroid_assignments(
     vec_col: str = "embedding",
     num_centroids: int = 16,
     kmeans_iters: int = 0,
-    assignment: str = "auto",
     cent_rows: list | None = None,
 ) -> DataFrame:
     """``(id, c_id, sim)``: every corpus vector labeled with its nearest
     deterministic (hash-sampled, optionally k-means-refined) centroid
     and the cosine to it — the shared front end of
-    :func:`cluster_medoids` and cluster-balanced sampling. A zero-
-    shuffle scan projection either way: ``"expr"`` is the oracle-exact
-    Column path (``_centroid_scores``), ``"kernel"`` the broadcast-matrix
-    GEMM with ``carry_sim`` (no ``num_centroids × dim`` plan literals —
-    the binding cost past a few hundred centroids, BASELINE.md);
-    ``"auto"`` flips at ``dedup.KERNEL_ASSIGNMENT_MIN_CENTROIDS``.
+    :func:`cluster_medoids`, cluster-balanced sampling and the IVF index
+    builds. A zero-shuffle scan projection (:func:`_top_cells`, which
+    picks its scorer by centroid count). ``corpus`` may be a streaming
+    frame: the projection is stateless, so it runs in append mode.
 
     ``cent_rows``: pre-computed quantizer rows (pick_centroids shape,
     sorted by c_id). When given, the pick/refine steps are SKIPPED —
     the index-materialization path passes the rows it is about to store
     so stored centroids and stored assignments come from the one
     computation (no duplicated Lloyd run, no risk of the two drifting)."""
-    from polars_sim_spark.operators.dedup import KERNEL_ASSIGNMENT_MIN_CENTROIDS
-
-    if assignment not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"assignment must be 'auto', 'expr' or 'kernel', got {assignment!r}"
-        )
-    if assignment == "auto":
-        n_cents = len(cent_rows) if cent_rows is not None else num_centroids
-        assignment = (
-            "kernel" if n_cents > KERNEL_ASSIGNMENT_MIN_CENTROIDS else "expr"
-        )
     if cent_rows is None:
         cent_rows = pick_centroids(corpus, id_col, vec_col, num_centroids).collect()
         cent_rows.sort(key=lambda r: r["c_id"])
         if kmeans_iters > 0:
-            cent_rows = refine_centroids_kmeans(
-                corpus, vec_col, cent_rows, kmeans_iters, assignment=assignment
-            )
-    if assignment == "kernel":
-        return centroid_assignments_kernel(
-            corpus, id_col, vec_col, cent_rows, nprobe=1, carry_sim=True
-        )
-    scores = _centroid_scores(cent_rows)
-    return (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("__v"),
-            l2_norm(vec_col).alias("__vn"),
-        )
-        .select("id", F.array_max(scores).alias("__b"))
-        .select(
-            "id",
-            F.col("__b").getField("c_id").alias("c_id"),
-            F.col("__b").getField("sim").alias("sim"),
-        )
+            cent_rows = refine_centroids_kmeans(corpus, vec_col, cent_rows, kmeans_iters)
+    return _top_cells(
+        _vec_side(corpus, id_col, vec_col, "id"), cent_rows, sim=True, carry=("id",)
     )
 
 
@@ -879,7 +792,6 @@ def cluster_medoids(
     vec_col: str = "embedding",
     num_centroids: int = 16,
     kmeans_iters: int = 0,
-    assignment: str = "auto",
 ) -> DataFrame:
     """One representative example per cluster: assign every vector to
     its nearest (hash-sampled, optionally k-means-refined) centroid and
@@ -890,7 +802,7 @@ def cluster_medoids(
     cluster-balanced sampling.
 
     Plan: the assignment is the same zero-shuffle score projection as
-    IVF (``_centroid_scores``); the only exchange is ONE shuffle by
+    IVF (:func:`_top_cells`); the only exchange is ONE shuffle by
     centroid id for the medoid rank + cluster-size window pair (same
     partitioning, shared Exchange). Output: (c_id, medoid_id, sim,
     cluster_size).
@@ -901,7 +813,6 @@ def cluster_medoids(
         vec_col=vec_col,
         num_centroids=num_centroids,
         kmeans_iters=kmeans_iters,
-        assignment=assignment,
     )
     rank_w = Window.partitionBy("c_id").orderBy(F.desc("sim"), F.asc("id"))
     size_w = Window.partitionBy("c_id")
@@ -926,7 +837,6 @@ def materialize_ivf_index(
     vec_col: str = "embedding",
     num_centroids: int = 16,
     kmeans_iters: int = 0,
-    assignment: str = "auto",
 ) -> None:
     """Persist the corpus as an on-disk IVF index: hive-partitioned
     parquet ``path/c_id=<cell>/`` holding ``(id, vec, vnorm)`` per
@@ -941,17 +851,15 @@ def materialize_ivf_index(
     is the probed lists, never the corpus (plan-asserted in
     tests/test_sinks.py). Rebuild cadence is the reclustering policy;
     appends go to the cell directory chosen by
-    :func:`stream_centroid_assign` / ``centroid_assignments_kernel``
-    against the SAME stored centroid table.
+    :func:`nearest_centroid_assignments` (or its streaming twin,
+    ``stream_centroid_assign``) against the SAME stored centroid table.
     """
     from polars_sim_spark.sources.sinks import write_partitioned
 
     cent_rows = pick_centroids(corpus, id_col, vec_col, num_centroids).collect()
     cent_rows.sort(key=lambda r: r["c_id"])
     if kmeans_iters > 0:
-        cent_rows = refine_centroids_kmeans(
-            corpus, vec_col, cent_rows, kmeans_iters, assignment=assignment
-        )
+        cent_rows = refine_centroids_kmeans(corpus, vec_col, cent_rows, kmeans_iters)
     # cent_rows passed through: the stored centroid table and the stored
     # assignments derive from the SAME quantizer computation (no second
     # pick/Lloyd run).
@@ -959,7 +867,6 @@ def materialize_ivf_index(
         corpus,
         id_col=id_col,
         vec_col=vec_col,
-        assignment=assignment,
         cent_rows=cent_rows,
     ).select(F.col("id").alias(id_col), "c_id")
     rows = corpus.select(
@@ -968,14 +875,31 @@ def materialize_ivf_index(
     # One file per inverted list; single-file centroid sidecar — a probed
     # cell is one contiguous read.
     write_partitioned(rows.repartition("c_id"), path, partition_by=["c_id"])
-    spark = corpus.sparkSession
-    spark.createDataFrame(
+    _write_centroids(corpus, id_col, cent_rows, path)
+
+
+def _write_centroids(corpus: DataFrame, id_col: str, cent_rows: list, path: str) -> None:
+    """Store ``cent_rows`` as the index's single-file centroid sidecar
+    ``<path>/_centroids`` — ``(c_id, centroid, cnorm)``, c_id typed as
+    ``corpus[id_col]``; :func:`_read_centroids` is its reader."""
+    corpus.sparkSession.createDataFrame(
         [
             (r["c_id"], [float(x) for x in r["__centroid"]], float(r["__cnorm"]))
             for r in cent_rows
         ],
         f"c_id {dict(corpus.dtypes)[id_col]}, centroid array<double>, cnorm double",
     ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/_centroids")
+
+
+def _read_centroids(spark, path: str) -> list:
+    """The stored centroid table of an IVF index at ``path`` as
+    ``pick_centroids``-shaped rows sorted by c_id — an O(num_centroids)
+    driver read."""
+    cent = spark.read.parquet(path.rstrip("/") + "/_centroids").collect()
+    return [
+        {"c_id": r["c_id"], "__centroid": list(r["centroid"]), "__cnorm": r["cnorm"]}
+        for r in sorted(cent, key=lambda r: r["c_id"])
+    ]
 
 
 def ann_topk_ivf_prebuilt(
@@ -1013,28 +937,12 @@ def ann_topk_ivf_prebuilt(
     note k results are only guaranteed while the probed cells contain
     ≥ k allowed rows — widen ``nprobe`` for very selective filters
     (the classic filtered-ANN recall trade, stated, not hidden)."""
-    cent = spark.read.parquet(path.rstrip("/") + "/_centroids").collect()
-    cent_rows = [
-        {"c_id": r["c_id"], "__centroid": list(r["centroid"]), "__cnorm": r["cnorm"]}
-        for r in sorted(cent, key=lambda r: r["c_id"])
-    ]
-    scores = _centroid_scores(cent_rows)  # reads __v/__vn
-    probes = (
-        queries.select(
-            F.col(query_id_col).alias("q_id"),
-            F.col(query_vec_col).alias("__v"),
-            l2_norm(query_vec_col).alias("__vn"),
-        )
-        .select(
-            "q_id",
-            F.col("__v").alias("__qv"),
-            F.col("__vn").alias("__qn"),
-            F.explode(
-                F.slice(F.sort_array(scores, asc=False), 1, nprobe)
-            ).alias("__s"),
-        )
-        .select("q_id", "__qv", "__qn", F.col("__s").getField("c_id").alias("c_id"))
-    )
+    probes = _top_cells(
+        _vec_side(queries, query_id_col, query_vec_col, "q_id"),
+        _read_centroids(spark, path),
+        nprobe=nprobe,
+        carry=("q_id", "__v", "__vn"),
+    ).withColumnsRenamed({"__v": "__qv", "__vn": "__qn"})
     # O(|Q|·nprobe) driver read of CELL IDS ONLY — the sanctioned scout
     # pattern; the literal list is what Catalyst turns into partition
     # pruning on the hive layout.
@@ -1078,7 +986,6 @@ def knn_graph_ivf_prebuilt(
     nprobe: int = 3,
     mutual: bool = True,
     min_cosine: float | None = None,
-    probe_mode: str = "auto",
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Self kNN-GRAPH over a committed IVF index — the edge builder for
@@ -1087,8 +994,8 @@ def knn_graph_ivf_prebuilt(
     of :func:`ann_topk_ivf_prebuilt` (which broadcasts a small query
     batch): here the only broadcast is the O(num_centroids) stored
     centroid table; the corpus-as-queries side takes its ``nprobe``
-    probe cells as a zero-shuffle projection (:func:`_centroid_scores`
-    over the STORED vectors and norms — the corpus floats are read once
+    probe cells as a zero-shuffle projection (:func:`_top_cells` over
+    the STORED vectors and norms — the corpus floats are read once
     from the index, never re-normed) and meets the inverted lists in a
     ``c_id``-keyed SHUFFLE join, so nothing driver-sized scales with
     the corpus. Hot probe cells shuffle-skew like any hot key — AQE
@@ -1096,32 +1003,20 @@ def knn_graph_ivf_prebuilt(
     build the index with the hot-cell cap (operators/dedup.py's capped
     IVF, BASELINE.md: 72.9×→23.8× slope).
 
+    Probes score by Column expression up to
+    ``KERNEL_ASSIGNMENT_MIN_CENTROIDS`` stored centroids and by the
+    broadcast-matrix GEMM above — past a few hundred centroids the
+    expression's ``num_centroids × dim`` plan literals bind plan
+    construction (BASELINE.md "probe scorer at large centroid counts").
+
     Per query, candidates are exact-cosine reranked (stored ``vnorm``,
     no recompute) and top-``k`` kept; ``mutual=True`` keeps edge (a, b)
     only if each is in the other's top-k — the standard hub-denoising
     gate for kNN-graph clustering — and ``min_cosine`` adds a floor.
     Returns undirected edges ``(l_id, r_id, sim)`` with l < r, exact
     6-dp cosines, fully DuckDB-reproducible from the same committed
-    files (contract rows pin ``probe_mode="expr"``; see below).
-
-    ``probe_mode``: probe-cell scoring strategy. ``"expr"`` is the
-    Column-expression path (zero extra joins, oracle-exact) — but it
-    builds a ``num_centroids × dim`` LITERAL array, which binds plan
-    construction past a few hundred centroids (measured, BASELINE.md
-    "probe scorer at large centroid counts"); ``"kernel"`` scores
-    probes via the broadcast-GEMM Arrow kernel
-    (:func:`centroid_assignments_kernel` — no plan literals, one extra
-    q_id-keyed join to re-attach query vectors) and is the √n-centroid
-    scale path; ``"auto"`` picks by centroid count."""
-    from polars_sim_spark.operators.dedup import KERNEL_ASSIGNMENT_MIN_CENTROIDS
-
-    p = path.rstrip("/")
-    cent = spark.read.parquet(p + "/_centroids").collect()
-    cent_rows = [
-        {"c_id": r["c_id"], "__centroid": list(r["centroid"]), "__cnorm": r["cnorm"]}
-        for r in sorted(cent, key=lambda r: r["c_id"])
-    ]
-    stored = spark.read.parquet(p)
+    files."""
+    stored = spark.read.parquet(path)
     if allowed is not None:
         # FILTERED self-kNN graph: restrict BOTH the query side and the
         # inverted lists to the allowed id set (semi join — AQE picks the
@@ -1134,59 +1029,31 @@ def knn_graph_ivf_prebuilt(
             id_col,
             "left_semi",
         )
-    if probe_mode == "auto":
-        probe_mode = (
-            "kernel" if len(cent_rows) > KERNEL_ASSIGNMENT_MIN_CENTROIDS else "expr"
-        )
     lists = stored.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("__cv"),
         F.col("vnorm").alias("__cn"), "c_id",
     )
-    if probe_mode == "kernel":
-        probe_cells = centroid_assignments_kernel(
-            stored.select(F.col(id_col), F.col(vec_col)),
-            id_col,
-            vec_col,
-            cent_rows,
-            nprobe=nprobe,
-        ).withColumnRenamed("id", "q_id")
-        qv = stored.select(
+    # JOIN ORDER IS THE 100 TB LEVER (round 10, found by the ×100 probe
+    # failing on disk): the query vectors ride the nq·nprobe-row probe
+    # list, which then meets the inverted lists. Joining them by q_id
+    # ON TOP of the nq·nprobe·√n-row candidate explosion instead is,
+    # once the vectors outgrow the broadcast threshold, a sort-merge
+    # shuffle of ~n^1.5 rows each dragging a full vector (measured:
+    # ~150 GB of spill at ×100, "No space left on device"). This way
+    # the shuffle is corpus-sized; the candidate explosion exists only
+    # inside tasks and is projected down to (q_id, n_id, sim) before
+    # the window exchange.
+    probes = _top_cells(
+        stored.select(
             F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("__qv"),
-            F.col("vnorm").alias("__qn"),
-        )
-        # JOIN ORDER IS THE 100 TB LEVER (round 10, found by the ×100
-        # probe failing on disk): attach the query vectors to the
-        # nq·nprobe-row probe list FIRST, then meet the inverted lists.
-        # The old order (probe_cells ⋈ lists, THEN ⋈ qv by q_id) put the
-        # q_id join ON TOP of the nq·nprobe·√n-row candidate explosion —
-        # once qv outgrows the broadcast threshold that is a sort-merge
-        # shuffle of ~n^1.5 rows each dragging a full vector (measured:
-        # ~150 GB of spill at ×100, "No space left on device"). With qv
-        # joined below, both shuffles are corpus-sized; the candidate
-        # explosion exists only inside tasks and is projected down to
-        # (q_id, n_id, sim) before the window exchange.
-        paired = probe_cells.join(qv, "q_id").join(lists, "c_id")
-    else:
-        scores = _centroid_scores(cent_rows)
-        probes = (
-            stored.select(
-                F.col(id_col).alias("q_id"),
-                F.col(vec_col).alias("__v"),
-                F.col("vnorm").alias("__vn"),
-            )
-            .select(
-                "q_id",
-                F.col("__v").alias("__qv"),
-                F.col("__vn").alias("__qn"),
-                F.explode(
-                    F.slice(F.sort_array(scores, asc=False), 1, nprobe)
-                ).alias("__s"),
-            )
-            .select("q_id", "__qv", "__qn", F.col("__s").getField("c_id").alias("c_id"))
-        )
-        # shuffle join on c_id: both sides corpus-sized
-        paired = probes.join(lists, "c_id")
+            F.col(vec_col).alias("__v"),
+            F.col("vnorm").alias("__vn"),
+        ),
+        _read_centroids(spark, path),
+        nprobe=nprobe,
+        carry=("q_id", "__v", "__vn"),
+    ).withColumnsRenamed({"__v": "__qv", "__vn": "__qn"})
+    paired = probes.join(lists, "c_id")
     sim = F.round(
         F.when(
             F.col("__qn") * F.col("__cn") > F.lit(0.0),
@@ -1256,7 +1123,6 @@ def knn_graph(
     min_cosine: float | None = None,
     num_centroids: int | None = None,
     kmeans_iters: int = 1,
-    probe_mode: str = "kernel",
 ) -> DataFrame:
     """One-call corpus self-kNN graph with the SCALE-PATH defaults
     (measured 1×/10×/100×: BASELINE.md round-10 kNN-graph table — the
@@ -1264,11 +1130,12 @@ def knn_graph(
     centroid count; trade serve time vs recall with the
     ``num_centroids`` knob, also measured there):
     ``num_centroids = ⌈√n⌉`` (so probe-list size and centroid
-    count grow together, keeping per-query candidate work ~√n) and
-    ``probe_mode="kernel"`` (broadcast-GEMM probe scoring — NO
-    ``num_centroids × dim`` literal arrays anywhere in the plan, which
-    bind planning/codegen past a few hundred centroids; plan-asserted
-    in tests/test_plans.py).
+    count grow together, keeping per-query candidate work ~√n). Above
+    ``KERNEL_ASSIGNMENT_MIN_CENTROIDS`` centroids (n > 1024 by default)
+    probes score by broadcast GEMM — NO ``num_centroids × dim`` literal
+    arrays anywhere in the plan, which bind planning/codegen past a few
+    hundred centroids (plan-asserted in tests/test_plans.py); below it,
+    by Column expression.
 
     Builds the IVF index at ``path`` if absent (completion keyed on
     ``_centroids/_SUCCESS``, the ensure_* convention — resolved through
@@ -1294,7 +1161,6 @@ def knn_graph(
             vec_col=vec_col,
             num_centroids=num_centroids,
             kmeans_iters=kmeans_iters,
-            assignment="auto",
         )
     return knn_graph_ivf_prebuilt(
         spark,
@@ -1305,7 +1171,6 @@ def knn_graph(
         nprobe=nprobe,
         mutual=mutual,
         min_cosine=min_cosine,
-        probe_mode=probe_mode,
     )
 
 
@@ -1319,12 +1184,12 @@ def resolve_entities(
     nprobe: int = 3,
     min_cosine: float | None = 0.3,
     num_centroids: int | None = None,
-    probe_mode: str = "kernel",
 ) -> DataFrame:
     """One-call SEMANTIC ENTITY RESOLUTION over an embedding corpus —
     ``(id, entity_id)`` with entity_id the smallest member id of each
     mutual-kNN component: :func:`knn_graph` edges (scale-path defaults:
-    ⌈√n⌉ centroids, kernel probing, build-if-missing at ``path``)
+    ⌈√n⌉ centroids, probe scorer by centroid count, build-if-missing
+    at ``path``)
     collapsed by connected components. The composition the contract
     rows run piecewise (`entity_resolve_embeddings`), packaged the way
     ``dedup.remove_near_dups`` packages text dedup; downstream appends
@@ -1342,7 +1207,6 @@ def resolve_entities(
         mutual=True,
         min_cosine=min_cosine,
         num_centroids=num_centroids,
-        probe_mode=probe_mode,
     )
     out = connected_components(
         corpus.select(F.col(id_col).alias("id")),

@@ -390,7 +390,7 @@ def dedup_embedding_ivf_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = dedup.embedding_ivf_near_dup_pairs(
         emb, "vec_id", "embedding", min_cosine=0.35, num_centroids=16,
-        nprobe=2, max_cell_fraction=0.05, assignment="expr",
+        nprobe=2, max_cell_fraction=0.05,
     )
     return pairs.select(
         F.col("l_id").alias("l_vec"),
@@ -884,7 +884,6 @@ def dedup_remove_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_cosine=0.35,
         num_centroids=16,
         nprobe=2,
-        assignment="expr",
     )
     return out.select("vec_id", "label")
 

@@ -482,16 +482,15 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 def ensure_ivf_kmeans_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the contract k-means-refined IVF index (1 Lloyd iteration,
-    expression assignment — oracle-exact) for ``sf_dir`` if absent."""
+    """Build the contract k-means-refined IVF index (16 centroids, so
+    scored by Column expression — oracle-exact; 1 Lloyd iteration) for
+    ``sf_dir`` if absent."""
     from polars_sim_spark.operators.similarity import materialize_ivf_index
 
     path = _index_dir(sf_dir, "ivf_k1")
     if not _hadoop_exists(spark, _os.path.join(path, "_centroids", "_SUCCESS")):
         emb = load_table(spark, sf_dir, "embeddings")
-        materialize_ivf_index(
-            emb, path, num_centroids=16, kmeans_iters=1, assignment="expr"
-        )
+        materialize_ivf_index(emb, path, num_centroids=16, kmeans_iters=1)
     return path
 
 
@@ -1076,7 +1075,7 @@ def entity_resolve_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_ivf_kmeans_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     edges = knn_graph_ivf_prebuilt(
-        spark, path, k=5, nprobe=3, mutual=True, min_cosine=0.3, probe_mode="expr"
+        spark, path, k=5, nprobe=3, mutual=True, min_cosine=0.3
     )
     out = connected_components(
         emb.select(F.col("vec_id").alias("id")),
@@ -1109,7 +1108,6 @@ def ensure_ivf_sqrt_index(spark: SparkSession, sf_dir: str) -> str:
             path,
             num_centroids=math.isqrt(max(n, 1) - 1) + 1,
             kmeans_iters=1,
-            assignment="auto",
         )
     return path
 
@@ -1121,14 +1119,17 @@ def ensure_ivf_sqrt_index(spark: SparkSession, sf_dir: str) -> str:
 def resolve_entities_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-call scale path DRIVER-VERIFIED end-to-end (VERDICT r10
     #1): ``similarity.resolve_entities`` with its REAL defaults — ⌈√n⌉
-    centroids (the committed ivf_sqrt layout), ``probe_mode="kernel"``
-    (broadcast-GEMM probe scoring, zero plan literals), mutual-5-NN +
-    cosine ≥ 0.3, connected components. Until this row, the kernel probe
-    path was equivalence-tested against the expression path but never
-    hash-checked against an independent oracle; the oracle here replays
-    the √n-geometry probes + exact rerank + mutual gate + reachability
-    closure from the same committed index files, so a hash match
-    verifies the exact pipeline users are told to run at scale."""
+    centroids (the committed ivf_sqrt layout), mutual-5-NN + cosine ≥
+    0.3, connected components. The probe scorer follows the centroid
+    count: at sf0.1 (45 cells) probes score by broadcast GEMM (zero plan
+    literals), so this row hash-checks the GEMM probe path against an
+    independent oracle; at sf0.01 (23 cells) they score by Column
+    expression, and tests/test_similarity.py
+    ``test_resolve_entities_scale_gemm_probe_matches_oracle`` forces the
+    GEMM there. The oracle replays the √n-geometry probes + exact rerank
+    + mutual gate + reachability closure from the same committed index
+    files, so a hash match verifies the exact pipeline users are told
+    to run at scale."""
     from polars_sim_spark.operators.similarity import resolve_entities
 
     path = ensure_ivf_sqrt_index(spark, sf_dir)
@@ -1230,7 +1231,7 @@ def build_historical_entity_labels(spark: SparkSession, sf_dir: str) -> DataFram
     hist = emb.where(F.col("vec_id") % 5 != 0)
     edges_h = knn_graph_ivf_prebuilt(
         spark, path, k=5, nprobe=3, mutual=True, min_cosine=0.3,
-        probe_mode="expr", allowed=hist.select("vec_id"),
+        allowed=hist.select("vec_id"),
     )
     return connected_components(
         hist.select(F.col("vec_id").alias("id")),

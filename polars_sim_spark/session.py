@@ -13,6 +13,33 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the memory this process can use — the smaller of
+    ``/proc/meminfo`` MemTotal and a numeric cgroup v2 ``memory.max`` —
+    in whole GB, at least 1g and at most 16g. A heap sized past the
+    host gets the JVM OOM-killed on the largest rows (16g on a 15 GB
+    host did) instead of collected."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            raw = fh.read().strip()
+        if raw.isdigit():
+            limits.append(int(raw))
+    except OSError:
+        pass
+    if not limits:
+        return "16g"
+    return f"{max(1, min(16, min(limits) // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "polars_sim_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
@@ -26,7 +53,10 @@ def get_spark(app_name: str = "polars_sim_spark", shuffle_partitions: int | None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     want_preload = os.environ.get("SPARK_GRAFT_NO_DAEMON_PRELOAD") != "1"

@@ -768,7 +768,6 @@ def stream_centroid_assign(
     corpus_id_col: str | None = None,
     corpus_vec_col: str | None = None,
     num_centroids: int = 16,
-    assignment: str = "auto",
 ) -> DataFrame:
     """Streaming centroid assignment: label every arriving embedding
     with its nearest centroid cell (and the cosine to it) — the
@@ -779,35 +778,19 @@ def stream_centroid_assign(
 
     Centroids are the deterministic hash-sample of the STATIC corpus
     (``similarity.pick_centroids`` — an O(num_centroids) driver read at
-    plan-build time); assignment itself is the same zero-shuffle,
-    stateless score projection as batch IVF, so it runs in append mode
-    with no state store and no aggregation spent. Batch/stream
-    equivalence is pinned by an availableNow test against
-    ``similarity.nearest_centroid_assignments``.
-
-    ``assignment`` mirrors the batch consumers: ``"kernel"`` scores the
-    stream against the broadcast centroid matrix through the Arrow GEMM
-    (``mapInPandas`` is streaming-safe and stateless, so the plan stays
-    append-mode) instead of building num_centroids × dim plan literals —
-    the binding cost past a few hundred centroids (BASELINE.md);
-    ``"auto"`` flips at the measured crossover.
+    plan-build time); assignment itself is
+    ``similarity.nearest_centroid_assignments`` on the stream — the same
+    zero-shuffle, stateless score projection as batch IVF (Column
+    expression or, above 32 centroids, the ``mapInPandas`` GEMM, which
+    is streaming-safe too), so it runs in append mode with no state
+    store and no aggregation spent. Batch/stream equivalence is pinned
+    by an availableNow test.
     """
-    from polars_sim_spark.functions.vectors import l2_norm
-    from polars_sim_spark.operators.dedup import KERNEL_ASSIGNMENT_MIN_CENTROIDS
     from polars_sim_spark.operators.similarity import (
-        _centroid_scores,
-        centroid_assignments_kernel,
+        nearest_centroid_assignments,
         pick_centroids,
     )
 
-    if assignment not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"assignment must be 'auto', 'expr' or 'kernel', got {assignment!r}"
-        )
-    if assignment == "auto":
-        assignment = (
-            "kernel" if num_centroids > KERNEL_ASSIGNMENT_MIN_CENTROIDS else "expr"
-        )
     cent_rows = pick_centroids(
         static_corpus,
         corpus_id_col or id_col,
@@ -815,29 +798,8 @@ def stream_centroid_assign(
         num_centroids,
     ).collect()
     cent_rows.sort(key=lambda r: r["c_id"])
-    if assignment == "kernel":
-        return centroid_assignments_kernel(
-            stream_vecs,
-            id_col,
-            vec_col,
-            cent_rows,
-            nprobe=1,
-            c_id_type=dict(static_corpus.dtypes)[corpus_id_col or id_col],
-            carry_sim=True,
-        )
-    scores = _centroid_scores(cent_rows)
-    return (
-        stream_vecs.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("__v"),
-            l2_norm(vec_col).alias("__vn"),
-        )
-        .select("id", F.array_max(scores).alias("__b"))
-        .select(
-            "id",
-            F.col("__b").getField("c_id").alias("c_id"),
-            F.col("__b").getField("sim").alias("sim"),
-        )
+    return nearest_centroid_assignments(
+        stream_vecs, id_col=id_col, vec_col=vec_col, cent_rows=cent_rows
     )
 
 

@@ -114,7 +114,6 @@ def test_ivf_pairs_subset_of_exact_and_full_probe_equality(spark, vecs, nprobe):
             min_cosine=0.35,
             num_centroids=num_centroids,
             nprobe=nprobe,
-            assignment="expr",
         )
     )
     assert set(ivf) <= set(exact), (vecs, nprobe)
@@ -130,7 +129,6 @@ def test_ivf_pairs_subset_of_exact_and_full_probe_equality(spark, vecs, nprobe):
             min_cosine=0.35,
             num_centroids=num_centroids,
             nprobe=num_centroids,
-            assignment="expr",
         )
     )
     assert set(full) == set(exact), (vecs,)
@@ -145,7 +143,7 @@ def test_ivf_hot_cell_cap_containment(spark, sf_small):
     (hot cells exist; candidate volume shrinks), and the capped path is
     deterministic."""
     df = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    kw = dict(min_cosine=0.35, num_centroids=16, nprobe=2, assignment="expr")
+    kw = dict(min_cosine=0.35, num_centroids=16, nprobe=2)
     uncapped = _pairs(
         dedup.embedding_ivf_near_dup_pairs(df, "vec_id", "embedding", **kw)
     )
@@ -167,8 +165,7 @@ def test_ivf_hot_cell_cap_containment(spark, sf_small):
     cents.sort(key=lambda r: r["c_id"])
     sizes = (
         nearest_centroid_assignments(
-            df, id_col="vec_id", vec_col="embedding", assignment="expr",
-            cent_rows=cents,
+            df, id_col="vec_id", vec_col="embedding", cent_rows=cents,
         )
         .groupBy("c_id")
         .count()

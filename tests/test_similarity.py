@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from polars_sim_spark.operators import similarity
 from polars_sim_spark.operators.similarity import (
     ann_topk_bruteforce,
     ann_topk_ivf,
@@ -15,6 +16,14 @@ from polars_sim_spark.operators.similarity import (
 
 def _emb(spark, sf_small):
     return spark.read.parquet(f"{sf_small}/embeddings.parquet")
+
+
+def _force_scorer(monkeypatch, arm):
+    """Pin ``_top_cells`` to one arm whatever the centroid count:
+    ``"expr"`` (Column expression) or ``"gemm"`` (broadcast GEMM)."""
+    monkeypatch.setattr(
+        similarity, "KERNEL_ASSIGNMENT_MIN_CENTROIDS", 10**9 if arm == "expr" else 0
+    )
 
 
 def _queries(emb, n=10):
@@ -191,7 +200,7 @@ def test_kmeans_empty_centroid_keeps_position(spark):
     assert got[0] != [1.0, 0.0]  # the populated one moved to the mean
 
 
-def test_centroid_assignment_kernel_equals_expr(spark, sf_small):
+def test_centroid_assignment_kernel_equals_expr(spark, sf_small, monkeypatch):
     """The Arrow-batched GEMM assignment must produce EXACTLY the
     assignments of the Column-expression path, including the
     (sim desc, centroid-rank) tiebreak."""
@@ -200,26 +209,28 @@ def test_centroid_assignment_kernel_equals_expr(spark, sf_small):
 
     emb = load_table(spark, sf_small, "embeddings")
     kw = dict(min_cosine=0.2, num_centroids=12, nprobe=2)
+    _force_scorer(monkeypatch, "expr")
     expr = {
         (r["l_id"], r["r_id"], round(r["sim"], 6))
         for r in dedup.embedding_ivf_near_dup_pairs(
-            emb, "vec_id", "embedding", assignment="expr", **kw
+            emb, "vec_id", "embedding", **kw
         ).collect()
     }
+    _force_scorer(monkeypatch, "gemm")
     kern = {
         (r["l_id"], r["r_id"], round(r["sim"], 6))
         for r in dedup.embedding_ivf_near_dup_pairs(
-            emb, "vec_id", "embedding", assignment="kernel", **kw
+            emb, "vec_id", "embedding", **kw
         ).collect()
     }
     assert len(expr) > 0
     assert expr == kern
 
 
-def test_ann_ivf_kernel_assignment_equals_expr(spark, sf_small):
+def test_ann_ivf_kernel_assignment_equals_expr(spark, sf_small, monkeypatch):
     """ann_topk_ivf with the GEMM corpus assignment must equal the
-    expression-path result exactly (num_centroids above the auto
-    crossover would pick it silently; pin the equivalence)."""
+    expression-path result exactly (num_centroids above the crossover
+    picks it silently; pin the equivalence)."""
     from polars_sim_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_small, "embeddings")
@@ -227,13 +238,15 @@ def test_ann_ivf_kernel_assignment_equals_expr(spark, sf_small):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     kw = dict(k=5, num_centroids=12, nprobe=3)
+    _force_scorer(monkeypatch, "expr")
     a = {
         (r["q_id"], r["n_id"], r["sim"])
-        for r in ann_topk_ivf(emb, queries, assignment="expr", **kw).collect()
+        for r in ann_topk_ivf(emb, queries, **kw).collect()
     }
+    _force_scorer(monkeypatch, "gemm")
     b = {
         (r["q_id"], r["n_id"], r["sim"])
-        for r in ann_topk_ivf(emb, queries, assignment="kernel", **kw).collect()
+        for r in ann_topk_ivf(emb, queries, **kw).collect()
     }
     assert len(a) > 0
     assert a == b
@@ -372,7 +385,7 @@ def test_cluster_medoids_matches_model(spark, sf_small):
     assert sum(v[2] for v in got.values()) == len(vecs)
 
 
-def test_refine_kmeans_kernel_equals_expr(spark, sf_small):
+def test_refine_kmeans_kernel_equals_expr(spark, sf_small, monkeypatch):
     """k-means refinement with the GEMM assignment must rebuild
     bit-identical centroids to the expression path (component sums stay
     on the exact decimal path in both; only the argmax routing differs,
@@ -386,17 +399,19 @@ def test_refine_kmeans_kernel_equals_expr(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     seeds = pick_centroids(emb, "vec_id", "embedding", 12).collect()
     seeds.sort(key=lambda r: r["c_id"])
-    a = refine_centroids_kmeans(emb, "embedding", seeds, 2, assignment="expr")
-    b = refine_centroids_kmeans(emb, "embedding", seeds, 2, assignment="kernel")
+    _force_scorer(monkeypatch, "expr")
+    a = refine_centroids_kmeans(emb, "embedding", seeds, 2)
+    _force_scorer(monkeypatch, "gemm")
+    b = refine_centroids_kmeans(emb, "embedding", seeds, 2)
     assert [c["c_id"] for c in a] == [c["c_id"] for c in b]
     for ca, cb in zip(a, b):
         assert ca["__centroid"] == cb["__centroid"], ca["c_id"]
 
 
-def test_ann_ivf_kmeans_kernel_assignment_equals_expr(spark, sf_small):
-    """End-to-end: kmeans-refined IVF under kernel assignment (which now
-    covers corpus scoring, probe scoring, AND the refinement loop) must
-    equal the expression-path result exactly."""
+def test_ann_ivf_kmeans_kernel_assignment_equals_expr(spark, sf_small, monkeypatch):
+    """End-to-end: kmeans-refined IVF under GEMM scoring (corpus
+    scoring, probe scoring, AND the refinement loop) must equal the
+    expression-path result exactly."""
     from polars_sim_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_small, "embeddings")
@@ -404,20 +419,22 @@ def test_ann_ivf_kmeans_kernel_assignment_equals_expr(spark, sf_small):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     kw = dict(k=5, num_centroids=12, nprobe=3, kmeans_iters=2)
+    _force_scorer(monkeypatch, "expr")
     a = {
         (r["q_id"], r["n_id"], r["sim"])
-        for r in ann_topk_ivf(emb, queries, assignment="expr", **kw).collect()
+        for r in ann_topk_ivf(emb, queries, **kw).collect()
     }
+    _force_scorer(monkeypatch, "gemm")
     b = {
         (r["q_id"], r["n_id"], r["sim"])
-        for r in ann_topk_ivf(emb, queries, assignment="kernel", **kw).collect()
+        for r in ann_topk_ivf(emb, queries, **kw).collect()
     }
     assert len(a) > 0
     assert a == b
 
 
-def test_nearest_centroid_assignments_kernel_equals_expr(spark, sf_small):
-    """(id, c_id, sim) from the carry_sim GEMM path must equal the
+def test_nearest_centroid_assignments_kernel_equals_expr(spark, sf_small, monkeypatch):
+    """(id, c_id, sim) from the GEMM arm (with ``sim``) must equal the
     expression path exactly — including the rounded cosine — so
     cluster_medoids/balanced sampling can flip to the kernel at large
     centroid counts without changing results."""
@@ -426,13 +443,15 @@ def test_nearest_centroid_assignments_kernel_equals_expr(spark, sf_small):
 
     emb = load_table(spark, sf_small, "embeddings")
     kw = dict(num_centroids=12, kmeans_iters=1)
+    _force_scorer(monkeypatch, "expr")
     a = {
         (r["id"], r["c_id"], round(r["sim"], 6))
-        for r in nearest_centroid_assignments(emb, assignment="expr", **kw).collect()
+        for r in nearest_centroid_assignments(emb, **kw).collect()
     }
+    _force_scorer(monkeypatch, "gemm")
     b = {
         (r["id"], r["c_id"], round(r["sim"], 6))
-        for r in nearest_centroid_assignments(emb, assignment="kernel", **kw).collect()
+        for r in nearest_centroid_assignments(emb, **kw).collect()
     }
     assert len(a) > 0
     assert a == b
@@ -449,7 +468,7 @@ def test_ivf_prebuilt_filtered_search(spark, sf_small, tmp_path):
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
     path = str(tmp_path / "ivf")
-    materialize_ivf_index(emb, path, num_centroids=8, kmeans_iters=1, assignment="expr")
+    materialize_ivf_index(emb, path, num_centroids=8, kmeans_iters=1)
     qs = emb.where(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
@@ -595,7 +614,7 @@ def test_knn_graph_prebuilt_equals_serving_path_plus_mutual_gate(spark, sf_small
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
     path = str(tmp_path / "ivf")
-    materialize_ivf_index(emb, path, num_centroids=4, kmeans_iters=1, assignment="expr")
+    materialize_ivf_index(emb, path, num_centroids=4, kmeans_iters=1)
 
     k, nprobe, tau = 4, 2, 0.25
     directional = ann_topk_ivf_prebuilt(
@@ -636,7 +655,7 @@ def test_knn_graph_non_mutual_is_superset(spark, sf_small, tmp_path):
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
     path = str(tmp_path / "ivf")
-    materialize_ivf_index(emb, path, num_centroids=4, kmeans_iters=1, assignment="expr")
+    materialize_ivf_index(emb, path, num_centroids=4, kmeans_iters=1)
     mut = {
         (r["l_id"], r["r_id"])
         for r in knn_graph_ivf_prebuilt(spark, path, k=3, nprobe=2, mutual=True).collect()
@@ -651,9 +670,9 @@ def test_knn_graph_non_mutual_is_superset(spark, sf_small, tmp_path):
 
 def test_knn_graph_convenience_sqrt_n_kernel_default(spark, sf_small, tmp_path):
     """knn_graph (round 10): the one-call scale-path entry builds a
-    ⌈√n⌉-centroid index with kernel probing by default, reuses the
-    committed files on a second call, and its edges equal the prebuilt
-    path served from the same index."""
+    ⌈√n⌉-centroid index (probed by the scorer that centroid count
+    picks), reuses the committed files on a second call, and its edges
+    equal the prebuilt path served from the same index."""
     import os
 
     from polars_sim_spark.operators.similarity import (
@@ -682,8 +701,7 @@ def test_knn_graph_convenience_sqrt_n_kernel_default(spark, sf_small, tmp_path):
     direct = {
         (r["l_id"], r["r_id"]): r["sim"]
         for r in knn_graph_ivf_prebuilt(
-            spark, path, k=4, nprobe=2, mutual=True, min_cosine=0.25,
-            probe_mode="kernel",
+            spark, path, k=4, nprobe=2, mutual=True, min_cosine=0.25
         ).collect()
     }
     assert edges == again == direct
@@ -738,10 +756,10 @@ def test_hash_embed_wide_dims_are_not_degenerate(spark, sf_small):
         hash_embed(docs, "doc_id", "text", dim=65)
 
 
-def test_knn_graph_kernel_probe_equals_expr(spark, sf_small, tmp_path):
-    """probe_mode='kernel' (broadcast-GEMM, the sqrt-n-centroid scale
-    path) must produce the same edge set as the expression path on a
-    corpus away from rounding boundaries."""
+def test_knn_graph_kernel_probe_equals_expr(spark, sf_small, tmp_path, monkeypatch):
+    """GEMM probe scoring (the sqrt-n-centroid scale path) must produce
+    the same edge set as the expression path on a corpus away from
+    rounding boundaries."""
     from polars_sim_spark.operators.similarity import (
         knn_graph_ivf_prebuilt,
         materialize_ivf_index,
@@ -749,13 +767,14 @@ def test_knn_graph_kernel_probe_equals_expr(spark, sf_small, tmp_path):
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
     path = str(tmp_path / "ivf")
-    materialize_ivf_index(emb, path, num_centroids=4, kmeans_iters=1, assignment="expr")
+    materialize_ivf_index(emb, path, num_centroids=4, kmeans_iters=1)
     runs = {}
     for mode in ("expr", "kernel"):
+        _force_scorer(monkeypatch, "expr" if mode == "expr" else "gemm")
         runs[mode] = {
             (r["l_id"], r["r_id"]): r["sim"]
             for r in knn_graph_ivf_prebuilt(
-                spark, path, k=4, nprobe=2, mutual=True, probe_mode=mode
+                spark, path, k=4, nprobe=2, mutual=True
             ).collect()
         }
     assert runs["expr"] == runs["kernel"] and runs["expr"]
@@ -792,7 +811,7 @@ def test_knn_graph_serve_releases_previous_checkpoint(spark, sf_small, tmp_path)
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
     path = str(tmp_path / "ivf")
-    materialize_ivf_index(emb, path, num_centroids=8, kmeans_iters=1, assignment="expr")
+    materialize_ivf_index(emb, path, num_centroids=8, kmeans_iters=1)
 
     e1 = knn_graph_ivf_prebuilt(spark, path, k=3, nprobe=2)
     n1 = e1.count()  # consume serve 1 before serve 2 (the documented contract)
@@ -823,7 +842,7 @@ def test_ivf_near_dup_pairs_releases_previous_assignment(spark, sf_small):
     from polars_sim_spark.operators import dedup
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    kw = dict(min_cosine=0.35, num_centroids=8, nprobe=2, assignment="expr")
+    kw = dict(min_cosine=0.35, num_centroids=8, nprobe=2)
 
     n1 = dedup.embedding_ivf_near_dup_pairs(emb, "vec_id", "embedding", **kw).count()
     j1 = dedup._IVF_ASSIGNED._rdd
@@ -880,3 +899,54 @@ def test_hadoop_delete_and_list_names(spark, tmp_path):
     hadoop_delete(spark, str(d))
     assert not hadoop_exists(spark, str(d))
     hadoop_delete(spark, str(d))  # idempotent on absent paths
+
+
+def test_resolve_entities_scale_gemm_probe_matches_oracle(spark, monkeypatch):
+    """The GEMM probe path stays hash-checked against an independent
+    oracle at the oracle scale: ``resolve_entities_scale`` serves 23
+    cells there, which ``_top_cells`` scores by Column expression, so
+    the crossover is forced to 0 here. Served from the committed
+    ``ivf_sqrt`` index (a rebuild fails the test); rows compare sorted
+    and canonicalized the way ``tools/crosscheck.py`` compares them."""
+    import math
+
+    import duckdb
+    from conftest import SF_ORACLE
+
+    from polars_sim_spark import queries as q
+    from polars_sim_spark.sources.tables import TABLES
+
+    def no_rebuild(*a, **kw):
+        raise AssertionError("the committed ivf_sqrt index must be served, not rebuilt")
+
+    gemm_calls = []
+    kernel = similarity.centroid_assignments_kernel
+
+    def counted_kernel(*a, **kw):
+        gemm_calls.append(1)
+        return kernel(*a, **kw)
+
+    _force_scorer(monkeypatch, "gemm")
+    monkeypatch.setattr(similarity, "materialize_ivf_index", no_rebuild)
+    monkeypatch.setattr(similarity, "centroid_assignments_kernel", counted_kernel)
+    sdf = q.QUERIES["resolve_entities_scale"](spark, SF_ORACLE)
+    assert gemm_calls, "probes must score through the GEMM"
+
+    def canon(v):
+        if isinstance(v, float):
+            return "nan" if math.isnan(v) else round(v, 9)
+        return v
+
+    def rows(cols, got):
+        idx = sorted(range(len(cols)), key=lambda i: cols[i])
+        return sorted((tuple(canon(r[i]) for i in idx) for r in got), key=repr)
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'")
+    rel = con.sql(q.ORACLES["resolve_entities_scale"])
+    expected = rows(rel.columns, rel.fetchall())
+    got = rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+    assert sorted(sdf.columns) == sorted(rel.columns)
+    assert len(got) == len(expected) == 500
+    assert got == expected

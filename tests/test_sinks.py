@@ -150,9 +150,7 @@ def test_ivf_index_prebuilt_prunes_partitions_and_matches_live(spark, tmp_path):
 
     live = {
         (r["q_id"], r["n_id"], r["sim"])
-        for r in ann_topk_ivf(
-            emb, queries, num_centroids=12, assignment="expr", **kw
-        ).collect()
+        for r in ann_topk_ivf(emb, queries, num_centroids=12, **kw).collect()
     }
     served_df = ann_topk_ivf_prebuilt(spark, path, queries, **kw)
     served = {(r["q_id"], r["n_id"], r["sim"]) for r in served_df.collect()}

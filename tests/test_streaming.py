@@ -622,9 +622,10 @@ def test_stream_passage_dedup_rejects_string_ids(spark):
         stream_passage_dedup(stream, id_col="doc_id", text_col="text", passage_words=4)
 
 
-def test_stream_centroid_assign_equals_batch(spark, sf_small):
+def test_stream_centroid_assign_equals_batch(spark, sf_small, monkeypatch):
     """Streaming centroid assignment (availableNow over the embeddings
     table) emits exactly the batch nearest_centroid_assignments rows."""
+    from polars_sim_spark.operators import similarity
     from polars_sim_spark.operators.similarity import nearest_centroid_assignments
     from polars_sim_spark.streaming.stream_ops import stream_centroid_assign
 
@@ -639,9 +640,13 @@ def test_stream_centroid_assign_equals_batch(spark, sf_small):
         emb.write.mode("overwrite").parquet(d)
         stream = spark.readStream.schema(emb.schema).parquet(d)
         for mode in ("expr", "kernel"):
-            out = stream_centroid_assign(
-                stream, emb, num_centroids=8, assignment=mode
+            # pin _top_cells to each arm in turn
+            monkeypatch.setattr(
+                similarity,
+                "KERNEL_ASSIGNMENT_MIN_CENTROIDS",
+                10**9 if mode == "expr" else 0,
             )
+            out = stream_centroid_assign(stream, emb, num_centroids=8)
             name = f"vecassign_{mode}_{uuid.uuid4().hex[:8]}"
             _run_to_memory(out, name, "append")
             got = {
@@ -1623,14 +1628,14 @@ def test_stream_entity_resolve_equals_sequential_batch_folds(spark, sf_small, tm
 
     emb = load_table(spark, sf_small, "embeddings")
     idx = str(tmp_path / "ivf")
-    materialize_ivf_index(emb, idx, num_centroids=8, kmeans_iters=1, assignment="expr")
+    materialize_ivf_index(emb, idx, num_centroids=8, kmeans_iters=1)
 
     hist = emb.where(F.col("vec_id") % 5 != 0)
     seed = connected_components(
         hist.select(F.col("vec_id").alias("id")),
         knn_graph_ivf_prebuilt(
             spark, idx, k=5, nprobe=3, mutual=True, min_cosine=0.3,
-            probe_mode="expr", allowed=hist.select("vec_id"),
+            allowed=hist.select("vec_id"),
         ),
         id_col="id", src_col="l_id", dst_col="r_id",
     ).withColumnRenamed("cluster_id", "entity_id")
@@ -1920,14 +1925,14 @@ def test_stream_entity_resolve_replay_idempotent(spark, sf_small, tmp_path):
 
     emb = load_table(spark, sf_small, "embeddings")
     idx = str(tmp_path / "ivf")
-    materialize_ivf_index(emb, idx, num_centroids=8, kmeans_iters=1, assignment="expr")
+    materialize_ivf_index(emb, idx, num_centroids=8, kmeans_iters=1)
 
     hist = emb.where(F.col("vec_id") % 5 != 0)
     seed = connected_components(
         hist.select(F.col("vec_id").alias("id")),
         knn_graph_ivf_prebuilt(
             spark, idx, k=5, nprobe=3, mutual=True, min_cosine=0.3,
-            probe_mode="expr", allowed=hist.select("vec_id"),
+            allowed=hist.select("vec_id"),
         ),
         id_col="id", src_col="l_id", dst_col="r_id",
     ).withColumnRenamed("cluster_id", "entity_id")
