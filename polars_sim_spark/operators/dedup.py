@@ -14,8 +14,8 @@ every operator is reproducible and oracle-checkable.
 Scale notes (100 TB):
 * exact dedup = hash aggregation on the content key — one shuffle,
   map-side partial aggregation applies;
-* MinHash-LSH: signatures are one groupBy over exploded shingles
-  (shuffle by shingle-hash is NOT needed — groupBy doc); candidate
+* MinHash-LSH: signatures, band keys and shingle-hash arrays are
+  computed per document ROW (no shuffle, no aggregate); candidate
   generation shuffles by (band, band_key), which self-balances unless a
   band bucket is hot (near-identical boilerplate docs) — cap bucket
   size with ``max_bucket_size`` to bound the pair blowup;
@@ -58,41 +58,6 @@ def shingle_postings(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> D
     """(id, sh): exploded distinct word n-gram shingles per document."""
     return df.select(
         F.col(id_col).alias("id"), F.explode(word_shingles(F.col(text_col), n)).alias("sh")
-    )
-
-
-def minhash_signatures(
-    postings: DataFrame, num_hashes: int = 16
-) -> DataFrame:
-    """(id, s0..s{k-1}): MinHash signature per document from shingle postings."""
-    # Hash each shingle ONCE in a projection before the aggregate — the k
-    # min-aggregates then reuse the column instead of each re-evaluating
-    # the md5 (codegen does not CSE across aggregate expressions).
-    pre = postings.withColumn("__h", md5_hash64(F.col("sh")))
-    aggs = [
-        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"s{i}")
-        for i, (a, b) in enumerate(MINHASH_PARAMS[:num_hashes])
-    ]
-    return pre.groupBy("id").agg(*aggs)
-
-
-def lsh_bands(signatures: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS_PER_BAND) -> DataFrame:
-    """(id, band, band_key): banded signature for LSH bucketing.
-
-    One ``posexplode`` projection instead of a ``bands``-way union
-    (optimization round 14, guide §2.4): the union form carried one
-    plan branch — and one full scan of the signature frame — per band;
-    the exploded array yields the identical (id, band, band_key) rows
-    (band = array position) from a single pass, with a plan whose size
-    no longer grows with the band count."""
-    keys = F.array(
-        *[
-            F.concat_ws(",", *[F.col(f"s{b * rows + r}") for r in range(rows)])
-            for b in range(bands)
-        ]
-    )
-    return signatures.select(
-        F.col("id"), F.posexplode(keys).alias("band", "band_key")
     )
 
 
@@ -144,9 +109,11 @@ def _hashed_postings(postings: DataFrame) -> DataFrame:
 
 
 def _verify_jaccard_pairs(
-    postings: DataFrame, cands: DataFrame, min_jaccard: float | None
+    arrs: DataFrame, cands: DataFrame, min_jaccard: float | None
 ) -> DataFrame:
-    """Exact Jaccard for CANDIDATE pairs only.
+    """Exact Jaccard for CANDIDATE pairs only, from ``arrs`` =
+    ``(id, arr, n)``: each document's hashed-shingle set as an array
+    (distinct xxhash64 values) and its size.
 
     Each candidate row is joined to the two documents' packed
     hashed-shingle ARRAYS (one narrow join per side — AQE upgrades them
@@ -159,11 +126,6 @@ def _verify_jaccard_pairs(
     shingle set once per candidate side and aggregates nothing."""
     from polars_sim_spark.operators.skew import cpu_floor_repartition
 
-    arrs = (
-        _hashed_postings(postings)
-        .groupBy("id")
-        .agg(F.collect_list("sh").alias("arr"), F.count(F.lit(1)).alias("n"))
-    )
     a = arrs.select(F.col("id").alias("l_id"), F.col("arr").alias("__la"), F.col("n").alias("na"))
     b = arrs.select(F.col("id").alias("r_id"), F.col("arr").alias("__rb"), F.col("n").alias("nb"))
     k = F.size(F.array_intersect("__la", "__rb")).cast("double")
@@ -278,7 +240,6 @@ def jaccard_pairs(
             and min_jaccard >= PREFIX_FILTER_MIN_T
             and _df_skew_ratio(postings) >= PREFIX_BLOWUP_MIN_RATIO
         )
-    orig_postings = postings
     postings = _hashed_postings(postings)
     if use_prefix_filter and min_jaccard is not None and min_jaccard > 0:
         dfc = postings.groupBy("sh").agg(F.count(F.lit(1)).alias("__dfc"))
@@ -311,7 +272,10 @@ def jaccard_pairs(
             .select("l_id", "r_id")
             .distinct()
         )
-        return _verify_jaccard_pairs(orig_postings, cands, min_jaccard)
+        arrs = postings.groupBy("id").agg(
+            F.collect_list("sh").alias("arr"), F.count(F.lit(1)).alias("n")
+        )
+        return _verify_jaccard_pairs(arrs, cands, min_jaccard)
 
     sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     shared_sh = (
@@ -357,31 +321,39 @@ def minhash_lsh_dedup_pairs(
     """Full MinHash-LSH near-dup pipeline: shingle → signature → band →
     bucket self-join → exact-Jaccard verification of candidates only.
     Returns (l_id, r_id, jac)."""
-    # The postings feed four passes (signatures, both verification sides,
-    # set sizes); persist so shingling runs once. MEMORY_AND_DISK default
-    # spills rather than OOMs when the corpus outgrows executor memory.
-    postings = cache_registry.track(shingle_postings(df, id_col, text_col, shingle_n))
-    sigs = minhash_signatures(postings)
-    cands = lsh_candidate_pairs(lsh_bands(sigs), max_bucket_size)
+    # The per-document frame feeds the bands and both verification
+    # sides; persist so shingling and signing run once. MEMORY_AND_DISK
+    # default spills rather than OOMs when the corpus outgrows executor
+    # memory.
+    docs = cache_registry.track(_signed_docs(df, id_col, text_col, shingle_n))
+    return _lsh_jaccard_pairs(docs, min_jaccard, max_bucket_size)
 
-    # Verification touches ONLY the candidate pairs (this is the whole
-    # point of LSH); never recomputes the all-pairs intersection.
-    return _verify_jaccard_pairs(postings, cands, min_jaccard)
+
+def _lsh_jaccard_pairs(
+    docs: DataFrame, min_jaccard: float | None, max_bucket_size: int | None
+) -> DataFrame:
+    """(l_id, r_id, jac) from a :func:`_signed_docs` frame: bucket
+    self-join on the exploded band keys, then exact Jaccard of the
+    candidates on the carried shingle-hash arrays. Verification touches
+    ONLY the candidate pairs (the whole point of LSH)."""
+    bands = docs.select("id", F.posexplode("keys").alias("band", "band_key"))
+    cands = lsh_candidate_pairs(bands, max_bucket_size)
+    return _verify_jaccard_pairs(docs.select("id", "arr", "n"), cands, min_jaccard)
 
 
 def minhash_signature_array(sh_arr: Column, num_hashes: int = 16) -> Column:
     """``array<long>`` MinHash signature computed per ROW from a shingle
-    array — ZERO shuffle, unlike :func:`minhash_signatures`' groupBy over
-    exploded postings. Same hash family and constants, so
-    ``minhash_signature_array(...)[i] == minhash_signatures(...).s{i}``
-    exactly; the two are interchangeable for banding.
+    array — zero shuffle: element ``i`` is the min over the shingles of
+    ``(a_i · md5_hash64(sh) + b_i) mod MINHASH_PRIME`` with the fixed
+    ``MINHASH_PARAMS``, the same values as the oracle's per-document
+    ``min`` aggregate (``queries.dedup.duck_lsh_cand_ctes``).
 
     The per-row form is what streaming needs (Structured Streaming
     allows only one stateful aggregation per query — spending it on
-    signature-building would leave none for the real work) and is also
-    the cheaper batch plan when the shingle array is already in hand.
+    signature-building would leave none for the real work) and spends
+    no shuffle in batch either.
     Empty array → all-null signature (callers must band only
-    ``size(sh_arr) > 0`` rows, as the groupBy form does structurally).
+    ``size(sh_arr) > 0`` rows).
     """
     return let_col(
         F.transform(sh_arr, md5_hash64),
@@ -396,13 +368,35 @@ def minhash_signature_array(sh_arr: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def _banded_doc_side(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int, prefix: str
+def _band_keys(sig: Column) -> Column:
+    """``array<string>`` of the ``LSH_BANDS`` bucket keys of a MinHash
+    signature array: key ``b`` is signature elements
+    ``b·LSH_ROWS_PER_BAND … (b+1)·LSH_ROWS_PER_BAND - 1`` joined by ``,``.
+    Pass a projected signature COLUMN, not the
+    :func:`minhash_signature_array` expression: each key reads the
+    signature four times, and an inlined expression is re-evaluated per
+    read."""
+    return F.array(
+        *[
+            F.concat_ws(
+                ",",
+                *[
+                    F.element_at(sig, b * LSH_ROWS_PER_BAND + r + 1)
+                    for r in range(LSH_ROWS_PER_BAND)
+                ],
+            )
+            for b in range(LSH_BANDS)
+        ]
+    )
+
+
+def _signed_docs(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, prefix: str = ""
 ) -> DataFrame:
-    """Explode a corpus into LSH band rows carrying its verification
-    payload: ``({prefix}id, {prefix}arr, {prefix}n, band, band_key)``.
-    One row per (doc, band); zero-shingle docs emit nothing (they cannot
-    be near-dups). Band keys are identical to :func:`lsh_bands`'."""
+    """``({prefix}id, {prefix}arr, {prefix}n, keys)``: one row per
+    document with at least one shingle (a zero-shingle doc cannot be a
+    near-dup) — its xxhash64 shingle-hash array, the array's size, and
+    its LSH band keys (:func:`_band_keys`)."""
     base = df.select(F.col(id_col).alias(f"{prefix}id"), word_shingles(F.col(text_col), shingle_n).alias("__sh"))
     v = base.where(F.size("__sh") > 0).select(
         f"{prefix}id",
@@ -410,21 +404,19 @@ def _banded_doc_side(
         F.size("__sh").alias(f"{prefix}n"),
         minhash_signature_array(F.col("__sh")).alias("__sig"),
     )
-    keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at("__sig", b * LSH_ROWS_PER_BAND + r + 1)
-                    for r in range(LSH_ROWS_PER_BAND)
-                ],
-            )
-            for b in range(LSH_BANDS)
-        ]
-    )
-    return v.select(
-        f"{prefix}id", f"{prefix}arr", f"{prefix}n", F.posexplode(keys).alias("band", "band_key")
-    )
+    return v.select(f"{prefix}id", f"{prefix}arr", f"{prefix}n", _band_keys(F.col("__sig")).alias("keys"))
+
+
+def _banded_doc_side(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, prefix: str
+) -> DataFrame:
+    """Explode a corpus into LSH band rows carrying its verification
+    payload: ``({prefix}id, {prefix}arr, {prefix}n, band, band_key)``.
+    One row per (doc, band) of the :func:`_signed_docs` frame;
+    zero-shingle docs emit nothing."""
+    return _signed_docs(df, id_col, text_col, shingle_n, prefix).select(
+        "*", F.posexplode("keys").alias("band", "band_key")
+    ).drop("keys")
 
 
 def incremental_near_dups(
@@ -1606,27 +1598,27 @@ def remove_near_dups(
     bucketed/bounded — this is the web-scale plan; the exact path is the
     oracle-checkable small-corpus twin.
     """
-    postings = shingle_postings(docs, id_col, text_col).persist()
+    if use_lsh:
+        shingled = _signed_docs(docs, id_col, text_col, 3).persist()
+    else:
+        shingled = shingle_postings(docs, id_col, text_col).persist()
     try:
         if use_lsh:
-            cands = lsh_candidate_pairs(
-                lsh_bands(minhash_signatures(postings)), max_bucket_size
-            )
-            pairs = _verify_jaccard_pairs(postings, cands, min_jaccard)
+            pairs = _lsh_jaccard_pairs(shingled, min_jaccard, max_bucket_size)
         else:
-            pairs = jaccard_pairs(postings, min_jaccard=min_jaccard)
+            pairs = jaccard_pairs(shingled, min_jaccard=min_jaccard)
         nodes = docs.select(F.col(id_col).alias("id"))
         # The verified pairs go straight to CC: its seed pass union-finds
         # each edge partition to min-root stars, the one place near-dup
         # chains are contracted. CC eagerly localCheckpoints both the
         # edge set and every label iteration, so by the time it returns
-        # nothing downstream references the postings lineage...
+        # nothing downstream references the shingled lineage...
         cc = connected_components(nodes, pairs.select("l_id", "r_id"))
     finally:
         # ...which makes this the earliest safe unpersist point: without
         # it every call leaks cached shingle blocks into executor storage
         # memory for the life of the session.
-        postings.unpersist()
+        shingled.unpersist()
     keep = cc.where(F.col("id") == F.col("cluster_id")).select(
         F.col("id").alias(id_col)
     )

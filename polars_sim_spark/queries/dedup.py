@@ -49,8 +49,10 @@ def duck_shingles_cte(table: str, id_col: str, text_col: str, n: int = 3) -> str
 
 def duck_lsh_cand_ctes(max_bucket_size: int | None = None) -> str:
     """MinHash-LSH candidate-pair CTEs over an in-scope ``sh`` postings
-    CTE — the oracle twin of dedup.minhash_signatures → lsh_bands →
-    lsh_candidate_pairs, including the hot-bucket cap: with
+    CTE — the oracle twin of the per-row band builder
+    (dedup._banded_doc_side: minhash_signature_array → _band_keys) →
+    lsh_candidate_pairs, computed here as a per-document min aggregate
+    and a band UNION ALL, including the hot-bucket cap: with
     ``max_bucket_size`` buckets holding more than that many documents are
     dropped BEFORE the bucket self-join, exactly like the Spark side."""
     sig_exprs = ",\n         ".join(

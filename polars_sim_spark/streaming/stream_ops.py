@@ -571,8 +571,11 @@ def stream_incremental_near_dedup(
     update/complete output mode (each doc's verdict is final the batch
     it arrives, since the static side doesn't change mid-query).
     """
-    from polars_sim_spark.operators.dedup import _banded_doc_side, minhash_signature_array
-    from polars_sim_spark.operators.dedup import LSH_BANDS, LSH_ROWS_PER_BAND
+    from polars_sim_spark.operators.dedup import (
+        _band_keys,
+        _banded_doc_side,
+        minhash_signature_array,
+    )
 
     if min_jaccard <= 0:
         # Same guard (and reasoning) as the batch incremental_near_dups:
@@ -580,27 +583,17 @@ def stream_incremental_near_dedup(
         raise ValueError(f"min_jaccard must be > 0, got {min_jaccard}")
     hb = _banded_doc_side(static_hist, hist_id_col, hist_text_col, shingle_n, "h_")
     s = stream.withColumn("__sh", word_shingles(F.col(stream_text_col), shingle_n))
-    s = s.withColumn("__arr", F.transform("__sh", lambda g: F.xxhash64(g))).withColumn(
-        "__n", F.size("__sh")
-    )
-    sig = minhash_signature_array(F.col("__sh"))
-    keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at(sig, b * LSH_ROWS_PER_BAND + r + 1)
-                    for r in range(LSH_ROWS_PER_BAND)
-                ],
-            )
-            for b in range(LSH_BANDS)
-        ]
+    s = s.select(
+        "*",
+        F.transform("__sh", lambda g: F.xxhash64(g)).alias("__arr"),
+        F.size("__sh").alias("__n"),
+        minhash_signature_array(F.col("__sh")).alias("__sig"),
     )
     # Zero-shingle docs get a null band list: posexplode_outer keeps the
     # row (they must still be emitted), the left join finds nothing.
-    s = s.withColumn(
-        "__keys", F.when(F.col("__n") > 0, keys).otherwise(F.lit(None).cast("array<string>"))
-    ).select("*", F.posexplode_outer("__keys").alias("band", "band_key"))
+    s = s.withColumn("__keys", F.when(F.col("__n") > 0, _band_keys(F.col("__sig")))).select(
+        "*", F.posexplode_outer("__keys").alias("band", "band_key")
+    )
 
     joined = s.join(F.broadcast(hb), ["band", "band_key"], "left")
     k = F.size(F.array_intersect("__arr", "h_arr")).cast("double")

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from polars_sim_spark.functions.text import word_shingles
 from polars_sim_spark.operators import dedup
 
 DOCS = [
@@ -41,8 +42,8 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
 
 
 def test_minhash_identical_signatures(spark, docs):
-    postings = dedup.shingle_postings(docs, "doc_id", "text")
-    sigs = {r["id"]: tuple(r[f"s{i}"] for i in range(16)) for r in dedup.minhash_signatures(postings).collect()}
+    sig = dedup.minhash_signature_array(word_shingles(F.col("text")))
+    sigs = {r["doc_id"]: tuple(r["sig"]) for r in docs.select("doc_id", sig.alias("sig")).collect()}
     assert sigs[1] == sigs[4]
     assert sigs[1] != sigs[3]
 
@@ -75,8 +76,7 @@ def test_lsh_hot_bucket_cap(spark):
         [(i, "same exact boilerplate text repeated everywhere online") for i in range(10)],
         "doc_id long, text string",
     )
-    postings = dedup.shingle_postings(docs, "doc_id", "text")
-    bands = dedup.lsh_bands(dedup.minhash_signatures(postings))
+    bands = dedup._banded_doc_side(docs, "doc_id", "text", 3, "")
     uncapped = dedup.lsh_candidate_pairs(bands).count()
     capped = dedup.lsh_candidate_pairs(bands, max_bucket_size=5).count()
     assert uncapped == 45  # 10 choose 2
@@ -177,8 +177,7 @@ def test_lsh_hot_bucket_cap_preserves_recall_on_skewed_corpus(spark):
         legit += [(a, base + " one"), (b, base + " two")]
         pairs_truth.append((a, b))
     docs = spark.createDataFrame(hot + legit, "doc_id long, text string")
-    postings = dedup.shingle_postings(docs, "doc_id", "text")
-    bands = dedup.lsh_bands(dedup.minhash_signatures(postings))
+    bands = dedup._banded_doc_side(docs, "doc_id", "text", 3, "")
     uncapped = dedup.lsh_candidate_pairs(bands)
     capped = dedup.lsh_candidate_pairs(bands, max_bucket_size=10)
     n_uncapped, n_capped = uncapped.count(), capped.count()
@@ -188,6 +187,33 @@ def test_lsh_hot_bucket_cap_preserves_recall_on_skewed_corpus(spark):
     got = {(r["l_id"], r["r_id"]) for r in capped.collect()}
     for p in pairs_truth:  # genuine near-dups all survive the cap
         assert p in got
+
+
+def test_band_rows_match_oracle(spark, sf_small):
+    """The one MinHash band builder (``_banded_doc_side``) yields exactly
+    the oracle's ``bands`` CTE — per-document signatures, band keys and
+    the zero-shingle exclusion — as a set of (id, band, band_key) rows."""
+    import duckdb
+
+    from polars_sim_spark.queries.dedup import duck_lsh_cand_ctes, duck_shingles_cte
+    from polars_sim_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    got = {
+        tuple(r)
+        for r in dedup._banded_doc_side(docs, "doc_id", "text", 3, "")
+        .select("id", "band", "band_key")
+        .collect()
+    }
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'")
+    sql = (
+        f"WITH sh AS ({duck_shingles_cte('documents', 'doc_id', 'text')}){duck_lsh_cand_ctes()}\n"
+        "SELECT id, band, band_key FROM bands"
+    )
+    expected = set(con.sql(sql).fetchall())
+    assert expected and len(expected) % dedup.LSH_BANDS == 0
+    assert got == expected
 
 
 def test_df_skew_scout_dispatch(spark, sf_small):

@@ -168,6 +168,23 @@ def test_jaccard_verification_is_array_based(spark, sf_small):
         assert "array_intersect" in plan, f"verification reverted to join-expansion:\n{plan[:2000]}"
 
 
+def test_minhash_lsh_bands_without_aggregates(spark, sf_small):
+    """MinHash-LSH builds signatures, band keys and verification arrays
+    per document row: the optimized plan's one Aggregate is the
+    candidate ``distinct``, and no ``collect_list`` regroups shingles.
+    The groupBy-signature plan this replaced carried five Aggregates
+    (signatures and shingle arrays once per join side)."""
+    from polars_sim_spark.operators import dedup
+    from polars_sim_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    df = dedup.minhash_lsh_dedup_pairs(docs, "doc_id", "text", max_bucket_size=20)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    aggregates = [ln for ln in plan.splitlines() if ln.lstrip(":- +").startswith("Aggregate")]
+    assert len(aggregates) == 1, plan
+    assert "collect_list" not in plan
+
+
 def test_passage_dedup_first_occurrence_is_window_group_limit(spark, sf_small):
     """The keep-first filter must plan as WindowGroupLimit so a hot
     boilerplate passage ships one row per map partition to the shuffle,
