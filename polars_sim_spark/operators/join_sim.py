@@ -72,12 +72,6 @@ _COL = "__pss_col"
 #: cutoff sits at the measured break-even.
 BROADCAST_RIGHT_MAX_ROWS = 250_000
 
-#: Strings tokenized per side when probing whether token sets collapse
-#: distinct strings (the set-keyed fast path). Bounded so the probe cost
-#: is O(1) in corpus size; a collapse invisible in a 20k sample is too
-#: rare to pay full-corpus tokenization for up front.
-SET_KEY_SAMPLE_ROWS = 20_000
-
 
 def _tokens_long(
     df: DataFrame,
@@ -361,9 +355,10 @@ def similarity_mapping(
     (identical strings have identical token sets) that collapses the
     quadratic token-join fan-out when keys repeat. On high-duplication
     data this is the difference between O(|distinct|²·sel) and O(|rows|²·
-    sel) intermediate pairs; on all-unique data it costs one cheap
-    pre-aggregation. Standard practice in set-similarity-join literature;
-    the reference has no such step (it recomputes per row).
+    sel) intermediate pairs; on all-unique data it costs one
+    pre-aggregation that keys each distinct string by its token set.
+    Standard practice in set-similarity-join literature; the reference
+    has no such step (it recomputes per row).
     """
     _validate(normalization, top_n, weighting, left_id, right_id)
     if strategy not in ("auto", "broadcast", "shuffle"):
@@ -434,9 +429,11 @@ def _similarity_mapping_distinct(
 
     1. distinct strings per side → token-set key (md5 of the sorted
        token array) → one REPRESENTATIVE string per set (any string with
-       that set tokenizes identically). The keying is decided and paid
-       PER SIDE: only a side whose sampled strings actually collapse is
-       re-tokenized in full and cached keyed;
+       that set tokenizes identically). Each side's distinct strings
+       are cached keyed, and one scout aggregate counts distinct strings
+       and distinct keys per side. Only a side whose strings actually
+       collapse (fewer keys than strings) is grouped by key; the other
+       uses each string as its own key;
     2. sims over (left set × right set) pairs via the representatives;
     3. per left set keep ``rank() <= top_n`` by sim DESC (rank, not
        row_number: boundary ties must survive because the row-level
@@ -460,74 +457,52 @@ def _similarity_mapping_distinct(
             s = normalize_string_col(s)
         return F.md5(F.concat_ws("\x01", F.sort_array(trigram_tokens(s))))
 
-    lstr = cache_registry.track(_distinct_strings(left, left_on, "__ls"))
-    rstr = cache_registry.track(_distinct_strings(right, right_on, "__rs"))
+    # Each side's distinct strings are cached WITH their token-set keys
+    # (the keyed frame feeds the scout, the representative pick and the
+    # final set→string expansion). A self-join's right side is the same
+    # plan as the left: read the left cache instead of persisting again.
+    lstr = cache_registry.track(
+        _distinct_strings(left, left_on, "__ls").withColumn("__key", _set_key("__ls"))
+    )
+    rstr = _distinct_strings(right, right_on, "__rs").withColumn("__key", _set_key("__rs"))
+    if rstr.sameSemantics(lstr):
+        rstr = lstr.withColumnRenamed("__ls", "__rs")
+    else:
+        rstr = cache_registry.track(rstr)
 
-    # ONE cheap scout job decides the whole plan shape before any
-    # quadratic work (every extra driver-blocking job costs ~0.5-1 s of
-    # fixed scheduling latency, which dominates small inputs). Per side
-    # it unions two branches over the cached distinct strings:
-    # * a FULL branch that only counts rows (no tokenization) — this
-    #   materializes the caches and resolves the auto broadcast-vs-
-    #   shuffle choice, so the inner call never needs its own count job;
-    # * a BOUNDED-SAMPLE branch that computes token-set keys to detect
-    #   whether tokenization collapses strings at all. Tokenizing the
-    #   full corpus just to learn "no collapse" was the dominant
-    #   first-run cost on all-unique data; a collapse a 20k-string
-    #   sample misses entirely is rare, and missing it only costs
-    #   speed, never correctness (both paths are exact).
-    def _tagged(df, out_str, side):
-        full = df.select(
-            F.lit(side).alias("__side"),
-            F.lit(0).alias("__samp"),
-            F.lit(None).cast("string").alias("__key"),
-        )
-        samp = df.limit(SET_KEY_SAMPLE_ROWS).select(
-            F.lit(side).alias("__side"),
-            F.lit(1).alias("__samp"),
-            _set_key(out_str).alias("__key"),
-        )
-        return full.unionByName(samp)
-
+    # ONE scout aggregate decides the whole plan shape before any
+    # quadratic work: per side, the number of distinct strings and of
+    # distinct token sets. It materializes both caches and resolves the
+    # auto broadcast-vs-shuffle choice, so the inner call never needs
+    # its own count job.
     stats = {
         r["__side"]: r
         for r in (
-            _tagged(lstr, "__ls", "l")
-            .unionByName(_tagged(rstr, "__rs", "r"))
+            lstr.select(F.lit("l").alias("__side"), "__key")
+            .unionByName(rstr.select(F.lit("r").alias("__side"), "__key"))
             .groupBy("__side")
-            .agg(
-                F.count(F.when(F.col("__samp") == 0, 1)).alias("n"),
-                F.count(F.when(F.col("__samp") == 1, 1)).alias("sn"),
-                F.countDistinct("__key").alias("sk"),  # nulls (full branch) ignored
-            )
+            .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("__key").alias("sk"))
             .collect()
         )
     }
-    empty = {"n": 0, "sn": 0, "sk": 0}  # a side with no rows contributes no group
+    empty = {"n": 0, "sk": 0}  # a side with no rows contributes no group
     lc, rc = stats.get("l", empty), stats.get("r", empty)
     # PER-SIDE decision (exact either way: set-keying groups one side's
     # strings by identical token sets, independent of the other side).
-    # A messy corpus joined against an already-clean dimension then pays
-    # the full-corpus key tokenization + keyed cache on the messy side
-    # ONLY — one fewer full pass and one fewer cached frame than the
-    # round-3 both-or-neither switch on such inputs.
-    l_keyed = lc["sk"] < lc["sn"]
-    r_keyed = rc["sk"] < rc["sn"]
+    # Only a side whose strings actually collapse pays the extra
+    # representative pick and set→string expansion join.
+    l_keyed = lc["sk"] < lc["n"]
+    r_keyed = rc["sk"] < rc["n"]
     if strategy == "auto":
         # Distinct right strings bound the right representatives from
         # above, so this broadcast decision is safe for both key modes.
         strategy = "broadcast" if rc["n"] <= BROADCAST_RIGHT_MAX_ROWS else "shuffle"
 
     if l_keyed:
-        # Collapse confirmed — now the full-corpus keys are worth their
-        # cost. Cached: the keyed frames feed both the representative
-        # pick and the final set→string expansion joins.
-        lstr = cache_registry.track(lstr.withColumn("__key", _set_key("__ls")))
         lreps = lstr.dropDuplicates(["__key"]).select(F.col("__key").alias("__lkey"), "__ls")
     else:
         lreps = lstr.select(F.col("__ls").alias("__lkey"), "__ls")
     if r_keyed:
-        rstr = cache_registry.track(rstr.withColumn("__key", _set_key("__rs")))
         rreps = rstr.dropDuplicates(["__key"]).select(F.col("__key").alias("__rkey"), "__rs")
     else:
         rreps = rstr.select(F.col("__rs").alias("__rkey"), "__rs")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 import polars_sim_spark as pss
 from polars_sim_spark import cache as cache_registry
 from polars_sim_spark.operators import dedup
+from polars_sim_spark.operators.join_sim import similarity_mapping
 
 
 def _persistent_rdd_count(spark) -> int:
@@ -43,6 +44,30 @@ def test_join_sim_caches_released_by_unpersist_all(spark, sf_small):
 
     # Results stay valid after release — lineage recomputes.
     assert out.count() == n
+
+
+def test_join_sim_distinct_path_caches_one_keyed_frame_per_side(spark):
+    # Both sides collapse (strings differing only in digits share a
+    # trigram set), so both take the keyed path: each side's distinct
+    # strings are cached once, already carrying their token-set keys.
+    cache_registry.unpersist_all(blocking=True)
+    left = spark.createDataFrame(
+        [(i, f"acme {i}") for i in range(4)] + [(9, "globex 1")], "lid long, s string"
+    )
+    right = spark.createDataFrame(
+        [(i, f"acme-{i}") for i in range(3)] + [(7, "initech 2")], "rid long, s string"
+    )
+    similarity_mapping(left, right, left_on="s", right_on="s", left_id="lid", right_id="rid")
+    assert len(cache_registry._TRACKED) == 2
+    cache_registry.unpersist_all(blocking=True)
+
+    # A self-join's right side is the same plan as its left: one cache.
+    similarity_mapping(
+        left.select(F.col("lid").alias("l"), "s"), left.select(F.col("lid").alias("r"), "s"),
+        left_on="s", right_on="s", left_id="l", right_id="r",
+    )
+    assert len(cache_registry._TRACKED) == 1
+    cache_registry.unpersist_all(blocking=True)
 
 
 def test_lsh_dedup_pairs_caches_released(spark, sf_small):

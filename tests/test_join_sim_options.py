@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from polars_sim_spark import join_sim
+from polars_sim_spark.operators.join_sim import similarity_mapping
 
 
 @pytest.fixture(scope="module")
@@ -171,3 +172,53 @@ def test_threading_dimension_compat(spark, part):
     sa = sorted((r["l_id"], r["sim"]) for r in a.select("l_id", "sim").collect())
     sb = sorted((r["l_id"], r["sim"]) for r in b.select("l_id", "sim").collect())
     assert [x[0] for x in sa] == [x[0] for x in sb]
+
+
+# A side COLLAPSES when several of its strings share a trigram set: they
+# differ only in digits/punctuation, which the [a-z]{3} vocabulary drops.
+# Every string of a UNIQUE side has its own trigram set.
+_COLLAPSING = {
+    "l": ["acme 1", "acme-2", "acme.3", "globex 10", "globex#11", "initech 5",
+          "initech", "umbrella co", "hooli 9", None, "ab"],
+    "r": ["acme 7", "acme_8", "globex 4", "globex:5", "initech labs 1",
+          "initech labs 2", "umbrella", "hooli inc", "hooli"],
+}
+_UNIQUE = {
+    "l": ["acme corp", "globex inc", "initech llc", "umbrella corp", "hooli",
+          "acme", None],
+    "r": ["acme co", "globex", "initech", "umbrella co", "hooli xyz", "acmes",
+          "globe"],
+}
+
+
+def _side(spark, side, collapses):
+    names = (_COLLAPSING if collapses else _UNIQUE)[side]
+    return spark.createDataFrame(
+        list(enumerate(names)), f"{side}id long, {side}name string"
+    )
+
+
+def _keyed_sides(mapping) -> int:
+    """Sides the distinct path grouped by token-set key (one
+    ``Deduplicate [__key]`` each in the analyzed plan)."""
+    return mapping._jdf.queryExecution().analyzed().toString().count("Deduplicate [__key")
+
+
+@pytest.mark.parametrize("l_collapses", [False, True], ids=["l_unique", "l_collapses"])
+@pytest.mark.parametrize("r_collapses", [False, True], ids=["r_unique", "r_collapses"])
+def test_distinct_keys_exact_for_every_keying_branch(spark, l_collapses, r_collapses):
+    """``dedup_keys=True`` keys each side by token set only when its
+    strings collapse; every (left keyed, right keyed) combination must
+    return exactly the per-row mapping of ``dedup_keys=False``."""
+    left, right = _side(spark, "l", l_collapses), _side(spark, "r", r_collapses)
+    for normalization in ("l2", "count"):
+        for strategy in ("broadcast", "shuffle"):
+            kw = dict(
+                left_on="lname", right_on="rname", left_id="lid", right_id="rid",
+                top_n=2, normalization=normalization, strategy=strategy,
+            )
+            fast = similarity_mapping(left, right, dedup_keys=True, **kw)
+            assert _keyed_sides(fast) == l_collapses + r_collapses
+            got = sorted(tuple(r) for r in fast.collect())
+            want = sorted(tuple(r) for r in similarity_mapping(left, right, dedup_keys=False, **kw).collect())
+            assert got and got == want, (normalization, strategy)
